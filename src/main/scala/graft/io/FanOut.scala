@@ -1,5 +1,7 @@
 package graft.io
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
@@ -41,11 +43,14 @@ object FanOut {
     val maxSplit = math.max(1L,
       spark.sessionState.conf.filesMaxPartitionBytes)
     val hconf = spark.sparkContext.hadoopConfiguration
-    val totalBytes = files.map { f =>
-      val p = new Path(f)
-      try p.getFileSystem(hconf).getFileStatus(p).getLen
-      catch { case _: Throwable => 0L }
-    }.sum
+    // an unreadable status leaves the scan as planned: guessing 0 bytes
+    // would turn an I/O fault into a fan-out decision
+    val totalBytes =
+      try files.map { f =>
+        val p = new Path(f)
+        p.getFileSystem(hconf).getFileStatus(p).getLen
+      }.sum
+      catch { case NonFatal(_) => return df }
     val splits = math.max(files.length.toLong,
       (totalBytes + maxSplit - 1) / maxSplit)
     if (splits >= cores) df else df.repartition(cores)

@@ -327,13 +327,6 @@ object Dedup {
     when(union > 0, inter / union).otherwise(lit(0.0))
   }
 
-  /** n-gram Jaccard similarity between candidate document pairs (the
-    * verification kernel of fuzzy dedup; candidates come from LSH or any
-    * bucketing join). */
-  def ngramJaccardPairs(pairs: DataFrame, textA: Column, textB: Column,
-      n: Int): Column =
-    jaccard(TextAnalysis.shingles(textA, n), TextAnalysis.shingles(textB, n))
-
   /** SimHash (Charikar '02) with `bits` bit positions votes from MD5 nibbles
     * of each token: bit_j = majority over tokens of (nibble_j >= 8).
     * Cross-engine-stable (MD5 hex). HOF formulation over a precomputed

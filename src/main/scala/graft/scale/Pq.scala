@@ -95,28 +95,32 @@ object Pq {
     new java.util.WeakHashMap[DataFrame,
       Array[(Int, Long, IndexedSeq[Double])]]())
 
-  private def cbRows(cb: DataFrame): Array[(Int, Long, IndexedSeq[Double])] =
-    cbMemo.synchronized {
-      val hit = cbMemo.get(cb)
-      if (hit != null) hit
-      else {
-        val rows = cb
-          .groupBy("subspace", "label").agg(map_from_arrays(
-            collect_list(col("pos")), collect_list(col("centroid"))).as("c"))
-          .collect()
-          .map { r =>
-            val m = r.getMap[Int, Double](2)
-            val sub = r.getAs[Number]("subspace").intValue()
-            val label = r.getAs[Number]("label").longValue()
-            require((1 to m.size).forall(m.contains),
-              s"codebook dims for subspace $sub label $label are not " +
-                s"contiguous 1..${m.size}")
-            (sub, label, (1 to m.size).map(m(_)): IndexedSeq[Double])
-          }
-        cbMemo.put(cb, rows)
-        rows
+  private def cbRows(cb: DataFrame): Array[(Int, Long, IndexedSeq[Double])] = {
+    val hit = cbMemo.get(cb)
+    if (hit != null) hit
+    else {
+      // the collect runs OUTSIDE the memo lock: a Spark job must not
+      // block every other codebook's lookup. Two threads racing on one
+      // frame both collect the same rows; the first put wins.
+      val rows = cb
+        .groupBy("subspace", "label").agg(map_from_arrays(
+          collect_list(col("pos")), collect_list(col("centroid"))).as("c"))
+        .collect()
+        .map { r =>
+          val m = r.getMap[Int, Double](2)
+          val sub = r.getAs[Number]("subspace").intValue()
+          val label = r.getAs[Number]("label").longValue()
+          require((1 to m.size).forall(m.contains),
+            s"codebook dims for subspace $sub label $label are not " +
+              s"contiguous 1..${m.size}")
+          (sub, label, (1 to m.size).map(m(_)): IndexedSeq[Double])
+        }
+      cbMemo.synchronized {
+        val won = cbMemo.get(cb)
+        if (won != null) won else { cbMemo.put(cb, rows); rows }
       }
     }
+  }
 
   /** Collected codebook as a broadcast-able plan literal:
     * map(subspace -> array of (label, centroid-array) structs). */

@@ -41,7 +41,7 @@ object StreamSync {
       childrenFor: Option[DataFrame => Seq[graft.sync.ChildSync]] = None)
       : graft.sync.SyncResult = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.{col, row_number, sum, when}
+    import org.apache.spark.sql.functions.{col, count, row_number, when}
     val order = versionCol match {
       case Some(v) => Seq(col(v).desc, col("doc_hash").desc)
       case None => Seq(col("doc_hash").desc)
@@ -69,8 +69,8 @@ object StreamSync {
       import IncrementalSync.{ChangeNew, ChangeUpdated, ChangeUnchanged,
         ChangeDeleted}
       val mObs = org.apache.spark.sql.Observation()
-      def cnt(t: String) =
-        sum(when(col("change_type") === t, 1L).otherwise(0L))
+      // count, not sum: a sum over an empty batch is NULL, a count is 0
+      def cnt(t: String) = count(when(col("change_type") === t, 1L))
       val observed = classified.observe(mObs,
         cnt(ChangeNew).as("n_new"), cnt(ChangeUpdated).as("n_upd"),
         cnt(ChangeUnchanged).as("n_unch"))

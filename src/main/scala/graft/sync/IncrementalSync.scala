@@ -775,7 +775,7 @@ object IncrementalSync {
     * after the swap would leave a window where rewritten files carry
     * columns the stamp hides from every stored-schema read. The stamp is
     * monotone (always the superset), so re-execution is idempotent. */
-  private def stampSchema(fs: FileSystem, path: String,
+  private[graft] def stampSchema(fs: FileSystem, path: String,
       schema: org.apache.spark.sql.types.StructType): Unit = {
     val data = org.apache.spark.sql.types.StructType(
       schema.fields.filterNot(_.name == "__bucket"))

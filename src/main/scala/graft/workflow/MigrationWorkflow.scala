@@ -89,10 +89,18 @@ object MigrationWorkflow {
     // differently-pruned projections of the same source, so they run
     // concurrently: Spark's scheduler interleaves their stages and fills
     // the cores a single sequential job would leave idle.
+    // Each table is stamped with its schema (`_graft_schema`, the stamp
+    // sync layouts carry), so IncrementalSync.readTarget — validation and
+    // the first bucketed sync — reads it pinned instead of running a
+    // footer-merging schema job.
     val tables = Decomposer.decompose(docs, model)
+    val fs = new Path(cfg.outDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     graft.io.Concurrency.mapBounded(tables.toSeq) { case (name, df) =>
       graft.io.Label(spark.sparkContext, s"migrate:write $name") {
-        df.write.mode("overwrite").parquet(s"${cfg.outDir}/$name.parquet")
+        val path = s"${cfg.outDir}/$name.parquet"
+        df.write.mode("overwrite").parquet(path)
+        IncrementalSync.stampSchema(fs, path, df.schema)
       }
     }: Unit
     // [4/4] validation (:272) — the per-table row counts as ONE union job
@@ -101,9 +109,11 @@ object MigrationWorkflow {
     // reconciliation reuses the just-counted main table: only the source
     // side needs its own count job (guide §1.2 — don't re-scan for a
     // number already in hand; semantics identical to countReconciliation).
+    // The re-reads carry the schema their write used: a schema-less
+    // parquet read starts a Spark job just to infer it from the footers.
     val counts = graft.io.Label(spark.sparkContext, "migrate:counts") {
-      tables.keys.toSeq.sorted.map { name =>
-        spark.read.parquet(s"${cfg.outDir}/$name.parquet")
+      tables.toSeq.sortBy(_._1).map { case (name, df) =>
+        spark.read.schema(df.schema).parquet(s"${cfg.outDir}/$name.parquet")
           .agg(count(lit(1)).as("row_count"))
           .select(lit(name).as("table_name"), col("row_count"))
       }.reduce(_ unionByName _).collect()
@@ -195,7 +205,9 @@ object MigrationWorkflow {
     * MasterWorkflow.ps1:335-366). Child tables present on disk are
     * cross-checked for referential integrity (Validator.fkIntegrity), so
     * a stale child table — the failure a main-only sync used to leave
-    * silently — fails the status roll-up. */
+    * silently — fails the status roll-up. Tables written by
+    * [[fullMigration]] or a sync carry a schema stamp, so their reads
+    * start no schema-inference job. */
   def validationOnly(spark: SparkSession, docs: DataFrame,
       cfg: MigrationConfig, compareFields: Seq[String]): DataFrame = {
     // schema-safe read (stored-schema pin / footer merge — a synced layout

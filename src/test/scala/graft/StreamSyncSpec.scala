@@ -29,6 +29,20 @@ class StreamSyncSpec extends SparkSpec {
     assert(r2.updated == 0 && r2.unchanged == 2 && r2.newDocs == 0)
   }
 
+  test("an empty first micro-batch yields zero tallies, not a null " +
+      "observed metric; the next batch applies normally") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_se").toString
+    val target = s"$dir/t.parquet"
+    val state = s"$dir/state.parquet"
+    val empty = Seq.empty[(String, String)].toDF("_id", "name")
+    val r0 = StreamSync.applyBatch(spark, empty, target, state)
+    assert(r0 == graft.sync.SyncResult(0L, 0L, 0L, 0L, 0L), r0)
+    val r1 = StreamSync.applyBatch(spark,
+      Seq(("1", "a"), ("2", "b")).toDF("_id", "name"), target, state)
+    assert(r1.newDocs == 2 && r1.updated == 0 && r1.unchanged == 0, r1)
+    assert(spark.read.parquet(target).count() == 2)
+  }
+
   test("streamed snapshots merge into the target; state carries forward") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ss").toString
     val src = s"$dir/src"

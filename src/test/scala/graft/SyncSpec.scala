@@ -535,4 +535,43 @@ class SyncSpec extends SparkSpec {
     assert(ta3.filter($"more" === "extra").count() == 1)
     assert(ta3.filter($"more".isNull).count() == 31)
   }
+
+  test("a fullMigration table carries its schema stamp; the first " +
+      "bucketed sync adopts the stamped tables and reads them back " +
+      "unchanged") {
+    import graft.workflow.{MigrationConfig, MigrationWorkflow}
+    val out = java.nio.file.Files.createTempDirectory("graft_stamp").toString
+    val docs = Seq(
+      ("1", "a", Seq(10L, 11L)), ("2", "b", Seq(20L)), ("3", "c", Seq.empty[Long]))
+      .toDF("_id", "name", "vals")
+    val cfg = MigrationConfig("odocs", out, syncBuckets = Some(4))
+    val rep = MigrationWorkflow.fullMigration(spark, docs, cfg)
+    assert(rep.status == "PASSED")
+    val fs = new org.apache.hadoop.fs.Path(out)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.select(to_json(struct(df.columns.sorted.map(col): _*)))
+        .as[String].collect().toSet
+    val tables = Seq("odocs", "odocs_vals")
+    val before = tables.map { t =>
+      val path = s"$out/$t.parquet"
+      val stamp = IncrementalSync.storedSchema(fs, path)
+      val plain = spark.read.parquet(path)
+      assert(stamp.map(_.fieldNames.toSeq).contains(plain.columns.toSeq),
+        s"$t stamp $stamp vs ${plain.schema}")
+      assert(rows(IncrementalSync.readTarget(spark, path)) == rows(plain))
+      t -> rows(plain)
+    }.toMap
+    // first bucketed sync: every doc is new to the empty state, so every
+    // bucket is rewritten and the plain layout converts in place
+    val r = MigrationWorkflow.incrementalMigration(spark, docs, cfg)
+    assert(r.toOption.exists(_.newDocs == 3), r)
+    tables.foreach { t =>
+      val path = s"$out/$t.parquet"
+      assert(new java.io.File(path).listFiles()
+        .exists(_.getName.startsWith("__bucket=")), s"$t not adopted")
+      assert(rows(IncrementalSync.readTarget(spark, path).drop("__bucket")) ==
+        before(t), t)
+    }
+  }
 }
