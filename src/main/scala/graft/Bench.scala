@@ -148,7 +148,8 @@ object Bench {
     // driver keeps the LAST 2000 stdout chars, so size the query map to
     // 2000 minus the line's fixed scaffolding (which grows with the failure
     // list) minus a safety margin
-    val scaffolding = 170 + fails.length + fullPath.length + sfDir.length
+    val scaffolding = 170 + fails.length + fullPath.length + sfDir.length +
+      s""","load_pre":$loadPre,"load_post":$loadPost""".length
     val budget = math.max(0, 2000 - scaffolding - 120)
     val kept = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     var used = 0
@@ -161,7 +162,7 @@ object Bench {
     // JSON line — the driver parses the last stdout line (build.sbt also
     // suppresses sbt's "[success]" banner for the same reason).
     try spark.stop() catch { case _: Throwable => () }
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"n_reported":${compact.size},"queries":${toJson(compact)},"queries_full":"$fullPath","failed":$fails,"sf":"$sfDir"}""")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"n_reported":${compact.size},"load_pre":$loadPre,"load_post":$loadPost,"queries":${toJson(compact)},"queries_full":"$fullPath","failed":$fails,"sf":"$sfDir"}""")
     System.out.flush()
   }
 }

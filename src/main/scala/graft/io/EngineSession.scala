@@ -1,5 +1,7 @@
 package graft.io
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** The engine's canonical SparkSession recipe — one place for the conf the
@@ -84,11 +86,11 @@ object EngineSession {
         ".*Failed to update accumulator.*", null, false,
         Filter.Result.DENY, Filter.Result.NEUTRAL))
       ctx.updateLoggers()
-    } catch { case _: Throwable =>
+    } catch { case NonFatal(_) =>
       try org.apache.logging.log4j.core.config.Configurator.setLevel(
         "org.apache.spark.scheduler.DAGScheduler",
         org.apache.logging.log4j.Level.ERROR)
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     spark
   }

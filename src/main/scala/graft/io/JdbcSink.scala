@@ -1,6 +1,7 @@
 package graft.io
 
 import java.util.Properties
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.DataFrame
 
@@ -66,5 +67,5 @@ object JdbcSink {
     try {
       spark.read.jdbc(url, probeTable, props).head()
       true
-    } catch { case _: Throwable => false }
+    } catch { case NonFatal(_) => false }
 }

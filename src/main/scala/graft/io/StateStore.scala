@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -149,20 +149,22 @@ object StateStore {
     else {
       val pins = fs.listStatus(p).toSeq.flatMap { s =>
         s.getPath.getName match {
-          case PinFile(_) =>
-            val in = fs.open(s.getPath)
-            val txt = try {
-              val bos = new java.io.ByteArrayOutputStream()
-              org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 4096, false)
-              new String(bos.toByteArray,
-                java.nio.charset.StandardCharsets.UTF_8)
-            } finally in.close()
-            txt.trim.toIntOption
+          case PinFile(_) => readText(fs, s.getPath).trim.toIntOption
           case _ => None
         }
       }
       pins.minOption
     }
+  }
+
+  /** A small metadata file (pin, intent, manifest) as UTF-8 text. */
+  private[graft] def readText(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try {
+      val bos = new java.io.ByteArrayOutputStream()
+      org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 4096, false)
+      new String(bos.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
+    } finally in.close()
   }
 
   /** A specific committed version. */

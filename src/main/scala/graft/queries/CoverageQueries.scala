@@ -30,17 +30,36 @@ object CoverageQueries {
   private def docsSubset(s: SparkSession, d: String): DataFrame =
     Tables.orderDocsWhere(s, d, k => k % 10 === 0)
 
+  /** Multiset diff of clone tables in ONE job. Each input is (frame,
+    * clone tag, surface tag); full rows hash to signatures per (surface,
+    * clone), pivot to per-clone counts, and fold per surface to `n_<c>`
+    * (rows of clone c) and, for every clone after the first, `d_<c>` =
+    * Σ|cnt_first − cnt_c| — the two-way exceptAll count. A surface with no
+    * rows in any clone reads as zeros, not a missing key. */
+  private[graft] def cloneDiffs(tagged: Seq[(DataFrame, String, String)],
+      clones: Seq[String]): Map[String, Map[String, Long]] = {
+    val aggs = clones.tail.map(c =>
+        sum(abs(col(clones.head) - col(c))).as(s"d_$c")) ++
+      clones.map(c => sum(col(c)).as(s"n_$c"))
+    val rows = tagged.map { case (df, tag, surface) =>
+        df.select(
+          md5(to_json(struct(df.columns.sorted.map(col): _*))).as("h"),
+          lit(tag).as("t"), lit(surface).as("srf"))
+      }.reduce(_ unionByName _)
+      .groupBy("srf", "h").pivot("t", clones).count().na.fill(0L)
+      .groupBy("srf").agg(aggs.head, aggs.tail: _*)
+      .collect().map(r => r.getString(0) -> r).toMap
+    val keys = clones.tail.map(c => s"d_$c") ++ clones.map(c => s"n_$c")
+    tagged.map(_._3).distinct.map { surface =>
+      surface -> keys.map(k =>
+        k -> rows.get(surface).fold(0L)(_.getAs[Long](k))).toMap
+    }.toMap
+  }
+
   private def readText(s: SparkSession, path: String): String = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](4096)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      new String(out.toByteArray, "UTF-8")
-    } finally in.close()
+    StateStore.readText(
+      p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
   }
 
   val queries: Map[String, QF] = Map(
@@ -448,16 +467,19 @@ object CoverageQueries {
       // feed batch 1: the update; feed batch 2: an insert + a delete
       val feedDir = s"$out/feed"
       val cp = s"$out/cp"
+      def drainFeed(): Unit =
+        graft.streaming.CommittedBatches.drain(s, feedDir, cp, None) {
+          (b, _) => graft.streaming.StreamSync.applyFeedBatch(b.sparkSession,
+            b, s"$out/t_a", s"$out/s_a", nB)
+        }
       upd.withColumn("_op", lit("upsert"))
         .coalesce(1).write.mode("append").parquet(feedDir)
-      graft.streaming.StreamSync.runFeedAvailableNow(s, feedDir,
-        s"$out/t_a", s"$out/s_a", cp, nB)
+      drainFeed()
       newDoc.withColumn("_op", lit("upsert"))
         .unionByName(docs.filter(col("_id") === maxId)
           .withColumn("_op", lit("delete")))
         .coalesce(1).write.mode("append").parquet(feedDir)
-      graft.streaming.StreamSync.runFeedAvailableNow(s, feedDir,
-        s"$out/t_a", s"$out/s_a", cp, nB)
+      drainFeed()
       // batch-feed twin: the same two feed batches, applied directly
       graft.sync.IncrementalSync.runFromChangeFeed(s, upd, noDeletes,
         s"$out/t_b", s"$out/s_b", nB)
@@ -483,10 +505,6 @@ object CoverageQueries {
       // plus a third job for the point assertions (8 exceptAll actions
       // before that); the three point assertions on the streamed clone
       // now RIDE the same job as observed metrics on its scan branch
-      def sig(df: DataFrame, tag: String, surface: String): DataFrame =
-        df.select(
-          md5(to_json(struct(df.columns.sorted.map(col): _*))).as("h"),
-          lit(tag).as("t"), lit(surface).as("srf"))
       val ptObs = org.apache.spark.sql.Observation()
       val tA = tbl("a").observe(ptObs,
         sum(when(col("_id") === maxId, 1L).otherwise(0L)).as("del_gone"),
@@ -495,35 +513,21 @@ object CoverageQueries {
         sum(when(col("_id") === minId &&
           col("o_orderpriority") === "9-FEED", 1L).otherwise(0L))
           .as("upd_live"))
-      val diffs = sig(tA, "a", "t")
-        .unionByName(sig(tbl("b"), "b", "t"))
-        .unionByName(sig(tbl("c"), "c", "t"))
-        .unionByName(sig(st("a"), "a", "s"))
-        .unionByName(sig(st("b"), "b", "s"))
-        .unionByName(sig(st("c"), "c", "s"))
-        .groupBy("srf", "h").pivot("t", Seq("a", "b", "c")).count()
-        .na.fill(0L)
-        .groupBy("srf").agg(
-          sum(abs(col("a") - col("b"))).as("ab"),
-          sum(abs(col("a") - col("c"))).as("ac"),
-          sum(col("a")).as("na"), sum(col("b")).as("nb"),
-          sum(col("c")).as("nc"))
-        .collect().map(r => r.getString(0) -> r).toMap
+      val diffs = cloneDiffs(Seq((tA, "a", "t"), (tbl("b"), "b", "t"),
+        (tbl("c"), "c", "t"), (st("a"), "a", "s"), (st("b"), "b", "s"),
+        (st("c"), "c", "s")), Seq("a", "b", "c"))
       val (t3, s3) = (diffs("t"), diffs("s"))
-      def obsL(k: String): Long = ptObs.get(k) match {
-        case l: java.lang.Long => l.longValue
-        case x => throw new IllegalStateException(s"unexpected metric: $x")
-      }
+      def obsL(k: String) = graft.streaming.CommittedBatches.observed(ptObs, k)
       Seq(
-        ("a_rows", t3.getLong(3)),
-        ("ab_diff", t3.getLong(1)),
-        ("ac_diff", t3.getLong(2)),
-        ("b_rows", t3.getLong(4)),
-        ("c_rows", t3.getLong(5)),
+        ("a_rows", t3("n_a")),
+        ("ab_diff", t3("d_b")),
+        ("ac_diff", t3("d_c")),
+        ("b_rows", t3("n_b")),
+        ("c_rows", t3("n_c")),
         ("del_gone", obsL("del_gone")),
         ("new_present", obsL("new_present")),
-        ("state_ab_diff", s3.getLong(1)),
-        ("state_ac_diff", s3.getLong(2)),
+        ("state_ab_diff", s3("d_b")),
+        ("state_ac_diff", s3("d_c")),
         ("upd_live", obsL("upd_live")))
         .toDF("metric", "value").orderBy("metric")
     }),
@@ -701,30 +705,19 @@ object CoverageQueries {
       val (sa, sb) =
         (read(s"$out/a_state.parquet"), read(s"$out/b_state.parquet"))
       // both multiset diffs AND the target row count in ONE job (the
-      // two-way exceptAll form paid five count actions): hash full rows
-      // to signatures per (surface, clone), pivot, and sum |a−b| — the
-      // symmetric-difference identity the sync gates already rely on
-      def sig(df: DataFrame, tag: String, surface: String): DataFrame =
-        df.select(
-          md5(to_json(struct(df.columns.sorted.map(col): _*))).as("h"),
-          lit(tag).as("t"), lit(surface).as("srf"))
-      val diffs = sig(ta, "a", "t").unionByName(sig(tb, "b", "t"))
-        .unionByName(sig(sa, "a", "s")).unionByName(sig(sb, "b", "s"))
-        .groupBy("srf", "h").pivot("t", Seq("a", "b")).count().na.fill(0L)
-        .groupBy("srf").agg(
-          sum(abs(col("a") - col("b"))).as("diff"),
-          sum(col("b")).as("nb"))
-        .collect().map(r => r.getString(0) -> r).toMap
+      // two-way exceptAll form paid five count actions)
+      val diffs = cloneDiffs(Seq((ta, "a", "t"), (tb, "b", "t"),
+        (sa, "a", "s"), (sb, "b", "s")), Seq("a", "b"))
       Seq(
-        ("diff_rows", diffs("t").getLong(1)),
-        ("diff_state_rows", diffs("s").getLong(1)),
+        ("diff_rows", diffs("t")("d_b")),
+        ("diff_state_rows", diffs("s")("d_b")),
         ("feed_deleted", rB.deleted),
         ("feed_new", rB.newDocs),
         ("feed_updated", rB.updated),
         ("snap_deleted", rA.deleted),
         ("snap_unchanged", rA.unchanged),
         ("snap_updated", rA.updated),
-        ("target_rows", diffs("t").getLong(2)))
+        ("target_rows", diffs("t")("n_b")))
         .toDF("metric", "value").orderBy("metric")
     }),
 

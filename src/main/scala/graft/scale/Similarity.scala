@@ -652,8 +652,10 @@ object Similarity {
     // entry (measured in-bench: +3x on later large-plan ANN queries)
     val report = (Seq(bf) ++ ivf ++ rp ++ ham).reduce(_ unionByName _)
     val spark = corpus.sparkSession
-    val rows = report.collect().toSeq
-    caches.foreach(_.unpersist(false))
+    // released on the failure path too: a throwing collect must not leave
+    // the frontier's frames registered in the CacheManager
+    val rows = try report.collect().toSeq
+      finally caches.foreach(_.unpersist(false))
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
       report.schema)
   }
@@ -709,8 +711,8 @@ object Similarity {
     val report = (Seq(row("bfF", 0L, truth, bfCand)) ++ ivfF)
       .reduce(_ unionByName _)
     val spark = corpus.sparkSession
-    val rows = report.collect().toSeq
-    caches.foreach(_.unpersist(false))
+    val rows = try report.collect().toSeq
+      finally caches.foreach(_.unpersist(false))
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
       report.schema)
   }

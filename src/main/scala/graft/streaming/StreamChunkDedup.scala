@@ -1,10 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{count, lit}
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.StructType
 
 import graft.scale.Dedup
 
@@ -27,7 +23,7 @@ import graft.scale.Dedup
   * short-circuits); readers list only committed directories. The store is
   * distinct-chunk-sized per batch — SMALLER than the corpus exactly on the
   * boilerplate-heavy streams this operator targets — and read fan-in is
-  * bounded by [[compact]] ([[StoreCompaction]]): committed per-batch maps
+  * bounded by [[compact]] ([[CommittedBatches]]): committed per-batch maps
   * fold into one pre-merged `base=<gen>` store between batches. */
 object StreamChunkDedup {
 
@@ -36,39 +32,20 @@ object StreamChunkDedup {
 
   private val MarkerPrefix = "chunk_batch"
 
-  private def marker(root: String, batchId: Long) =
-    new Path(root, s"${MarkerPrefix}_$batchId.done")
-
-  private def fsOf(spark: SparkSession, root: String): FileSystem =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Land one micro-batch's partial chunk map (the foreachBatch body;
     * directly callable for batch pipelines and tests). */
   def applyBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
       idCol: String, textCol: String, storeRoot: String, stateRoot: String,
-      chunkTokens: Int, strideTokens: Int): BatchResult = {
-    val fs = fsOf(spark, stateRoot)
-    // marker OR compaction manifest: folded batches lose their marker
-    if (StoreCompaction.isCommitted(fs, stateRoot, MarkerPrefix, batchId))
-      return BatchResult(batchId, 0, 0, replaySkipped = true)
-    // the batch frame runs twice (count + map write); foreachBatch re-reads
-    // the source per run, and both must agree — cache for the batch
-    batch.cache()
-    try {
-      val received = batch.count()
-      val nObs = org.apache.spark.sql.Observation()
-      Dedup.chunkDedupMap(batch, idCol, textCol, chunkTokens, strideTokens)
-        .observe(nObs, count(lit(1)).as("n"))
-        .write.mode("overwrite")
-        .parquet(s"$storeRoot/chunks/batch=$batchId")
-      val n = nObs.get("n") match {
-        case l: java.lang.Long => l.longValue
-        case x => throw new IllegalStateException(s"unexpected count: $x")
+      chunkTokens: Int, strideTokens: Int): BatchResult =
+    CommittedBatches.commit(spark, stateRoot, MarkerPrefix, batchId) {
+      // the batch frame runs twice (count + map write)
+      CommittedBatches.cachedFor(batch) {
+        val received = batch.count()
+        val n = CommittedBatches.writeBatch(Dedup.chunkDedupMap(batch, idCol,
+          textCol, chunkTokens, strideTokens), s"$storeRoot/chunks", batchId)
+        BatchResult(batchId, received, n, replaySkipped = false)
       }
-      fs.create(marker(stateRoot, batchId), true).close()
-      BatchResult(batchId, received, n, replaySkipped = false)
-    } finally batch.unpersist()
-  }
+    }.getOrElse(BatchResult(batchId, 0, 0, replaySkipped = true))
 
   /** Fold every committed per-batch map (plus any prior base) into one
     * PRE-MERGED `base=<gen>` store and retire the folded inputs — run
@@ -77,40 +54,15 @@ object StreamChunkDedup {
     * cost stops growing with batch count ([[currentMap]] output is
     * identical before and after — StreamingChunkDedupSpec). */
   def compact(spark: SparkSession, storeRoot: String,
-      stateRoot: String): StoreCompaction.CompactResult =
-    StoreCompaction.compact(spark, stateRoot, MarkerPrefix,
-      Seq(s"$storeRoot/chunks"), fold = Some(Dedup.mergeChunkMaps))
+      stateRoot: String): CommittedBatches.CompactResult =
+    CommittedBatches.compact(spark, stateRoot, MarkerPrefix,
+      Seq(s"$storeRoot/chunks"), Some(Dedup.mergeChunkMaps))
 
   /** The live embed-once map over every committed batch — equal to
     * batch-at-once [[graft.scale.Dedup.chunkDedupMap]] on the union
     * corpus. One hash aggregate on the fixed-width chunk hash. */
   def currentMap(spark: SparkSession, storeRoot: String,
-      stateRoot: String): DataFrame = {
-    val (baseGen, tail) =
-      StoreCompaction.view(fsOf(spark, stateRoot), stateRoot, MarkerPrefix)
-    val paths = StoreCompaction.readPaths(s"$storeRoot/chunks", baseGen, tail)
-    require(paths.nonEmpty,
-      s"no committed chunk batches under $storeRoot (markers in $stateRoot)")
-    Dedup.mergeChunkMaps(spark.read.parquet(paths: _*))
-  }
-
-  /** Drain a parquet-directory stream of documents through the map
-    * (AvailableNow — the scheduled-poll form). */
-  def runAvailableNow(spark: SparkSession, sourceDir: String, idCol: String,
-      textCol: String, storeRoot: String, stateRoot: String,
-      checkpoint: String, chunkTokens: Int, strideTokens: Int,
-      schema: Option[StructType] = None): Unit =
-    StreamSource.schemaFor(spark, sourceDir, schema).foreach { sch =>
-      val stream = spark.readStream.schema(sch).parquet(sourceDir)
-      val q = stream.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          applyBatch(b.sparkSession, b, id, idCol, textCol, storeRoot,
-            stateRoot, chunkTokens, strideTokens): Unit
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+      stateRoot: String): DataFrame =
+    Dedup.mergeChunkMaps(CommittedBatches.read(spark, stateRoot,
+      MarkerPrefix, s"$storeRoot/chunks", "chunk batches"))
 }

@@ -1,12 +1,7 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.StructType
 
 import graft.io.{Materialize, StateStore}
 import graft.scale.{Dedup, TextAnalysis}
@@ -19,17 +14,13 @@ import graft.scale.{Dedup, TextAnalysis}
   * per-batch cost is the batch's own chains plus bounded joins against
   * stored state ([[Dedup.exactIncremental]] / [[Dedup.minhashIncremental]]).
   *
-  * Effectively-exactly-once under foreachBatch's at-least-once contract,
-  * via two guards written around the work:
-  *  - an INTENT file (written before any mutation) pins the state versions
-  *    the batch reads, so a replay after ANY mid-batch crash — including
-  *    after the state has already advanced — recomputes the identical
-  *    survivor set from the pinned inputs and overwrites the same per-batch
-  *    corpus directory with the same bytes (never double-appends, never
-  *    empties it);
-  *  - a COMMIT marker (written last) short-circuits replays of fully
-  *    committed batches. Requires `keepVersions` ≥ 2 so pinned versions
-  *    survive one re-publish; a pruned pinned version fails loudly.
+  * Effectively-exactly-once on the [[CommittedBatches]] protocol: the
+  * intent pins the fp and sig state versions the batch reads, so a replay
+  * after ANY mid-batch crash — including after the state has already
+  * advanced — recomputes the identical survivor set and overwrites the same
+  * per-batch corpus directory with the same bytes; the marker, written
+  * last, short-circuits replays of committed batches. Requires
+  * `keepVersions` ≥ 2 so pinned versions survive one re-publish.
   *
   * Drop rule: a document drops iff it is an exact duplicate, or a verified
   * near-duplicate (Jaccard ≥ threshold), of ANY document that arrived
@@ -55,54 +46,24 @@ object StreamDedup {
 
   private val MarkerPrefix = "batch"
 
-  private def marker(root: String, batchId: Long) =
-    new Path(root, s"${MarkerPrefix}_$batchId.done")
-  private def intent(root: String, batchId: Long) =
-    new Path(root, s"${MarkerPrefix}_$batchId.intent")
-
   /** The clean corpus over every committed batch: compaction base (if one
     * is committed) + unfolded per-batch directories. Readers must come
     * through here rather than scanning `corpusPath` wholesale — after a
     * [[compact]] the store holds `base=<gen>` next to `batch=<id>`
     * directories, which partition discovery would reject. */
   def currentCorpus(spark: SparkSession, corpusPath: String,
-      stateRoot: String): DataFrame = {
-    val fs = new Path(stateRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (baseGen, tail) = StoreCompaction.view(fs, stateRoot, MarkerPrefix)
-    val paths = StoreCompaction.readPaths(corpusPath, baseGen, tail)
-    require(paths.nonEmpty,
-      s"no committed corpus batches under $corpusPath (markers in $stateRoot)")
-    spark.read.parquet(paths: _*)
-  }
+      stateRoot: String): DataFrame =
+    CommittedBatches.read(spark, stateRoot, MarkerPrefix, corpusPath,
+      "corpus batches")
 
   /** Fold the committed per-batch corpus directories (plus any prior
-    * base) into one `base=<gen>` and retire the folded inputs — the
-    * bounded-fan-in maintenance step ([[StoreCompaction]]; single-writer,
-    * run between batches). The versioned fp/sig state is untouched (it is
-    * already bounded by `keepVersions`); intents of folded batches are
-    * dead and swept here. Corpus reads are identical before and after
-    * (StreamingDedupSpec). */
+    * base) into one `base=<gen>`, retire the folded inputs and sweep their
+    * intents (single-writer, run between batches). The versioned fp/sig
+    * state is already bounded by `keepVersions`. */
   def compact(spark: SparkSession, corpusPath: String,
-      stateRoot: String): StoreCompaction.CompactResult = {
-    val fs = new Path(stateRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val r = StoreCompaction.compact(spark, stateRoot, MarkerPrefix,
-      Seq(corpusPath))
-    if (!r.skipped) {
-      val re = "^batch_(\\d+)\\.intent$".r
-      fs.globStatus(new Path(stateRoot, "batch_*.intent")).toSeq
-        .map(_.getPath).foreach { p =>
-          p.getName match {
-            case re(id)
-              if StoreCompaction.isCommitted(fs, stateRoot, MarkerPrefix,
-                id.toLong) => fs.delete(p, false)
-            case _ => ()
-          }
-        }
-    }
-    r
-  }
+      stateRoot: String): CommittedBatches.CompactResult =
+    CommittedBatches.compact(spark, stateRoot, MarkerPrefix,
+      Seq(corpusPath), None)
 
   /** Dedup one micro-batch (the foreachBatch body; directly callable for
     * batch pipelines and tests). */
@@ -111,139 +72,62 @@ object StreamDedup {
       jaccardThreshold: Double = 0.9, k: Int = 16, bands: Int = 4,
       shingleN: Int = 3, keepVersions: Int = 3): BatchResult = {
     require(keepVersions >= 2, "keepVersions >= 2 (replay needs the pinned version)")
-    val fs = new Path(stateRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // marker OR compaction manifest: folded batches lose their marker
-    if (StoreCompaction.isCommitted(fs, stateRoot, MarkerPrefix, batchId))
-      return BatchResult(batchId, 0, 0, 0, 0, replaySkipped = true)
-    val fpRoot = s"$stateRoot/fp"
-    val sigRoot = s"$stateRoot/sig"
+    CommittedBatches.commit(spark, stateRoot, MarkerPrefix, batchId) {
+      val fpRoot = s"$stateRoot/fp"
+      val sigRoot = s"$stateRoot/sig"
+      val Seq(fpPinned, sigPinned) = CommittedBatches.pinnedState(spark,
+        stateRoot, MarkerPrefix, batchId, Seq(fpRoot, sigRoot))
+      val received = batch.count()
+      // exact pass vs the pinned fingerprint state
+      val fpState = fpPinned.getOrElse(
+        Dedup.exactState(batch.limit(0), idCol, textCol))
+      val (exactSurvRaw, _) =
+        Dedup.exactIncremental(fpState, batch, idCol, textCol)
+      // consumed by the sig chain, the drop join, the corpus write, and
+      // the fp-state rebuild
+      val exactSurv = Materialize(exactSurvRaw)
+      val exactKept = exactSurv.count()
 
-    // pin the input state versions BEFORE mutating anything; a replay finds
-    // the intent and recomputes from the same inputs regardless of how far
-    // the crashed attempt got. The intent itself commits by temp-write +
-    // rename (atomic on HDFS/local), and an unparseable intent is treated
-    // as absent and rewritten — safe, because the intent is written before
-    // any mutation, so a truncated intent implies nothing was mutated; a
-    // MatchError here would otherwise wedge the stream on every replay.
-    val intentPath = intent(stateRoot, batchId)
-    val pinnedVersions: Option[(Int, Int)] =
-      if (!fs.exists(intentPath)) None
-      else {
-        val in = fs.open(intentPath)
-        val txt = try {
-          val bos = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 4096, false)
-          new String(bos.toByteArray, StandardCharsets.UTF_8)
-        } finally in.close()
-        txt.trim.split(",") match {
-          case Array(a, b) =>
-            (a.toIntOption, b.toIntOption) match {
-              case (Some(x), Some(y)) => Some((x, y))
-              case _ => None
-            }
-          case _ => None
-        }
-      }
-    val (vF, vS) = pinnedVersions.getOrElse {
-      val v = (StateStore.versions(spark, fpRoot).lastOption.getOrElse(0),
-        StateStore.versions(spark, sigRoot).lastOption.getOrElse(0))
-      val tmp = new Path(stateRoot, s"batch_$batchId.intent.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(s"${v._1},${v._2}".getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      if (fs.exists(intentPath)) fs.delete(intentPath, false) // corrupt leftover
-      if (!fs.rename(tmp, intentPath))
-        throw new java.io.IOException(s"intent commit failed: $tmp -> $intentPath")
-      v
-    }
-    def pinned(root: String, v: Int, bootstrap: => DataFrame): DataFrame =
-      if (v == 0) bootstrap
-      else {
-        require(StateStore.versions(spark, root).contains(v),
-          s"pinned state version v=$v pruned from $root — raise keepVersions")
-        StateStore.loadVersion(spark, root, v)
-      }
+      // near-dup pass vs the pinned signature state
+      val sigState = sigPinned.getOrElse(
+        Dedup.minhashState(batch.limit(0), idCol, textCol, k, shingleN))
+      val batchSig = Dedup.minhashState(exactSurv, idCol, textCol, k, shingleN)
+      val (pairs, nextSig) = Dedup.minhashIncrementalFromState(sigState,
+        batchSig, k, bands, jaccardThreshold)
+      val batchIds = exactSurv.select(col(idCol))
+      val flagged = pairs
+        .join(batchIds.select(col(idCol).as("id_a"), lit(true).as("a_in")),
+          Seq("id_a"), "left")
+        .join(batchIds.select(col(idCol).as("id_b"), lit(true).as("b_in")),
+          Seq("id_b"), "left")
+      // both-in-batch: the greater id drops; batch-vs-history: the batch
+      // endpoint drops (history outranks the batch regardless of id order)
+      val drops = flagged.select(
+        when(col("a_in").isNotNull && col("b_in").isNotNull,
+          greatest(col("id_a"), col("id_b")))
+          .when(col("a_in").isNotNull, col("id_a"))
+          .otherwise(col("id_b")).as(idCol)).distinct()
+      val kept = exactSurv.join(drops, Seq(idCol), "left_anti")
+      val appended = CommittedBatches.writeBatch(kept, corpusPath, batchId)
 
-    val received = batch.count()
-    // exact pass vs the pinned fingerprint state
-    val fpState = pinned(fpRoot, vF, Dedup.exactState(batch.limit(0), idCol, textCol))
-    val (exactSurvRaw, _) = Dedup.exactIncremental(fpState, batch, idCol, textCol)
-    // consumed by the sig chain, the drop join, the corpus write, and the
-    // fp-state rebuild
-    val exactSurv = Materialize(exactSurvRaw)
-    val exactKept = exactSurv.count()
-
-    // near-dup pass vs the pinned signature state
-    val sigState = pinned(sigRoot, vS,
-      Dedup.minhashState(batch.limit(0), idCol, textCol, k, shingleN))
-    val batchSig = Dedup.minhashState(exactSurv, idCol, textCol, k, shingleN)
-    val (pairs, nextSig) = Dedup.minhashIncrementalFromState(sigState,
-      batchSig, k, bands, jaccardThreshold)
-    val batchIds = exactSurv.select(col(idCol))
-    val flagged = pairs
-      .join(batchIds.select(col(idCol).as("id_a"), lit(true).as("a_in")),
-        Seq("id_a"), "left")
-      .join(batchIds.select(col(idCol).as("id_b"), lit(true).as("b_in")),
-        Seq("id_b"), "left")
-    // both-in-batch: the greater id drops; batch-vs-history: the batch
-    // endpoint drops (history outranks the batch regardless of id order)
-    val drops = flagged.select(
-      when(col("a_in").isNotNull && col("b_in").isNotNull,
-        greatest(col("id_a"), col("id_b")))
-        .when(col("a_in").isNotNull, col("id_a"))
-        .otherwise(col("id_b")).as(idCol)).distinct()
-    val kept = exactSurv.join(drops, Seq(idCol), "left_anti")
-
-    // idempotent corpus append: one directory per batch, overwritten
-    // whole; the appended count rides the write as an observed metric
-    // (previously a re-read + count job per batch)
-    val appObs = org.apache.spark.sql.Observation()
-    kept.observe(appObs, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$corpusPath/batch=$batchId")
-    val appended = appObs.get("n") match {
-      case l: java.lang.Long => l.longValue
-      case x => throw new IllegalStateException(s"unexpected count: $x")
-    }
-
-    // publish advanced state. nextFp is rebuilt from the MATERIALIZED
-    // survivors (fingerprints are one digest per row) instead of the
-    // unmaterialized exactIncremental plan, which would re-run the
-    // anti-join + first-occurrence window per publish. nextSig keeps every
-    // batch signature — including near-dup-dropped docs' — so later
-    // members of the same neighborhood drop regardless of batch grouping.
-    StateStore.saveVersion(spark,
-      fpState.unionByName(exactSurv.select(
-        TextAnalysis.fingerprint(col(textCol)).as("fp"),
-        col(idCol).cast("long").as("keep_id"))),
-      fpRoot, keepVersions)
-    StateStore.saveVersion(spark, nextSig, sigRoot, keepVersions)
-    fs.create(marker(stateRoot, batchId), true).close()
-    // this batch's checkpointed frames are dead once the marker commits —
-    // a long-running stream must not accumulate one per batch
-    Materialize.release(batchSig)
-    Materialize.release(exactSurv)
-    BatchResult(batchId, received, received - exactKept,
-      exactKept - appended, appended, replaySkipped = false)
+      // publish advanced state. nextFp is rebuilt from the MATERIALIZED
+      // survivors (fingerprints are one digest per row) instead of the
+      // unmaterialized exactIncremental plan, which would re-run the
+      // anti-join + first-occurrence window per publish. nextSig keeps
+      // every batch signature — including near-dup-dropped docs' — so later
+      // members of the same neighborhood drop regardless of batch grouping.
+      StateStore.saveVersion(spark,
+        fpState.unionByName(exactSurv.select(
+          TextAnalysis.fingerprint(col(textCol)).as("fp"),
+          col(idCol).cast("long").as("keep_id"))),
+        fpRoot, keepVersions)
+      StateStore.saveVersion(spark, nextSig, sigRoot, keepVersions)
+      // this batch's checkpointed frames are dead once its state is
+      // published — a long-running stream must not accumulate one per batch
+      Materialize.release(batchSig)
+      Materialize.release(exactSurv)
+      BatchResult(batchId, received, received - exactKept,
+        exactKept - appended, appended, replaySkipped = false)
+    }.getOrElse(BatchResult(batchId, 0, 0, 0, 0, replaySkipped = true))
   }
-
-  /** Drain a parquet-directory stream of document files through the dedup
-    * (AvailableNow — the scheduled-poll form). */
-  def runAvailableNow(spark: SparkSession, sourceDir: String, idCol: String,
-      textCol: String, corpusPath: String, stateRoot: String,
-      checkpoint: String, jaccardThreshold: Double = 0.9,
-      schema: Option[StructType] = None): Unit =
-    StreamSource.schemaFor(spark, sourceDir, schema).foreach { sch =>
-      val stream = spark.readStream.schema(sch).parquet(sourceDir)
-      val q = stream.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          applyBatch(b.sparkSession, b, id, idCol, textCol, corpusPath,
-            stateRoot, jaccardThreshold): Unit
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
 }

@@ -1,10 +1,7 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.StructType
 
 import graft.io.StateStore
 import graft.scale.Pq
@@ -22,8 +19,8 @@ import graft.scale.Pq
   * error log: a rising err/n across batches is the retrain trigger, read
   * WITHOUT touching the code table.
   *
-  * Idempotent under foreachBatch's at-least-once contract, by the same
-  * write-shape as [[StreamDedup]]: each batch owns one `batch=<id>`
+  * Idempotent under foreachBatch's at-least-once contract on the
+  * [[CommittedBatches]] protocol: each batch owns one `batch=<id>`
   * directory (overwritten whole on replay — never double-appended) and a
   * COMMIT marker short-circuits replays of fully committed batches. The
   * codebook state is replay-safe by construction: training is
@@ -34,9 +31,6 @@ object StreamIndex {
   case class BatchResult(batchId: Long, received: Long, encoded: Long,
       bootstrapped: Boolean, replaySkipped: Boolean,
       retrained: Boolean = false, cbVersion: Int = 0)
-
-  private def marker(root: String, batchId: Long) =
-    new Path(root, s"batch_$batchId.done")
 
   /** Attach the codebook's TRAINING-TIME per-subspace quantization error
     * (count + int64 nano SSE on the batch it was trained on) to the
@@ -100,95 +94,66 @@ object StreamIndex {
       idCol: String, vecCol: String, codesPath: String, stateRoot: String,
       m: Int = 4, k: Int = 4, iters: Int = 2,
       keepVersions: Int = 3, retrainFactorPct: Long = 0L): BatchResult = {
-    val fs = new Path(stateRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker(stateRoot, batchId)))
-      return BatchResult(batchId, 0, 0, bootstrapped = false,
-        replaySkipped = true)
     val cbRoot = s"$stateRoot/codebook"
-    // one micro-batch feeds up to six scans (count, training dims + two
-    // Lloyd's rounds, drift check, encode, error log) — cache it for the
-    // batch's lifetime
-    val cached = batch.cache()
-    val received = cached.count()
-
     // armed retraining makes every codebook version permanently live (code
     // segments reference theirs by cb_version) — never prune one
     val cbKeep = if (retrainFactorPct > 0) Int.MaxValue else keepVersions
+    CommittedBatches.commit(spark, stateRoot, "batch", batchId) {
+      // one micro-batch feeds up to six scans (count, training dims + two
+      // Lloyd's rounds, drift check, encode, error log)
+      CommittedBatches.cachedFor(batch) {
+        val received = batch.count()
 
-    def trainAndPublish(): (DataFrame, Int) = {
-      // cache the k·D-row codebook: its 2-round Lloyd's lineage would
-      // otherwise re-execute for each of the three consumers below (the
-      // baseline's literal collect, the baseline join side, the state
-      // write)
-      val trainedCb = Pq.codebook(cached, idCol, vecCol, m, k, iters).cache()
-      val trained = withBaseline(trainedCb, cached, idCol, vecCol)
-      val v = StateStore.saveVersion(spark, trained, cbRoot, cbKeep)
-      trainedCb.unpersist()
-      (StateStore.loadVersion(spark, cbRoot, v), v)
-    }
-
-    // frozen codebook: latest published version, or train-and-publish on
-    // the bootstrap batch (deterministic, so a replay republishes the
-    // identical frame and the overwrite is byte-stable)
-    val (cb0, v0, bootstrapped) =
-      StateStore.versions(spark, cbRoot).lastOption match {
-        case Some(v) =>
-          (StateStore.loadVersion(spark, cbRoot, v), v, false)
-        case None =>
-          val (t, v) = trainAndPublish()
-          (t, v, true)
-      }
-    // drift check (replay-safe: the decision is a deterministic function
-    // of the batch and the loaded version, and a replayed trigger batch
-    // re-publishes the identical retrained codebook). Old codebook
-    // versions without a stored baseline stay frozen — no false trigger.
-    val retrain = !bootstrapped && retrainFactorPct > 0 &&
-      cb0.columns.contains("base_n") &&
-      driftTriggered(cb0, cached, idCol, vecCol, retrainFactorPct)
-    val (cb, version) = if (retrain) trainAndPublish() else (cb0, v0)
-    val cbCached = cb.cache()
-
-    // idempotent appends: one directory per batch, overwritten whole;
-    // each segment records the codebook version that encoded it
-    val encObs = org.apache.spark.sql.Observation()
-    Pq.encode(cached, cbCached, idCol, vecCol)
-      .withColumn("cb_version", lit(version))
-      .observe(encObs, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$codesPath/batch=$batchId")
-    Pq.quantizationError(cached, cbCached, idCol, vecCol)
-      .withColumn("batch_id", lit(batchId))
-      .withColumn("cb_version", lit(version))
-      .withColumn("retrained", lit(retrain))
-      .write.mode("overwrite").parquet(s"$stateRoot/err/batch=$batchId")
-    val encoded = encObs.get("n") match {
-      case l: java.lang.Long => l.longValue
-      case x => throw new IllegalStateException(s"unexpected count: $x")
-    }
-
-    fs.create(marker(stateRoot, batchId), true).close()
-    cbCached.unpersist()
-    cached.unpersist()
-    BatchResult(batchId, received, encoded, bootstrapped,
-      replaySkipped = false, retrained = retrain, cbVersion = version)
-  }
-
-  /** Drain a parquet-directory stream of vectors through the index
-    * (AvailableNow — the scheduled-poll form). */
-  def runAvailableNow(spark: SparkSession, sourceDir: String, idCol: String,
-      vecCol: String, codesPath: String, stateRoot: String,
-      checkpoint: String, schema: Option[StructType] = None): Unit =
-    StreamSource.schemaFor(spark, sourceDir, schema).foreach { sch =>
-      val stream = spark.readStream.schema(sch).parquet(sourceDir)
-      val q = stream.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          applyBatch(b.sparkSession, b, id, idCol, vecCol, codesPath,
-            stateRoot): Unit
+        def trainAndPublish(): (DataFrame, Int) = {
+          // cache the k·D-row codebook: its 2-round Lloyd's lineage would
+          // otherwise re-execute for each of the three consumers below
+          // (the baseline's literal collect, the baseline join side, the
+          // state write)
+          val trainedCb = Pq.codebook(batch, idCol, vecCol, m, k, iters).cache()
+          val trained = withBaseline(trainedCb, batch, idCol, vecCol)
+          val v = StateStore.saveVersion(spark, trained, cbRoot, cbKeep)
+          trainedCb.unpersist()
+          (StateStore.loadVersion(spark, cbRoot, v), v)
         }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+
+        // frozen codebook: latest published version, or train-and-publish
+        // on the bootstrap batch (deterministic, so a replay republishes
+        // the identical frame and the overwrite is byte-stable)
+        val (cb0, v0, bootstrapped) =
+          StateStore.versions(spark, cbRoot).lastOption match {
+            case Some(v) =>
+              (StateStore.loadVersion(spark, cbRoot, v), v, false)
+            case None =>
+              val (t, v) = trainAndPublish()
+              (t, v, true)
+          }
+        // drift check (replay-safe: the decision is a deterministic
+        // function of the batch and the loaded version, and a replayed
+        // trigger batch re-publishes the identical retrained codebook). Old
+        // codebook versions without a stored baseline stay frozen — no
+        // false trigger.
+        val retrain = !bootstrapped && retrainFactorPct > 0 &&
+          cb0.columns.contains("base_n") &&
+          driftTriggered(cb0, batch, idCol, vecCol, retrainFactorPct)
+        val (cb, version) = if (retrain) trainAndPublish() else (cb0, v0)
+        val cbCached = cb.cache()
+        try {
+          // one directory per batch, overwritten whole; each segment
+          // records the codebook version that encoded it
+          val encoded = CommittedBatches.writeBatch(
+            Pq.encode(batch, cbCached, idCol, vecCol)
+              .withColumn("cb_version", lit(version)), codesPath, batchId)
+          CommittedBatches.writeBatch(
+            Pq.quantizationError(batch, cbCached, idCol, vecCol)
+              .withColumn("batch_id", lit(batchId))
+              .withColumn("cb_version", lit(version))
+              .withColumn("retrained", lit(retrain)),
+            s"$stateRoot/err", batchId)
+          BatchResult(batchId, received, encoded, bootstrapped,
+            replaySkipped = false, retrained = retrain, cbVersion = version)
+        } finally cbCached.unpersist()
+      }
+    }.getOrElse(BatchResult(batchId, 0, 0, bootstrapped = false,
+      replaySkipped = true))
+  }
 }

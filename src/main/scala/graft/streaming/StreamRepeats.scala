@@ -1,10 +1,7 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.StructType
 
 import graft.scale.Dedup
 
@@ -28,7 +25,7 @@ import graft.scale.Dedup
   * per window occurrence) — the same class as [[StreamDedup]]'s corpus
   * store, not a bounded sketch; at 100 TB it is a partitioned table the
   * repeated-set aggregation shuffles by the fixed-width fingerprint key.
-  * Read fan-in is kept bounded by [[compact]] ([[StoreCompaction]]): the
+  * Read fan-in is kept bounded by [[compact]] ([[CommittedBatches]]): the
   * committed per-batch directories fold into one `base=<gen>` store, the
   * manifest keeps replay a no-op after folded markers retire, and readers
   * union base + unfolded tail. */
@@ -39,62 +36,33 @@ object StreamRepeats {
 
   private val MarkerPrefix = "rep_batch"
 
-  private def marker(root: String, batchId: Long) =
-    new Path(root, s"${MarkerPrefix}_$batchId.done")
-
-  private def fsOf(spark: SparkSession, root: String): FileSystem =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Land one micro-batch's window store (the foreachBatch body; directly
     * callable for batch pipelines and tests). */
   def applyBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
       idCol: String, textCol: String, storeRoot: String, stateRoot: String,
-      windowTokens: Int): BatchResult = {
-    val fs = fsOf(spark, stateRoot)
-    // marker OR compaction manifest: folded batches lose their marker
-    if (StoreCompaction.isCommitted(fs, stateRoot, MarkerPrefix, batchId))
-      return BatchResult(batchId, 0, 0, replaySkipped = true)
-    // the batch frame is executed three times (count, window write, roster
-    // write); in foreachBatch each run re-reads the source, and the wins
-    // store and docs roster must agree even if the source is not
-    // deterministic between executions — cache for the batch's lifetime
-    batch.cache()
-    try {
-      val received = batch.count()
-      val winObs = org.apache.spark.sql.Observation()
-      Dedup.windowFingerprints(batch, idCol, textCol, windowTokens)
-        .select("doc_id", "fp")
-        .observe(winObs, count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(s"$storeRoot/wins/batch=$batchId")
-      batch.select(col(idCol).as("doc_id"))
-        .write.mode("overwrite").parquet(s"$storeRoot/docs/batch=$batchId")
-      val windows = winObs.get("n") match {
-        case l: java.lang.Long => l.longValue
-        case x => throw new IllegalStateException(s"unexpected count: $x")
+      windowTokens: Int): BatchResult =
+    CommittedBatches.commit(spark, stateRoot, MarkerPrefix, batchId) {
+      // three actions (count, window write, roster write) must agree on
+      // the batch even if its source is not deterministic
+      CommittedBatches.cachedFor(batch) {
+        val received = batch.count()
+        val windows = CommittedBatches.writeBatch(
+          Dedup.windowFingerprints(batch, idCol, textCol, windowTokens)
+            .select("doc_id", "fp"), s"$storeRoot/wins", batchId)
+        CommittedBatches.writeBatch(batch.select(col(idCol).as("doc_id")),
+          s"$storeRoot/docs", batchId)
+        BatchResult(batchId, received, windows, replaySkipped = false)
       }
-      fs.create(marker(stateRoot, batchId), true).close()
-      BatchResult(batchId, received, windows, replaySkipped = false)
-    } finally batch.unpersist()
-  }
+    }.getOrElse(BatchResult(batchId, 0, 0, replaySkipped = true))
 
   /** Fold every committed batch directory (wins + roster, plus any prior
     * base) into one `base=<gen>` per sub-store and retire the folded
     * inputs — run between batches (single-writer), e.g. every K batches.
     * Detector output is identical before and after (StreamRepeatsSpec). */
   def compact(spark: SparkSession, storeRoot: String,
-      stateRoot: String): StoreCompaction.CompactResult =
-    StoreCompaction.compact(spark, stateRoot, MarkerPrefix,
-      Seq(s"$storeRoot/wins", s"$storeRoot/docs"))
-
-  private def committed(spark: SparkSession, storeRoot: String,
-      stateRoot: String, sub: String): DataFrame = {
-    val (baseGen, tail) =
-      StoreCompaction.view(fsOf(spark, stateRoot), stateRoot, MarkerPrefix)
-    val paths = StoreCompaction.readPaths(s"$storeRoot/$sub", baseGen, tail)
-    require(paths.nonEmpty,
-      s"no committed window batches under $storeRoot (markers in $stateRoot)")
-    spark.read.parquet(paths: _*)
-  }
+      stateRoot: String): CommittedBatches.CompactResult =
+    CommittedBatches.compact(spark, stateRoot, MarkerPrefix,
+      Seq(s"$storeRoot/wins", s"$storeRoot/docs"), None)
 
   /** The live detector: per document, total and repeated window counts
     * over every committed batch — equal to batch-at-once
@@ -105,8 +73,8 @@ object StreamRepeats {
   def currentRepeats(spark: SparkSession, storeRoot: String,
       stateRoot: String, minDocs: Int): DataFrame = {
     require(minDocs >= 2, "minDocs must be >= 2 (1 would flag everything)")
-    val wins = committed(spark, storeRoot, stateRoot, "wins")
-    val docs = committed(spark, storeRoot, stateRoot, "docs")
+    val Seq(wins, docs) = Seq("wins", "docs").map(sub => CommittedBatches
+      .read(spark, stateRoot, MarkerPrefix, s"$storeRoot/$sub", "window batches"))
     val repeated = wins.groupBy("fp")
       .agg(count_distinct(col("doc_id")).as("nd"))
       .filter(col("nd") >= minDocs).select("fp")
@@ -119,24 +87,4 @@ object StreamRepeats {
         coalesce(col("n_windows"), lit(0L)).as("n_windows"),
         coalesce(col("n_repeated"), lit(0L)).as("n_repeated"))
   }
-
-  /** Drain a parquet-directory stream of documents through the detector
-    * (AvailableNow — the scheduled-poll form). */
-  def runAvailableNow(spark: SparkSession, sourceDir: String, idCol: String,
-      textCol: String, storeRoot: String, stateRoot: String,
-      checkpoint: String, windowTokens: Int,
-      schema: Option[StructType] = None): Unit =
-    StreamSource.schemaFor(spark, sourceDir, schema).foreach { sch =>
-      val stream = spark.readStream.schema(sch).parquet(sourceDir)
-      val q = stream.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          applyBatch(b.sparkSession, b, id, idCol, textCol, storeRoot,
-            stateRoot, windowTokens): Unit
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
 }

@@ -1,10 +1,7 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.StructType
 
 import graft.scale.Temporal
 
@@ -23,7 +20,7 @@ import graft.scale.Temporal
   * Contracts shared with the streaming family: replay of a committed
   * batch is a no-op (whole-directory overwrite + marker written last); a
   * crash window is invisible to readers until replay heals it; committed
-  * directories fold via [[compact]] ([[StoreCompaction]]) to bound read
+  * directories fold via [[compact]] ([[CommittedBatches]]) to bound read
   * fan-in. 100 TB shape: the store is change-log-sized (≪ corpus);
   * [[currentDimension]] is two per-key window passes over one key
   * shuffle of the log. A further scale lever (not needed at log scale):
@@ -36,53 +33,31 @@ object StreamScd2 {
 
   private val MarkerPrefix = "scd2_batch"
 
-  private def marker(root: String, batchId: Long) =
-    new Path(root, s"${MarkerPrefix}_$batchId.done")
-
-  private def fsOf(spark: SparkSession, root: String): FileSystem =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Land one micro-batch of change rows (the foreachBatch body; directly
     * callable for batch pipelines and tests). Columns are canonicalized
     * to `(key, ts, tie, attr)` in the store so readers never depend on
     * source naming. */
   def applyBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
       keyCol: String, tsCol: String, tieCol: String, attrCol: String,
-      storeRoot: String, stateRoot: String): BatchResult = {
-    val fs = fsOf(spark, stateRoot)
-    if (StoreCompaction.isCommitted(fs, stateRoot, MarkerPrefix, batchId))
-      return BatchResult(batchId, 0, replaySkipped = true)
-    // the batch frame is executed twice (count, store write); cache so a
-    // non-deterministic source cannot disagree between the two runs
-    batch.cache()
-    try {
-      val received = batch.count()
-      batch.select(col(keyCol).as("key"), col(tsCol).as("ts"),
-        col(tieCol).as("tie"), col(attrCol).as("attr"))
-        .write.mode("overwrite")
-        .parquet(s"$storeRoot/changes/batch=$batchId")
-      fs.create(marker(stateRoot, batchId), true).close()
-      BatchResult(batchId, received, replaySkipped = false)
-    } finally batch.unpersist()
-  }
+      storeRoot: String, stateRoot: String): BatchResult =
+    CommittedBatches.commit(spark, stateRoot, MarkerPrefix, batchId) {
+      // the count and the store write must agree on the batch
+      CommittedBatches.cachedFor(batch) {
+        val received = batch.count()
+        CommittedBatches.writeBatch(batch.select(col(keyCol).as("key"),
+          col(tsCol).as("ts"), col(tieCol).as("tie"), col(attrCol).as("attr")),
+          s"$storeRoot/changes", batchId)
+        BatchResult(batchId, received, replaySkipped = false)
+      }
+    }.getOrElse(BatchResult(batchId, 0, replaySkipped = true))
 
   /** Fold committed batch directories into one `base=<gen>` store and
     * retire the folded inputs (between batches, single-writer). The
     * dimension is identical before and after (StreamScd2Spec). */
   def compact(spark: SparkSession, storeRoot: String,
-      stateRoot: String): StoreCompaction.CompactResult =
-    StoreCompaction.compact(spark, stateRoot, MarkerPrefix,
-      Seq(s"$storeRoot/changes"))
-
-  private def committedChanges(spark: SparkSession, storeRoot: String,
-      stateRoot: String): DataFrame = {
-    val (baseGen, tail) =
-      StoreCompaction.view(fsOf(spark, stateRoot), stateRoot, MarkerPrefix)
-    val paths = StoreCompaction.readPaths(s"$storeRoot/changes", baseGen, tail)
-    require(paths.nonEmpty,
-      s"no committed change batches under $storeRoot (markers in $stateRoot)")
-    spark.read.parquet(paths: _*)
-  }
+      stateRoot: String): CommittedBatches.CompactResult =
+    CommittedBatches.compact(spark, stateRoot, MarkerPrefix,
+      Seq(s"$storeRoot/changes"), None)
 
   /** The live dimension: [[Temporal.scd2]] over every committed batch —
     * equal to batch-at-once versioning of the union change stream, under
@@ -91,29 +66,6 @@ object StreamScd2 {
     * is_current)`. */
   def currentDimension(spark: SparkSession, storeRoot: String,
       stateRoot: String): DataFrame =
-    Temporal.scd2(committedChanges(spark, storeRoot, stateRoot),
-      "key", "ts", "tie", "attr")
-
-  /** Drain a parquet-directory change stream into the dimension store
-    * (AvailableNow — the scheduled-poll form). Pass `schema` explicitly
-    * for a deployed scheduled poll; without it the schema is inferred
-    * from the directory's current files, and a poll firing before the
-    * producer's first write is a no-op drain (never a crash). */
-  def runAvailableNow(spark: SparkSession, sourceDir: String,
-      keyCol: String, tsCol: String, tieCol: String, attrCol: String,
-      storeRoot: String, stateRoot: String, checkpoint: String,
-      schema: Option[StructType] = None): Unit =
-    StreamSource.schemaFor(spark, sourceDir, schema).foreach { sch =>
-      val stream = spark.readStream.schema(sch).parquet(sourceDir)
-      val q = stream.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          applyBatch(b.sparkSession, b, id, keyCol, tsCol, tieCol, attrCol,
-            storeRoot, stateRoot): Unit
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    Temporal.scd2(CommittedBatches.read(spark, stateRoot, MarkerPrefix,
+      s"$storeRoot/changes", "change batches"), "key", "ts", "tie", "attr")
 }

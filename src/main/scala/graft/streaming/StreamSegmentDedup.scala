@@ -1,12 +1,6 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{count, lit}
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.StructType
 
 import graft.io.StateStore
 import graft.scale.Dedup
@@ -22,29 +16,21 @@ import graft.scale.Dedup
   * cost is the batch's own segment explode plus an anti-join bounded by
   * the batch's segments and a stream of the state partitions.
   *
-  * Effectively-exactly-once via the [[StreamDedup]] guards — the state
-  * VERSION a batch reads is pinned by an INTENT file written before any
-  * mutation, so a replay after ANY mid-batch crash (including after the
-  * state already advanced) recomputes the identical cleaned set from the
-  * pinned input and overwrites the same directory with the same bytes; a
-  * COMMIT marker (written last) short-circuits replays of fully committed
-  * batches. Requires `keepVersions` ≥ 2 (a pinned version pruned before
-  * replay fails loudly). ASSUMES MONOTONE IDS with arrival order (the
-  * [[StreamDedup]] contract): history outranks the batch, so the union of
-  * committed cleaned batches equals batch-at-once [[Dedup.segmentDedup]]
-  * over everything that arrived. Read fan-in of the cleaned corpus is
-  * bounded by [[compact]]. */
+  * Effectively-exactly-once on the [[CommittedBatches]] protocol: the
+  * intent pins the fp state VERSION a batch reads, so a replay after ANY
+  * mid-batch crash (including after the state already advanced) recomputes
+  * the identical cleaned set and overwrites the same directory with the
+  * same bytes. Requires `keepVersions` ≥ 2. ASSUMES MONOTONE IDS with
+  * arrival order (the [[StreamDedup]] contract): history outranks the
+  * batch, so the union of committed cleaned batches equals batch-at-once
+  * [[Dedup.segmentDedup]] over everything that arrived. Read fan-in of the
+  * cleaned corpus is bounded by [[compact]]. */
 object StreamSegmentDedup {
 
   case class BatchResult(batchId: Long, received: Long, kept: Long,
       replaySkipped: Boolean)
 
   private val MarkerPrefix = "seg_batch"
-
-  private def marker(root: String, batchId: Long) =
-    new Path(root, s"${MarkerPrefix}_$batchId.done")
-  private def intent(root: String, batchId: Long) =
-    new Path(root, s"${MarkerPrefix}_$batchId.intent")
 
   /** Dedup one micro-batch (the foreachBatch body; directly callable for
     * batch pipelines and tests). */
@@ -53,122 +39,38 @@ object StreamSegmentDedup {
       segTokens: Int, keepVersions: Int = 3): BatchResult = {
     require(keepVersions >= 2,
       "keepVersions >= 2 (replay needs the pinned version)")
-    val fs = new Path(stateRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (StoreCompaction.isCommitted(fs, stateRoot, MarkerPrefix, batchId))
-      return BatchResult(batchId, 0, 0, replaySkipped = true)
-    val fpRoot = s"$stateRoot/fp"
-    // pin the input state version BEFORE mutating anything (see
-    // StreamDedup: intent commits by temp-write + atomic rename; an
-    // unparseable intent implies nothing was mutated and is rewritten)
-    val intentPath = intent(stateRoot, batchId)
-    val pinned: Option[Int] =
-      if (!fs.exists(intentPath)) None
-      else {
-        val in = fs.open(intentPath)
-        val txt = try {
-          val bos = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 4096, false)
-          new String(bos.toByteArray, StandardCharsets.UTF_8)
-        } finally in.close()
-        txt.trim.toIntOption
+    CommittedBatches.commit(spark, stateRoot, MarkerPrefix, batchId) {
+      val fpRoot = s"$stateRoot/fp"
+      val Seq(pinned) = CommittedBatches.pinnedState(spark, stateRoot,
+        MarkerPrefix, batchId, Seq(fpRoot))
+      val state = pinned.getOrElse(
+        Dedup.segmentState(batch.limit(0), idCol, textCol, segTokens))
+      // the batch frame feeds the count and (twice, via the incremental's
+      // internal materialize) the segment explode
+      CommittedBatches.cachedFor(batch) {
+        val received = batch.count()
+        val (cleaned, nextState) = Dedup.segmentDedupIncremental(
+          state, batch, idCol, textCol, segTokens)
+        val kept = CommittedBatches.writeBatch(cleaned, corpusPath, batchId)
+        StateStore.saveVersion(spark, nextState, fpRoot, keepVersions)
+        BatchResult(batchId, received, kept, replaySkipped = false)
       }
-    val v = pinned.getOrElse {
-      val cur = StateStore.versions(spark, fpRoot).lastOption.getOrElse(0)
-      val tmp = new Path(stateRoot, s"${MarkerPrefix}_$batchId.intent.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(cur.toString.getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      if (fs.exists(intentPath)) fs.delete(intentPath, false)
-      if (!fs.rename(tmp, intentPath))
-        throw new java.io.IOException(
-          s"intent commit failed: $tmp -> $intentPath")
-      cur
-    }
-    val state =
-      if (v == 0) Dedup.segmentState(batch.limit(0), idCol, textCol, segTokens)
-      else {
-        require(StateStore.versions(spark, fpRoot).contains(v),
-          s"pinned state version v=$v pruned from $fpRoot — raise keepVersions")
-        StateStore.loadVersion(spark, fpRoot, v)
-      }
-    // the batch frame feeds the count and (twice, via the incremental's
-    // internal materialize) the segment explode; cache for the batch
-    batch.cache()
-    try {
-      val received = batch.count()
-      val (cleaned, nextState) = Dedup.segmentDedupIncremental(
-        state, batch, idCol, textCol, segTokens)
-      // idempotent corpus append: one directory per batch, overwritten
-      // whole; a replay from the pinned version rewrites the same bytes
-      val keptObs = org.apache.spark.sql.Observation()
-      cleaned.observe(keptObs, count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(s"$corpusPath/batch=$batchId")
-      val kept = keptObs.get("n") match {
-        case l: java.lang.Long => l.longValue
-        case x => throw new IllegalStateException(s"unexpected count: $x")
-      }
-      StateStore.saveVersion(spark, nextState, fpRoot, keepVersions)
-      fs.create(marker(stateRoot, batchId), true).close()
-      BatchResult(batchId, received, kept, replaySkipped = false)
-    } finally batch.unpersist()
+    }.getOrElse(BatchResult(batchId, 0, 0, replaySkipped = true))
   }
 
   /** The cleaned corpus over every committed batch — equal to batch-at-once
     * [[Dedup.segmentDedup]] on everything that arrived (monotone ids). */
   def currentCorpus(spark: SparkSession, corpusPath: String,
-      stateRoot: String): DataFrame = {
-    val fs = new Path(stateRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (baseGen, tail) = StoreCompaction.view(fs, stateRoot, MarkerPrefix)
-    val paths = StoreCompaction.readPaths(corpusPath, baseGen, tail)
-    require(paths.nonEmpty,
-      s"no committed cleaned batches under $corpusPath (markers in $stateRoot)")
-    spark.read.parquet(paths: _*)
-  }
+      stateRoot: String): DataFrame =
+    CommittedBatches.read(spark, stateRoot, MarkerPrefix, corpusPath,
+      "cleaned batches")
 
   /** Fold committed cleaned-batch directories into one `base=<gen>` and
-    * sweep dead intents — the bounded-fan-in maintenance step
+    * sweep their intents — the bounded-fan-in maintenance step
     * (single-writer, between batches). The versioned fp state is already
     * bounded by `keepVersions`. */
   def compact(spark: SparkSession, corpusPath: String,
-      stateRoot: String): StoreCompaction.CompactResult = {
-    val fs = new Path(stateRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val r = StoreCompaction.compact(spark, stateRoot, MarkerPrefix,
-      Seq(corpusPath))
-    if (!r.skipped) {
-      val re = s"^${MarkerPrefix}_(\\d+)\\.intent$$".r
-      fs.globStatus(new Path(stateRoot, s"${MarkerPrefix}_*.intent")).toSeq
-        .map(_.getPath).foreach { p =>
-          p.getName match {
-            case re(id)
-              if StoreCompaction.isCommitted(fs, stateRoot, MarkerPrefix,
-                id.toLong) => fs.delete(p, false)
-            case _ => ()
-          }
-        }
-    }
-    r
-  }
-
-  /** Drain a parquet-directory stream of documents through the remover
-    * (AvailableNow — the scheduled-poll form). */
-  def runAvailableNow(spark: SparkSession, sourceDir: String, idCol: String,
-      textCol: String, corpusPath: String, stateRoot: String,
-      checkpoint: String, segTokens: Int,
-      schema: Option[StructType] = None): Unit =
-    StreamSource.schemaFor(spark, sourceDir, schema).foreach { sch =>
-      val stream = spark.readStream.schema(sch).parquet(sourceDir)
-      val q = stream.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          applyBatch(b.sparkSession, b, id, idCol, textCol, corpusPath,
-            stateRoot, segTokens): Unit
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+      stateRoot: String): CommittedBatches.CompactResult =
+    CommittedBatches.compact(spark, stateRoot, MarkerPrefix,
+      Seq(corpusPath), None)
 }

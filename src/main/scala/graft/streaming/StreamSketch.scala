@@ -1,10 +1,8 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.StructType
 
 import graft.scale.Sketches
 
@@ -23,60 +21,37 @@ import graft.scale.Sketches
   * layout with Spark's mergeable HLL states as the grid gives streaming
   * DISTINCT counts ([[applyHllBatch]]/[[currentDistinct]]).
   *
-  * Idempotent under foreachBatch's at-least-once contract by the same
-  * write shape as the other streaming operators: a replayed batch
-  * overwrites its own directory whole (never double-appends) and a COMMIT
-  * marker short-circuits replays of fully committed batches. The readers
-  * list ONLY committed batch directories — a crash window leaves at worst
-  * a torn, uncommitted `batch=<id>` dir that no reader ever opens (it is
-  * overwritten whole by the replay). BOTH the markers and the grid
-  * directories are kind-scoped (`<kind>_batch_N.done` under stateRoot,
-  * `$gridRoot/<kind>/batch=N` under gridRoot), so one stateRoot AND one
-  * gridRoot can safely host every grid family: a committed CMS batch can
-  * neither mask an HLL replay of the same batch id nor have its grid
+  * Idempotent under foreachBatch's at-least-once contract on the
+  * [[CommittedBatches]] protocol, like the other streaming operators: a
+  * replayed batch overwrites its own directory whole (never double-appends)
+  * and a COMMIT marker short-circuits replays of fully committed batches.
+  * The readers list ONLY committed batch directories — a crash window
+  * leaves at worst a torn, uncommitted `batch=<id>` dir that no reader
+  * ever opens (it is overwritten whole by the replay). BOTH the markers
+  * and the grid directories are kind-scoped (`<kind>_batch_N.done` under
+  * stateRoot, `$gridRoot/<kind>/batch=N` under gridRoot), so one stateRoot
+  * AND one gridRoot can safely host every grid family: a committed CMS
+  * batch can neither mask an HLL replay of the same batch id nor have its grid
   * overwritten by one. Stores committed under the pre-kind-scope layout
   * (`$gridRoot/batch=N`) stay readable: a committed batch missing its
   * kind-scoped directory falls back to the legacy path (see
-  * [[gridPath]]) instead of failing a reader whose markers suppress the
-  * healing replay. */
+  * [[committedGrids]]) instead of failing a reader whose markers suppress
+  * the healing replay. */
 object StreamSketch {
 
   case class BatchResult(batchId: Long, received: Long, cells: Long,
       replaySkipped: Boolean)
 
-  private def marker(root: String, kind: String, batchId: Long) =
-    new Path(root, s"${kind}_batch_$batchId.done")
-
-  private def fsOf(spark: SparkSession, root: String): FileSystem =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def committedBatches(fs: FileSystem, stateRoot: String,
-      kind: String): Seq[Long] =
-    fs.globStatus(new Path(stateRoot, s"${kind}_batch_*.done"))
-      .toSeq.map(_.getPath.getName
-        .stripPrefix(s"${kind}_batch_").stripSuffix(".done").toLong)
-
-  private def obsN(o: org.apache.spark.sql.Observation): Long =
-    o.get("n") match { case l: java.lang.Long => l.longValue; case x =>
-      throw new IllegalStateException(s"unexpected observed count: $x") }
-
-  /** The shared per-batch commit skeleton: replay short-circuit on the
-    * marker, whole-directory overwrite of this batch's grid, marker
-    * written LAST. `grid` must be bounded (a sketch, never raw rows).
-    * The grid-row count rides the write as an observed metric
-    * (CollectMetrics) — previously a re-read + count job per batch. */
+  /** The shared per-batch commit: replay skip, whole-directory overwrite
+    * of this batch's grid (its row count observed on the write), marker
+    * written LAST. `grid` must be bounded (a sketch, never raw rows). */
   private def commitGrid(spark: SparkSession, grid: => DataFrame,
       received: => Long, batchId: Long, kind: String, gridRoot: String,
-      stateRoot: String): BatchResult = {
-    val fs = fsOf(spark, stateRoot)
-    if (fs.exists(marker(stateRoot, kind, batchId)))
-      return BatchResult(batchId, 0, 0, replaySkipped = true)
-    val cellObs = org.apache.spark.sql.Observation()
-    grid.observe(cellObs, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$gridRoot/$kind/batch=$batchId")
-    fs.create(marker(stateRoot, kind, batchId), true).close()
-    BatchResult(batchId, received, obsN(cellObs), replaySkipped = false)
-  }
+      stateRoot: String): BatchResult =
+    CommittedBatches.commit(spark, stateRoot, s"${kind}_batch", batchId) {
+      val cells = CommittedBatches.writeBatch(grid, s"$gridRoot/$kind", batchId)
+      BatchResult(batchId, received, cells, replaySkipped = false)
+    }.getOrElse(BatchResult(batchId, 0, 0, replaySkipped = true))
 
   /** [[commitGrid]] with the RECEIVED count also riding the grid-write job
     * as an observed metric on the batch side (previously a full extra
@@ -85,48 +60,37 @@ object StreamSketch {
   private def commitGridCounting(spark: SparkSession, batch: DataFrame,
       mkGrid: DataFrame => DataFrame, batchId: Long, kind: String,
       gridRoot: String, stateRoot: String): BatchResult = {
-    val fs = fsOf(spark, stateRoot)
-    if (fs.exists(marker(stateRoot, kind, batchId)))
-      return BatchResult(batchId, 0, 0, replaySkipped = true)
     val recObs = org.apache.spark.sql.Observation()
-    commitGrid(spark,
-      mkGrid(batch.observe(recObs, count(lit(1)).as("n"))),
-      obsN(recObs), batchId, kind, gridRoot, stateRoot)
-  }
-
-  /** Resolve a committed batch's grid directory. Grids moved from the
-    * pre-r8 `$gridRoot/batch=N` layout to the kind-scoped
-    * `$gridRoot/<kind>/batch=N` (so one gridRoot hosts every family) —
-    * a LAYOUT BREAK for stores committed under the old scheme: their
-    * markers survive, so replay short-circuits and would never re-land
-    * the grid at the new path. A committed batch whose kind-scoped dir
-    * is absent therefore falls back to the legacy path (sound because a
-    * legacy store by construction hosted a single kind — that is what
-    * the scoping fixed — and the marker's kind prefix says which); if
-    * neither exists the canonical path is returned so the reader fails
-    * loudly there. New batches always land kind-scoped. */
-  private def gridPath(fs: FileSystem, gridRoot: String, kind: String,
-      batchId: Long): String = {
-    val scoped = s"$gridRoot/$kind/batch=$batchId"
-    if (fs.exists(new Path(scoped))) scoped
-    else {
-      val legacy = s"$gridRoot/batch=$batchId"
-      if (fs.exists(new Path(legacy))) legacy else scoped
-    }
+    commitGrid(spark, mkGrid(batch.observe(recObs, count(lit(1)).as("n"))),
+      CommittedBatches.observed(recObs, "n"), batchId, kind, gridRoot,
+      stateRoot)
   }
 
   /** Read ONLY the committed batch directories (never the crash window's
     * torn leftovers), failing loudly when nothing has committed yet: an
     * empty sketch answers "0" for every probe, which silently reads as
-    * "token never seen". */
+    * "token never seen".
+    *
+    * Grids moved from the pre-r8 `$gridRoot/batch=N` layout to the
+    * kind-scoped `$gridRoot/<kind>/batch=N` (so one gridRoot hosts every
+    * family) — a LAYOUT BREAK for stores committed under the old scheme:
+    * their markers survive, so replay short-circuits and would never
+    * re-land the grid at the new path. A committed batch whose kind-scoped
+    * dir is absent therefore falls back to the legacy path (sound because
+    * a legacy store by construction hosted a single kind — that is what
+    * the scoping fixed — and the marker's kind prefix says which); if
+    * neither exists the canonical path is kept so the reader fails loudly
+    * there. New batches always land kind-scoped. */
   private def committedGrids(spark: SparkSession, gridRoot: String,
       stateRoot: String, kind: String): DataFrame = {
-    val committed = committedBatches(fsOf(spark, stateRoot), stateRoot, kind)
-    require(committed.nonEmpty,
-      s"no committed $kind batch grids under $gridRoot (markers in $stateRoot)")
-    val fs = fsOf(spark, gridRoot)
-    spark.read.parquet(
-      committed.map(id => gridPath(fs, gridRoot, kind, id)): _*)
+    val fs = CommittedBatches.fsOf(spark, gridRoot)
+    def exists(p: String) = fs.exists(new Path(p))
+    spark.read.parquet(CommittedBatches.committedPaths(spark, stateRoot,
+        s"${kind}_batch", s"$gridRoot/$kind", s"$kind batch grids")
+      .map { scoped =>
+        val legacy = s"$gridRoot/${new Path(scoped).getName}"
+        if (!exists(scoped) && exists(legacy)) legacy else scoped
+      }: _*)
   }
 
   /** Fold one micro-batch of (group, token) occurrences into the CMS grid
@@ -284,25 +248,4 @@ object StreamSketch {
     graft.scale.Sampling.topPerGroup(u, "grp", col("h"), k,
       Seq(col("h").asc))
   }
-
-  /** Drain a parquet-directory stream through the sketch (AvailableNow —
-    * the scheduled-poll form; `tokens` maps a raw batch to (group, token)
-    * occurrence rows, e.g. an explode over a tokenizer). */
-  def runAvailableNow(spark: SparkSession, sourceDir: String,
-      tokens: DataFrame => DataFrame, groupCol: String, tokCol: String,
-      gridRoot: String, stateRoot: String, checkpoint: String,
-      depth: Int, width: Int, schema: Option[StructType] = None): Unit =
-    StreamSource.schemaFor(spark, sourceDir, schema).foreach { sch =>
-      val stream = spark.readStream.schema(sch).parquet(sourceDir)
-      val q = stream.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          applyBatch(b.sparkSession, tokens(b), id, groupCol, tokCol,
-            gridRoot, stateRoot, depth, width): Unit
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
 }

@@ -1,8 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.StructType
 
 import graft.io.{Sinks, StateStore}
 import graft.sync.{DocHash, IncrementalSync}
@@ -49,11 +47,7 @@ object StreamSync {
     val w = Window.partitionBy("_id").orderBy(order: _*)
     // the version column orders rows but is NOT part of the content hash —
     // a fresh export stamp must not mark unchanged docs as updated
-    val hashed =
-      if (childrenFor.isDefined)
-        DocHash.fullDocHash(batch, exclude = versionCol.toSet)
-      else DocHash.withDocHash(batch, exclude = versionCol.toSet)
-    val current = hashed
+    val current = DocHash.forSync(batch, childrenFor.isDefined, versionCol.toSet)
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
     val state = StateStore.load(spark, statePath)
@@ -115,11 +109,7 @@ object StreamSync {
         else batch.limit(0)
       Sinks.atomicOverwrite(spark, Sinks.upsert(target, upserts, "_id"), targetPath)
       // the write is done — the observed tallies are available now
-      def obsL(k: String): Long = mObs.get(k) match {
-        case l: java.lang.Long => l.longValue
-        case x => throw new IllegalStateException(
-          s"unexpected observed count: $x")
-      }
+      def obsL(k: String) = CommittedBatches.observed(mObs, k)
       val result = graft.sync.SyncResult(
         obsL("n_new"), obsL("n_upd"), 0L, obsL("n_unch"), 0L)
       // child tables merge AFTER the main write (FK direction: parent
@@ -140,27 +130,6 @@ object StreamSync {
       result.copy(children = childCounts)
     } finally classified.unpersist()
   }
-
-  /** Run the stream until drained (AvailableNow). `sourceDir` is a directory
-    * of parquet snapshot files; new files become micro-batches. */
-  def runAvailableNow(spark: SparkSession, sourceDir: String,
-      targetPath: String, statePath: String, checkpoint: String,
-      schema: Option[StructType] = None,
-      childrenFor: Option[DataFrame => Seq[graft.sync.ChildSync]] = None)
-      : Unit =
-    StreamSource.schemaFor(spark, sourceDir, schema).foreach { sch =>
-      val stream = spark.readStream.schema(sch).parquet(sourceDir)
-      val q = stream.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          applyBatch(batch.sparkSession, batch, targetPath, statePath,
-            childrenFor = childrenFor): Unit
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
 
   /** CDC-shaped micro-batch (round-12 verdict item 5): the batch is a
     * CHANGE FEED, not a snapshot — each row is tagged by `opCol` as
@@ -189,44 +158,13 @@ object StreamSync {
         !col(opCol).isin("upsert", "delete")).limit(1).isEmpty,
       s"applyFeedBatch: '$opCol' carries a tag other than upsert/delete " +
         "(or a NULL tag)")
-    val upserts = batch.filter(col(opCol) === "upsert").drop(opCol)
+    // hashed here in the canon the snapshot paths use (the full document
+    // when child tables sync), so feed and snapshot syncs agree on state
+    val upserts = DocHash.forSync(batch.filter(col(opCol) === "upsert"),
+      childrenFor.isDefined, Set(opCol)).drop(opCol)
     val deletes = batch.filter(col(opCol) === "delete").select("_id")
     val children = childrenFor.map(_(upserts)).getOrElse(Seq.empty)
     IncrementalSync.runFromChangeFeed(spark, upserts, deletes,
       targetPath, statePath, buckets, children = children)
   }
-
-  /** [[applyFeedBatch]] as a drained stream (AvailableNow): `sourceDir`
-    * holds parquet change-feed files (document columns + the `opCol`
-    * tag); new files become micro-batches. The streaming twin of the
-    * reference's polling sync (Sync.ps1:774-809) for sources that emit a
-    * change stream instead of snapshots.
-    *
-    * Replay semantics: with the SAME checkpoint, at-least-once redelivery
-    * is idempotent (an upsert whose hash matches state counts unchanged;
-    * a delete of an unknown id is a no-op). A FRESH checkpoint re-reads
-    * every feed file as ONE batch, which erases the order between
-    * original batches — if that merged batch holds an upsert AND a delete
-    * of the same id, the engine fails LOUDLY (before touching the target)
-    * rather than guessing; a disaster replayer must re-partition the feed
-    * into order-consistent batches. */
-  def runFeedAvailableNow(spark: SparkSession, sourceDir: String,
-      targetPath: String, statePath: String, checkpoint: String,
-      buckets: Int, schema: Option[StructType] = None,
-      opCol: String = "_op",
-      childrenFor: Option[DataFrame => Seq[graft.sync.ChildSync]] = None)
-      : Unit =
-    StreamSource.schemaFor(spark, sourceDir, schema).foreach { sch =>
-      val stream = spark.readStream.schema(sch).parquet(sourceDir)
-      val q = stream.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          applyFeedBatch(batch.sparkSession, batch, targetPath, statePath,
-            buckets, opCol, childrenFor): Unit
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
 }

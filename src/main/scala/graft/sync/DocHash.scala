@@ -47,6 +47,19 @@ object DocHash {
     df.withColumn(hashCol, docHash(flat))
   }
 
+  /** The sync canon rule, one place for every sync entry point: when
+    * child tables sync, the FULL document ([[fullDocHash]]) so subtree-only
+    * edits classify as updated; otherwise the reference's flat canon
+    * ([[withDocHash]]). Every path that writes one sync state must hash the
+    * same way, or the next sync re-reports every touched document as
+    * updated and a repeated nested-only edit classifies unchanged.
+    * `exclude` drops non-content columns (a version stamp, a feed's op
+    * tag). */
+  def forSync(df: DataFrame, childTables: Boolean,
+      exclude: Set[String]): DataFrame =
+    if (childTables) fullDocHash(df, exclude = exclude)
+    else withDocHash(df, exclude = exclude)
+
   /** Q5-FIXED variant: hash the FULL document — nested objects and arrays
     * included via their compact-JSON serialization — so edits inside
     * subtrees are visible to sync. Not state-compatible with the reference's

@@ -177,14 +177,12 @@ object MigrationWorkflow {
       val children =
         if (!cfg.syncChildTables) Seq.empty
         else graft.sync.ChildSync.forSchema(docs, cfg.collection, cfg.outDir)
-      // change detection must SEE subtree edits when child tables sync:
-      // hash the FULL document (DocHash.fullDocHash, the Q5-fixed canon)
-      // and pass it through — IncrementalSync trusts a pre-hashed source.
-      // With child sync off, the reference's flat-only canon is preserved.
-      val flat =
-        if (children.isEmpty) docs.select(flatCols.map(col): _*)
-        else graft.sync.DocHash.fullDocHash(docs, "doc_hash")
-          .select((flatCols :+ "doc_hash").map(col): _*)
+      // change detection must SEE subtree edits when child tables sync
+      // (DocHash.forSync: the full-document canon then, the reference's
+      // flat-only canon otherwise); IncrementalSync trusts a pre-hashed
+      // source
+      val flat = graft.sync.DocHash.forSync(docs, children.nonEmpty, Set.empty)
+        .select((flatCols :+ "doc_hash").map(col): _*)
       val statePath = s"${cfg.outDir}/sync_state_${cfg.collection}.parquet"
       Right(cfg.syncBuckets match {
         // changed-bucket-only sync (SCALE.md's 100 TB write path): only

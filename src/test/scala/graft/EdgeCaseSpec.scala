@@ -154,4 +154,18 @@ class EdgeCaseSpec extends SparkSpec {
       .toDF("event_id", "ts", "user_id", "event_type")
     assert(graft.streaming.EventStream.anomalousDays(noEv).count() == 0)
   }
+
+  test("clone diff: a surface with no rows in any clone reads as zeros, " +
+      "not a missing key; equal clones diff to zero") {
+    import graft.queries.CoverageQueries.cloneDiffs
+    val t = Seq(("1", "a"), ("2", "b")).toDF("_id", "v")
+    val empty = t.limit(0)
+    val d = cloneDiffs(Seq((t, "a", "t"), (t, "b", "t"),
+      (empty, "a", "s"), (empty, "b", "s")), Seq("a", "b"))
+    assert(d("t") == Map("d_b" -> 0L, "n_a" -> 2L, "n_b" -> 2L), d)
+    assert(d("s") == Map("d_b" -> 0L, "n_a" -> 0L, "n_b" -> 0L), d)
+    val moved = cloneDiffs(Seq((t, "a", "t"), (t.limit(1), "b", "t")),
+      Seq("a", "b"))
+    assert(moved("t")("d_b") == 1L, moved)
+  }
 }

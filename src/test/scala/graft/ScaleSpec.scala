@@ -276,6 +276,23 @@ class ScaleSpec extends SparkSpec {
     assert(ivf.forall(r => r._3 <= r._4 && r._5 <= bf._5))
   }
 
+  test("frontier reports release their caches when the report collect " +
+      "fails") {
+    val e = Tables.load(spark, sfDir, "embeddings")
+    // the failing check is evaluated only when the report runs
+    val q = e.filter($"vec_id" < 3).withColumn("embedding",
+      when(assert_true($"vec_id" < 0).isNull, $"embedding"))
+    spark.catalog.clearCache()
+    intercept[Exception](Similarity.filteredFrontier(q, e, "vec_id",
+      "embedding", "label", col("vec_id") % 3 === 0, k = 5, nProbes = Seq(1)))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "filteredFrontier left its caches registered")
+    intercept[Exception](Similarity.annFrontier(q, e, "vec_id", "embedding",
+      "label", k = 10, nProbes = Seq(1), rpBudgets = Seq(15)))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "annFrontier left its caches registered")
+  }
+
   test("RRF fusion: integer scores, absent-list rank = 0, known values; " +
       "duplicate list names rejected") {
     val sparse = Seq((1L, 1), (2L, 2)).toDF("id", "rnk")

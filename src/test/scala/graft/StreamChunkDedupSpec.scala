@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.scale.Dedup
-import graft.streaming.StreamChunkDedup
+import graft.streaming.{CommittedBatches, StreamChunkDedup}
 
 /** Streaming embed-once chunk-dedup map: merge-on-read == batch-at-once,
   * pre-merged compaction base, replay idempotency, AvailableNow drains. */
@@ -77,19 +77,21 @@ class StreamChunkDedupSpec extends SparkSpec {
     val state = tmp("graft_scd_s3")
     val ckpt = tmp("graft_scd_ckpt")
     corpus.filter($"doc_id" < 10).write.mode("overwrite").parquet(src)
-    StreamChunkDedup.runAvailableNow(spark, src, "doc_id", "text", store,
-      state, ckpt, 12, 8)
+    def drain(src: String, store: String, state: String, ckpt: String): Unit =
+      CommittedBatches.drain(spark, src, ckpt, None) { (b, id) =>
+        StreamChunkDedup.applyBatch(b.sparkSession, b, id, "doc_id", "text",
+          store, state, 12, 8)
+      }
+    drain(src, store, state, ckpt)
     assert(asMap(StreamChunkDedup.currentMap(spark, store, state))
       .values.forall(_._1 == 1L))
     corpus.filter($"doc_id" >= 10).write.mode("append").parquet(src)
-    StreamChunkDedup.runAvailableNow(spark, src, "doc_id", "text", store,
-      state, ckpt, 12, 8)
+    drain(src, store, state, ckpt)
     assert(asMap(StreamChunkDedup.currentMap(spark, store, state)) ==
       asMap(Dedup.chunkDedupMap(corpus, "doc_id", "text", 12, 8)))
     // absent source: the poll must no-op (and not create a store)
     val store2 = tmp("graft_scd_w4")
-    StreamChunkDedup.runAvailableNow(spark, s"$src/__nope__", "doc_id",
-      "text", store2, tmp("graft_scd_s4"), tmp("graft_scd_ckpt2"), 12, 8)
+    drain(s"$src/__nope__", store2, tmp("graft_scd_s4"), tmp("graft_scd_ckpt2"))
     assert(!new java.io.File(s"$store2/chunks").exists)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.StreamDedup
+import graft.streaming.{CommittedBatches, StreamDedup}
 
 /** Streaming corpus dedup: per-batch exact + near-dup drops against
   * persisted state, idempotent replay, and the AvailableNow driver. */
@@ -156,8 +156,10 @@ class StreamDedupSpec extends SparkSpec {
       .write.mode("overwrite").parquet(src)
     Seq((3L, d1), (5L, d3)).toDF("doc_id", "text")
       .write.mode("append").parquet(src)
-    StreamDedup.runAvailableNow(spark, src, "doc_id", "text",
-      corpus, state, ckpt, jaccardThreshold = 0.5)
+    CommittedBatches.drain(spark, src, ckpt, None) { (b, id) =>
+      StreamDedup.applyBatch(b.sparkSession, b, id, "doc_id", "text",
+        corpus, state, jaccardThreshold = 0.5)
+    }
     val clean = spark.read.parquet(corpus)
       .select("doc_id").as[Long].collect().toSet
     // 3 is an exact dup of 1 — dropped whether they share a micro-batch or

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.io.StateStore
 import graft.scale.Pq
-import graft.streaming.StreamIndex
+import graft.streaming.{CommittedBatches, StreamIndex}
 
 /** Streaming PQ-index maintenance: bootstrap trains the codebook once,
   * later batches only encode; idempotent replay; error log accumulates. */
@@ -178,8 +178,11 @@ class StreamIndexSpec extends SparkSpec {
     val e = Tables.load(spark, sfDir, "embeddings")
       .select("vec_id", "embedding")
     e.filter(col("vec_id") < 40).write.mode("overwrite").parquet(src)
-    StreamIndex.runAvailableNow(spark, src, "vec_id", "embedding",
-      codes, state, ckpt)
+    def drain(): Unit = CommittedBatches.drain(spark, src, ckpt, None) {
+      (b, id) => StreamIndex.applyBatch(b.sparkSession, b, id, "vec_id",
+        "embedding", codes, state)
+    }
+    drain()
     val n1 = spark.read.parquet(codes).count()
     assert(n1 == 40 * 4)
     assert(StateStore.versions(spark, s"$state/codebook") == Seq(1))
@@ -187,8 +190,7 @@ class StreamIndexSpec extends SparkSpec {
     // already-published codebook (no retrain, no history re-encode)
     e.filter(col("vec_id") >= 40 && col("vec_id") < 70)
       .write.mode("append").parquet(src)
-    StreamIndex.runAvailableNow(spark, src, "vec_id", "embedding",
-      codes, state, ckpt)
+    drain()
     assert(spark.read.parquet(codes).count() == 70 * 4)
     assert(StateStore.versions(spark, s"$state/codebook") == Seq(1))
     assert(spark.read.parquet(codes).select("vec_id").distinct().count() == 70)

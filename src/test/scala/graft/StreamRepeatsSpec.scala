@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.scale.Dedup
-import graft.streaming.StreamRepeats
+import graft.streaming.{CommittedBatches, StreamRepeats}
 
 /** Streaming repeated-window detection: cross-batch repeats, crash-window
   * exclusion, replay idempotency, zero-window roster rows. */
@@ -121,14 +121,16 @@ class StreamRepeatsSpec extends SparkSpec {
     val ckpt = tmp("graft_srp_ckpt")
     corpus.filter(col("doc_id") < 10)
       .write.mode("overwrite").parquet(src)
-    StreamRepeats.runAvailableNow(spark, src, "doc_id", "text", store,
-      state, ckpt, 8)
+    def drain(): Unit = CommittedBatches.drain(spark, src, ckpt, None) {
+      (b, id) => StreamRepeats.applyBatch(b.sparkSession, b, id, "doc_id",
+        "text", store, state, 8)
+    }
+    drain()
     assert(StreamRepeats.currentRepeats(spark, store, state, 2)
       .filter(col("n_repeated") > 0).count() == 0)
     corpus.filter(col("doc_id") >= 10)
       .write.mode("append").parquet(src)
-    StreamRepeats.runAvailableNow(spark, src, "doc_id", "text", store,
-      state, ckpt, 8)
+    drain()
     val live = StreamRepeats.currentRepeats(spark, store, state, 2)
       .as[(Long, Long, Long)].collect().toSet
     val whole = Dedup.crossDocRepeats(corpus, "doc_id", "text", 8, 2)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.scale.Temporal
-import graft.streaming.StreamScd2
+import graft.streaming.{CommittedBatches, StreamScd2}
 
 /** Streaming SCD2 maintenance: out-of-order batches converge to the
   * batch-at-once dimension, crash-window exclusion, replay idempotency,
@@ -97,16 +97,19 @@ class StreamScd2Spec extends SparkSpec {
     val state = tmp("graft_s2_s3")
     val cp = tmp("graft_s2_cp")
     // absent source dir: no-op, no crash, nothing committed
-    StreamScd2.runAvailableNow(spark, s"$src/never_written", "k", "ts",
-      "id", "attr", store, state, s"$cp/a")
+    def drain(dir: String, ckpt: String,
+        schema: Option[org.apache.spark.sql.types.StructType]): Unit =
+      CommittedBatches.drain(spark, dir, ckpt, schema) { (b, id) =>
+        StreamScd2.applyBatch(b.sparkSession, b, id, "k", "ts", "id", "attr",
+          store, state)
+      }
+    drain(s"$src/never_written", s"$cp/a", None)
     // existing-but-empty source dir: same
-    StreamScd2.runAvailableNow(spark, src, "k", "ts", "id", "attr",
-      store, state, s"$cp/b")
+    drain(src, s"$cp/b", None)
     intercept[IllegalArgumentException](dim(store, state)) // still empty
     // the deployed shape: schema passed explicitly, files now present
     changes.write.mode("overwrite").parquet(s"$src/data")
-    StreamScd2.runAvailableNow(spark, s"$src/data", "k", "ts", "id",
-      "attr", store, state, s"$cp/c", schema = Some(changes.schema))
+    drain(s"$src/data", s"$cp/c", Some(changes.schema))
     assert(dim(store, state) == whole)
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.scale.Dedup
-import graft.streaming.StreamSegmentDedup
+import graft.streaming.{CommittedBatches, StreamSegmentDedup}
 
 /** Streaming C4-style segment dedup: cross-batch boilerplate removal,
   * pinned-version crash replay, compaction, AvailableNow drains. */
@@ -91,12 +91,14 @@ class StreamSegmentDedupSpec extends SparkSpec {
     val state = tmp("graft_ssd_s4")
     val ckpt = tmp("graft_ssd_ckpt")
     b0.write.mode("overwrite").parquet(src)
-    StreamSegmentDedup.runAvailableNow(spark, src, "doc_id", "text",
-      corpus, state, ckpt, segTokens = 10)
+    def drain(): Unit = CommittedBatches.drain(spark, src, ckpt, None) {
+      (b, id) => StreamSegmentDedup.applyBatch(b.sparkSession, b, id,
+        "doc_id", "text", corpus, state, segTokens = 10)
+    }
+    drain()
     assert(cleanMap(corpus, state).keySet == Set(1L, 2L))
     b1.write.mode("append").parquet(src)
-    StreamSegmentDedup.runAvailableNow(spark, src, "doc_id", "text",
-      corpus, state, ckpt, segTokens = 10)
+    drain()
     assert(cleanMap(corpus, state) ==
       Dedup.segmentDedup(whole, "doc_id", "text", 10)
         .as[(Long, String)].collect().toMap)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.scale.Sketches
-import graft.streaming.StreamSketch
+import graft.streaming.{CommittedBatches, StreamSketch}
 
 /** Streaming CMS maintenance: per-batch grids, commit-marker idempotency,
   * crash-window exclusion, read-time rollup == batch-at-once grid. */
@@ -84,16 +84,18 @@ class StreamSketchSpec extends SparkSpec {
     val df = occ.toDF("i", "g", "tok")
     def toks(b: org.apache.spark.sql.DataFrame) = b.select("g", "tok")
     df.filter(col("i") < 100).write.mode("overwrite").parquet(src)
-    StreamSketch.runAvailableNow(spark, src, toks, "g", "tok",
-      grid, state, ckpt, depth = 3, width = 32)
+    def drain(): Unit = CommittedBatches.drain(spark, src, ckpt, None) {
+      (b, id) => StreamSketch.applyBatch(b.sparkSession, toks(b), id, "g",
+        "tok", grid, state, depth = 3, width = 32)
+    }
+    drain()
     val after1 = StreamSketch.currentSketch(spark, grid, state)
       .select("grp", "row_j", "bucket", "cnt").as[(String, Int, Long, Long)].collect().toSet
     assert(after1 == Sketches.cms(df.filter(col("i") < 100), "g", "tok", 3, 32)
       .select("grp", "row_j", "bucket", "cnt").as[(String, Int, Long, Long)].collect().toSet)
     // new files arrive; the resumed stream folds ONLY them
     df.filter(col("i") >= 100).write.mode("append").parquet(src)
-    StreamSketch.runAvailableNow(spark, src, toks, "g", "tok",
-      grid, state, ckpt, depth = 3, width = 32)
+    drain()
     val after2 = StreamSketch.currentSketch(spark, grid, state)
       .select("grp", "row_j", "bucket", "cnt").as[(String, Int, Long, Long)].collect().toSet
     assert(after2 == Sketches.cms(df, "g", "tok", 3, 32)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.streaming.StreamSync
+import graft.streaming.{CommittedBatches, StreamSync}
 
 /** §2.10: foreachBatch MERGE sync — snapshots arriving as stream files are
   * applied to the target with the same classify/upsert semantics as the
@@ -48,28 +48,31 @@ class StreamSyncSpec extends SparkSpec {
     val src = s"$dir/src"
     val target = s"$dir/target.parquet"
     val state = s"$dir/state.parquet"
+    def drain(cp: String): Unit = CommittedBatches.drain(spark, src, cp, None) {
+      (b, _) => StreamSync.applyBatch(b.sparkSession, b, target, state)
+    }
     // batch 1: two docs
     Seq(("1", "a", 1L), ("2", "b", 2L)).toDF("_id", "name", "v")
       .coalesce(1).write.mode("append").parquet(src)
-    StreamSync.runAvailableNow(spark, src, target, state, s"$dir/cp1")
+    drain(s"$dir/cp1")
     assert(spark.read.parquet(target).count() == 2)
     // batch 2: update doc 1, add doc 3 — SAME checkpoint, so only the new
     // file forms the next micro-batch
     Seq(("1", "A", 1L), ("3", "c", 3L)).toDF("_id", "name", "v")
       .coalesce(1).write.mode("append").parquet(src)
-    StreamSync.runAvailableNow(spark, src, target, state, s"$dir/cp1")
+    drain(s"$dir/cp1")
     val after = spark.read.parquet(target).orderBy("_id")
       .as[(String, String, Long)].collect().toSeq
     // doc 2 survives (absence from a later snapshot file ≠ delete in-stream)
     assert(after == Seq(("1", "A", 1L), ("2", "b", 2L), ("3", "c", 3L)))
     // re-run with the same checkpoint: no new files → no-op, target unchanged
-    StreamSync.runAvailableNow(spark, src, target, state, s"$dir/cp1")
+    drain(s"$dir/cp1")
     val again = spark.read.parquet(target).orderBy("_id")
       .as[(String, String, Long)].collect().toSeq
     assert(again == after)
     // disaster replay: fresh checkpoint re-reads ALL files in one batch —
     // per-batch id dedupe + idempotent MERGE keep the target correct
-    StreamSync.runAvailableNow(spark, src, target, state, s"$dir/cp2")
+    drain(s"$dir/cp2")
     val replayed = spark.read.parquet(target).orderBy("_id")
       .as[(String, String, Long)].collect().toSet
     assert(replayed.map(_._1) == Set("1", "2", "3"))
@@ -88,16 +91,18 @@ class StreamSyncSpec extends SparkSpec {
       .coalesce(1).write.mode("append").parquet(src)
     val mk: org.apache.spark.sql.DataFrame => Seq[ChildSync] =
       cur => ChildSync.forSchema(cur, "odocs", dir)
-    StreamSync.runAvailableNow(spark, src, target, state, s"$dir/cp",
-      childrenFor = Some(mk))
+    def drain(): Unit = CommittedBatches.drain(spark, src, s"$dir/cp", None) {
+      (b, _) => StreamSync.applyBatch(b.sparkSession, b, target, state,
+        childrenFor = Some(mk))
+    }
+    drain()
     val childPath = s"$dir/odocs_vals.parquet"
     assert(spark.read.parquet(childPath).count() == 3)
     // second file: doc 1's array shrinks (array-only edit), doc 3 arrives
     Seq(("1", "a", Seq(10L)), ("3", "c", Seq(30L, 31L, 32L)))
       .toDF("_id", "name", "vals")
       .coalesce(1).write.mode("append").parquet(src)
-    StreamSync.runAvailableNow(spark, src, target, state, s"$dir/cp",
-      childrenFor = Some(mk))
+    drain()
     val child = spark.read.parquet(childPath)
     assert(child.filter($"odocs__id" === "1").count() == 1) // edit landed
     assert(child.filter($"odocs__id" === "2").count() == 1) // survived
@@ -192,27 +197,27 @@ class StreamSyncSpec extends SparkSpec {
       (1L to 12L).map(i => (i.toString, s"v$i")).toDF("_id", "payload"),
       target, state, nB)
     val feedDir = s"$dir/feed"
+    def drain(cp: String): Unit = CommittedBatches.drain(spark, feedDir, cp,
+        None) { (b, _) =>
+      StreamSync.applyFeedBatch(b.sparkSession, b, target, state, nB)
+    }
     // feed file 1: update doc 3; feed file 2: delete doc 3
     Seq(("3", "CHANGED", "upsert")).toDF("_id", "payload", "_op")
       .coalesce(1).write.mode("append").parquet(feedDir)
-    graft.streaming.StreamSync.runFeedAvailableNow(spark, feedDir,
-      target, state, s"$dir/cp", nB)
+    drain(s"$dir/cp")
     Seq(("3", "CHANGED", "delete")).toDF("_id", "payload", "_op")
       .coalesce(1).write.mode("append").parquet(feedDir)
-    graft.streaming.StreamSync.runFeedAvailableNow(spark, feedDir,
-      target, state, s"$dir/cp", nB)
+    drain(s"$dir/cp")
     assert(spark.read.parquet(target).filter($"_id" === "3").count() == 0)
     // same checkpoint, no new files: no-op
-    graft.streaming.StreamSync.runFeedAvailableNow(spark, feedDir,
-      target, state, s"$dir/cp", nB)
+    drain(s"$dir/cp")
     assert(spark.read.parquet(target).count() == 11)
     // a FRESH checkpoint re-reads all feed files as ONE batch, merging
     // the upsert and the delete of doc 3 — order across original batches
     // is lost, so the two-sided-id guard must fail LOUDLY (a replayer
     // must re-partition the feed, not let the engine guess)
     val e = intercept[Exception](
-      graft.streaming.StreamSync.runFeedAvailableNow(spark, feedDir,
-        target, state, s"$dir/cp_fresh", nB))
+      drain(s"$dir/cp_fresh"))
     def msgs(t: Throwable): String =
       if (t == null) "" else Option(t.getMessage).getOrElse("") + msgs(t.getCause)
     assert(msgs(e).contains("both upserts and deletes"), e)
@@ -250,6 +255,38 @@ class StreamSyncSpec extends SparkSpec {
     assert(child.filter($"odocs__id" === "2").count() == 1) // untouched
     assert(r.children.get("odocs_vals").contains(
       graft.sync.ChildCounts(1L, 3L)), r.children)
+  }
+
+  test("feed sync with child tables hashes in the snapshot canon: a " +
+      "repeated nested-only edit replaces the child rows, and a following " +
+      "snapshot of the same documents reads all unchanged") {
+    import graft.sync.{ChildSync, DocHash, IncrementalSync}
+    val dir = java.nio.file.Files.createTempDirectory("graft_sfh").toString
+    val (target, state) = (s"$dir/odocs.parquet", s"$dir/s")
+    val nB = 4
+    def docs(v1: Seq[Long]) = Seq(("1", "a", v1), ("2", "b", Seq(20L)))
+      .toDF("_id", "name", "vals")
+    val mk: org.apache.spark.sql.DataFrame => Seq[ChildSync] =
+      cur => ChildSync.forSchema(cur, "odocs", dir)
+    val boot = docs(Seq(10L, 11L))
+    IncrementalSync.runPartitioned(spark, DocHash.forSync(boot, true,
+      Set.empty), target, state, nB, children = mk(boot))
+    // two nested-only edits of doc 1, each an unhashed change-feed batch
+    def feed(v1: Seq[Long]) = StreamSync.applyFeedBatch(spark,
+      Seq(("1", "a", v1, "upsert")).toDF("_id", "name", "vals", "_op"),
+      target, state, nB, childrenFor = Some(mk))
+    val r1 = feed(Seq(10L))
+    assert(r1.updated == 1, r1)
+    val r2 = feed(Seq(12L, 13L, 14L))
+    assert(r2.updated == 1 && r2.unchanged == 0, r2)
+    val child = spark.read.parquet(s"$dir/odocs_vals.parquet")
+    assert(child.filter($"odocs__id" === "1").count() == 3,
+      "the second nested-only edit never replaced the child rows")
+    // the snapshot path agrees with the feed on every touched document
+    val snap = docs(Seq(12L, 13L, 14L))
+    val r3 = IncrementalSync.runPartitioned(spark, DocHash.forSync(snap,
+      true, Set.empty), target, state, nB, children = mk(snap))
+    assert(r3.unchanged == 2 && r3.updated == 0 && r3.newDocs == 0, r3)
   }
 
   test("decompose-aware streaming: child tables merge per batch; an " +
