@@ -1,8 +1,9 @@
 package graft.scale
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Product quantization (Jégou, Douze, Schmid, "Product Quantization for
   * Nearest Neighbor Search", TPAMI 2011) — the memory-compression path for
@@ -10,13 +11,14 @@ import org.apache.spark.sql.functions._
   * (here m·8 bits instead of D·32), and query scoring becomes `m` table
   * lookups per candidate instead of a D-dim float kernel.
   *
-  * 100 TB shape: the codebook is tiny (m·k·(D/m) floats) and trained with
-  * the same flat-lineage Lloyd's loop as [[Similarity.kmeansFit]] — every
-  * iteration's plan is (one scan of the subvector frame + broadcast
-  * centroid literals), nothing accumulates. Encoding is one zero-shuffle
-  * scan. ADC search joins the (id, subspace, code) table against a
-  * BROADCAST per-query lookup table (q·m·k rows) and reduces with one
-  * hash aggregation — the corpus-sized side never shuffles on a float.
+  * 100 TB shape: the codebook is tiny (m·k·(D/m) floats) and its Lloyd's
+  * loop is held on the driver — each round is ONE collected aggregate
+  * (one scan of the subvector frame against a broadcast centroid literal,
+  * grouped into the next centroids), nothing accumulates and no round
+  * re-plans an earlier round's frame. Encoding is one zero-shuffle scan.
+  * ADC search joins the (id, subspace, code) table against a BROADCAST
+  * per-query lookup table (q·m·k rows) and reduces with one hash
+  * aggregation — the corpus-sized side never shuffles on a float.
   * Determinism mirrors the k-means family: min-id seeding (no RNG),
   * per-round `round(·, scale)` centroid quantization, argmin ties broken
   * to the smallest label, and the compared distance surface is pure int64
@@ -58,11 +60,43 @@ object Pq {
         col("sv.subvec").as("subvec"))
   }
 
-  /** Per-(subspace, label) centroids of assigned subvectors — the PQ
-    * M-step. Same decimal-exact mean + ragged-dimension guard as
-    * [[Similarity.centroids]], keyed by (subspace, label). */
-  private def subCentroids(assigned: DataFrame, scale: Int): DataFrame = {
-    val perDim = assigned
+  /** One trained codebook held on the driver: (subspace, label, centroid
+    * coordinates in `pos` order), sorted by (subspace, label). Bounded by
+    * contract at m·k entries of D/m doubles. */
+  private type Entries = Array[(Int, Long, IndexedSeq[Double])]
+
+  /** The schema of every codebook frame [[codebook]] returns. */
+  private val CodebookSchema = StructType(Seq(
+    StructField("subspace", IntegerType, nullable = false),
+    StructField("label", LongType),
+    StructField("pos", IntegerType, nullable = false),
+    StructField("centroid", DoubleType)))
+
+  /** Collected (subspace, label, pos, centroid, n) rows grouped into
+    * codebook entries, with the two M-step guards checked here on the
+    * driver: every pos of one entry must average the same number of
+    * subvectors `n` (else the subvectors were ragged), and an entry's pos
+    * run must be contiguous 1..size. Both errors name the subspace and
+    * label. */
+  private[graft] def entries(
+      rows: Seq[(Int, Long, Int, Double, Long)]): Entries =
+    rows.groupBy(r => (r._1, r._2)).toArray.sortBy(_._1).map {
+      case ((sub, label), g) =>
+        require(g.map(_._5).distinct.size == 1,
+          s"ragged subvectors in subspace $sub label $label")
+        val byPos = g.map(r => r._3 -> r._4).toMap
+        require((1 to byPos.size).forall(byPos.contains),
+          s"codebook dims for subspace $sub label $label are not " +
+            s"contiguous 1..${byPos.size}")
+        (sub, label, (1 to byPos.size).map(byPos): IndexedSeq[Double])
+    }
+
+  /** The PQ M-step as ONE collected aggregate: per-(subspace, label, pos)
+    * mean of the assigned subvectors, with the same decimal-exact sum and
+    * per-round `round(·, scale)` as [[Similarity.centroids]], plus the row
+    * count `n` the ragged guard compares. */
+  private def mStep(assigned: DataFrame, scale: Int): Entries =
+    entries(assigned
       .select(col("subspace"), col("label"),
         posexplode(col("subvec")).as(Seq("pos", "v")))
       .groupBy(col("subspace"), col("label"), (col("pos") + 1).as("pos"))
@@ -71,50 +105,34 @@ object Pq {
           sum(col("v").cast("double").cast("decimal(27,9)")).cast("double") /
             count(lit(1)), scale).as("centroid"),
         count(lit(1)).as("_n"))
-    val w = Window.partitionBy("subspace", "label")
-    perDim
-      .withColumn("_nmax", max(col("_n")).over(w))
-      .select(col("subspace"), col("label"), col("pos"),
-        when(col("_n") =!= col("_nmax"), raise_error(concat(
-          lit("ragged subvectors in subspace "), col("subspace").cast("string"),
-          lit(" label "), col("label").cast("string"))))
-          .otherwise(col("centroid")).as("centroid"))
-  }
+      .collect().toSeq
+      .map(r => (r.getInt(0), r.getLong(1), r.getInt(2),
+        r.getAs[Double](3), r.getLong(4))))
 
-  /** Collected codebook rows, memoized per codebook FRAME INSTANCE (weak
-    * keys — entries die with their frames): every consumer of one trained
+  /** Codebook entries, memoized per codebook FRAME INSTANCE (weak keys —
+    * entries die with their frames): every consumer of one trained
     * codebook (encode + ADC LUT + quantization error inside one query)
-    * previously re-collected the same cached frame, paying one Spark job
-    * per consumer, and [[cbDims]] paid a further aggregate job for (m, D)
-    * that these rows already determine. Bounded by contract at
-    * m·k·(D/m) = k·D rows, so holding the collected rows is as cheap as
-    * the plan literal that was already built from them. Session-scoped
-    * and keyed by object identity — never persisted, never shared across
-    * frames, so a retrained codebook can never serve stale rows. */
+    * would otherwise re-collect the same frame, paying one Spark job per
+    * consumer. [[codebook]] registers its own frames as it returns them,
+    * so only a codebook read from elsewhere (a published state version)
+    * is ever collected here. Session-scoped and keyed by object identity
+    * — never persisted, never shared across frames, so a retrained
+    * codebook can never serve stale rows. */
   private val cbMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[DataFrame,
-      Array[(Int, Long, IndexedSeq[Double])]]())
+    new java.util.WeakHashMap[DataFrame, Entries]())
 
-  private def cbRows(cb: DataFrame): Array[(Int, Long, IndexedSeq[Double])] = {
+  private def cbRows(cb: DataFrame): Entries = {
     val hit = cbMemo.get(cb)
     if (hit != null) hit
     else {
       // the collect runs OUTSIDE the memo lock: a Spark job must not
       // block every other codebook's lookup. Two threads racing on one
-      // frame both collect the same rows; the first put wins.
-      val rows = cb
-        .groupBy("subspace", "label").agg(map_from_arrays(
-          collect_list(col("pos")), collect_list(col("centroid"))).as("c"))
-        .collect()
-        .map { r =>
-          val m = r.getMap[Int, Double](2)
-          val sub = r.getAs[Number]("subspace").intValue()
-          val label = r.getAs[Number]("label").longValue()
-          require((1 to m.size).forall(m.contains),
-            s"codebook dims for subspace $sub label $label are not " +
-              s"contiguous 1..${m.size}")
-          (sub, label, (1 to m.size).map(m(_)): IndexedSeq[Double])
-        }
+      // frame both collect the same rows; the first put wins. A stored
+      // row is one value, so its count is 1.
+      val rows = entries(cb.select("subspace", "label", "pos", "centroid")
+        .collect().toSeq
+        .map(r => (r.getAs[Number](0).intValue, r.getAs[Number](1).longValue,
+          r.getAs[Number](2).intValue, r.getAs[Double](3), 1L)))
       cbMemo.synchronized {
         val won = cbMemo.get(cb)
         if (won != null) won else { cbMemo.put(cb, rows); rows }
@@ -122,16 +140,17 @@ object Pq {
     }
   }
 
-  /** Collected codebook as a broadcast-able plan literal:
-    * map(subspace -> array of (label, centroid-array) structs). */
-  private def codebookLiteral(cb: DataFrame): Column = {
-    val rows = cbRows(cb)
-    map(rows.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (s, cl) =>
-      Seq(lit(s), array(cl.sortBy(_._2).map { case (_, lbl, c) =>
-        struct(lit(lbl).as("label"), array(c.map(lit): _*).as("c"))
-      }: _*))
-    }: _*)
-  }
+  /** One centroid of a codebook literal: the struct the E-step scores. */
+  private case class Centroid(label: Long, c: Seq[Double])
+
+  /** Codebook entries as ONE broadcast-able plan literal:
+    * map(subspace -> array of (label, centroid-array) structs). A single
+    * typed literal, not a tree of k·D `lit` nodes: every optimizer pass
+    * and the generated code see one constant. */
+  private def codebookLiteral(rows: Entries): Column =
+    typedLit(rows.groupBy(_._1).map { case (s, cl) =>
+      s -> cl.sortBy(_._2).map { case (_, l, c) => Centroid(l, c) }.toSeq
+    })
 
   /** Squared-L2 scores of `subvec` against every centroid of its subspace:
     * array of (d, label) structs. The native [[graft.functions.VectorSqL2]]
@@ -146,38 +165,65 @@ object Pq {
 
   /** E-step: nearest codebook entry per (id, subspace); ties break to the
     * smallest label (struct min is (d, label)-lexicographic). */
-  private def assignSub(subv: DataFrame, cb: DataFrame): DataFrame =
+  private def assignSub(subv: DataFrame, rows: Entries): DataFrame =
     subv.withColumn("label",
-      array_min(scoredAgainst(codebookLiteral(cb))).getField("label"))
+      array_min(scoredAgainst(codebookLiteral(rows))).getField("label"))
 
   /** Train the PQ codebook: split D dims into `m` contiguous subspaces and
     * run `iters` Lloyd's rounds with k centroids in EACH subspace — all
     * subspaces advance together in ONE scan per round (subspace is just a
     * grouping key), not m separate loops. Deterministic min-id seeding:
     * the k smallest-id vectors seed every subspace, labels 1..k.
-    * Returns (subspace, label, pos, centroid), `pos` 1-based within the
-    * subspace. */
+    *
+    * The loop is held on the driver. One job collects the seeds (their
+    * size fixes D; the first round's scan then checks every other row
+    * against it through the [[subvectors]] guard), and each round is one
+    * collected aggregate — the E-step against the previous round's
+    * centroid literal feeding the M-step — checked on the driver by
+    * [[entries]]. Nothing is re-planned from an earlier round's frame. The
+    * subvector scan fans out to every core when the input is narrow (see
+    * [[graft.io.FanOut]]; a no-op at scale).
+    *
+    * Returns a local (subspace, label, pos, centroid) frame, `pos` 1-based
+    * within the subspace, already registered with [[encode]],
+    * [[adcTopK]] and [[quantizationError]], so they never collect it
+    * again. */
   def codebook(df: DataFrame, idCol: String, vecCol: String, m: Int, k: Int,
       iters: Int, scale: Int = 4): DataFrame = {
     require(k > 0, "k must be positive")
     require(iters > 0, "iters must be positive")
-    val dims = df.select(max(size(col(vecCol)))).head.getInt(0)
-    val subv = subvectors(df, idCol, vecCol, m, dims)
     // seeds: the k smallest-id vectors (TakeOrderedAndProject on the base
-    // frame — never a full-partition window), exploded to per-subspace
-    // slices; every subspace gets the same seed ids, labels 1..k
-    val w = Window.partitionBy("subspace").orderBy(col(idCol).asc)
-    var cents = subvectors(df.orderBy(col(idCol).asc).limit(k),
-        idCol, vecCol, m, dims)
-      .withColumn("label", row_number().over(w).cast("long"))
-      .select(col("subspace"), col("label"),
-        posexplode(col("subvec")).as(Seq("pos", "v")))
-      .select(col("subspace"), col("label"), (col("pos") + 1).as("pos"),
-        round(col("v").cast("double"), scale).as("centroid"))
+    // frame — never a full-partition window), rounded as centroids
+    val seeds = df.orderBy(col(idCol).asc).limit(k)
+      .select(col(idCol).cast("string"),
+        transform(col(vecCol), v => round(v.cast("double"), scale)))
+      .collect()
+      .map(r => (r.getString(0),
+        Option(r.getSeq[Double](1)).map(_.toIndexedSeq)))
+    val sizes = seeds.flatMap(_._2.map(_.length))
+    require(sizes.nonEmpty, "codebook: no vector to seed from")
+    val dims = sizes.max
+    seeds.find(_._2.forall(_.length != dims)).foreach { case (id, v) =>
+      throw new IllegalArgumentException(s"subvectors: expected $dims dims, " +
+        s"got ${v.fold("null")(_.length.toString)} for $id")
+    }
+    val subv = subvectors(graft.io.FanOut(df.select(col(idCol), col(vecCol))),
+      idCol, vecCol, m, dims)
+    val sub = dims / m
+    // every subspace gets the same seed ids, labels 1..k
+    var rows: Entries = for {
+      j <- (0 until m).toArray
+      ((_, v), i) <- seeds.zipWithIndex
+    } yield (j, i + 1L, v.get.slice(j * sub, (j + 1) * sub))
     for (_ <- 1 to iters)
-      cents = subCentroids(
-        assignSub(subv, cents).select("subspace", "label", "subvec"), scale)
-    cents
+      rows = mStep(assignSub(subv, rows).select("subspace", "label", "subvec"),
+        scale)
+    val out = df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows.toSeq.flatMap { case (s, l, c) =>
+        c.zipWithIndex.map { case (v, p) => Row(s, l, p + 1, v) }
+      }: _*), CodebookSchema)
+    cbMemo.put(out, rows)
+    out
   }
 
   /** IVF residual vectors (Jégou '11 §IV, eq. 14): replace each vector by
@@ -192,23 +238,29 @@ object Pq {
     *
     * `cents` is a (label, pos, centroid) frame keyed by the cell label
     * (the [[Similarity.centroids]] shape — bounded at cells·dims rows by
-    * contract, so it broadcasts). 100 TB shape: one broadcast hash join
-    * on the cell label + a zero-shuffle `zip_with` projection — the
-    * corpus never shuffles. A row whose cell has no centroid (index /
-    * centroid-table desync) or whose vector length differs from its
-    * centroid fails LOUDLY: a silent inner-join drop would excise the row
-    * from the index, and zip_with's null-padding would poison distances
-    * downstream. Output: `df` with `vecCol` replaced by the residual
-    * (elements cast to double — the PQ entry type). */
+    * contract). It is collected ONCE, here at call time, into a local
+    * relation of per-cell centroid arrays, so every action on the result
+    * reads a constant instead of re-running the centroid aggregate.
+    * 100 TB shape: one broadcast hash join on the cell label + a
+    * zero-shuffle `zip_with` projection — the corpus never shuffles. A row
+    * whose cell has no centroid (index / centroid-table desync) or whose
+    * vector length differs from its centroid fails LOUDLY: a silent
+    * inner-join drop would excise the row from the index, and zip_with's
+    * null-padding would poison distances downstream. Output: `df` with
+    * `vecCol` replaced by the residual (elements cast to double — the PQ
+    * entry type). */
   def residualize(df: DataFrame, cents: DataFrame, cellCol: String,
       vecCol: String): DataFrame = {
     val carrC = Cols.fresh("__carr", df.columns)
-    val carr = cents
-      .groupBy(col("label").as(cellCol))
-      .agg(array_sort(collect_list(struct(col("pos"), col("centroid"))))
-        .as("__cs"))
-      .select(col(cellCol),
-        transform(col("__cs"), _.getField("centroid")).as(carrC))
+    val c = cents.select("label", "pos", "centroid")
+    val arrays = c.collect().toSeq.groupBy(r => Option(r.get(0))).toSeq.map {
+      case (cell, rs) => Row(cell.orNull, rs.sortBy(_.getAs[Number](1).intValue)
+        .map(_.get(2)))
+    }
+    val carr = df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(arrays: _*), StructType(Seq(
+        StructField(cellCol, c.schema("label").dataType),
+        StructField(carrC, ArrayType(c.schema("centroid").dataType)))))
     df.join(broadcast(carr), Seq(cellCol), "left")
       .withColumn(vecCol,
         when(col(carrC).isNull, raise_error(concat(
@@ -224,16 +276,17 @@ object Pq {
 
   /** Encode every vector as m integer codes: (id, subspace, code) — the
     * compressed index representation (m·8 bits/vector at k ≤ 256). One
-    * zero-shuffle scan against the broadcast codebook literal. */
+    * zero-shuffle scan against the broadcast codebook literal, fanned out
+    * to every core when the input is narrow (see [[graft.io.FanOut]]). */
   def encode(df: DataFrame, cb: DataFrame, idCol: String,
       vecCol: String): DataFrame = {
     val (m, dims) = cbDims(cb)
-    assignSub(subvectors(df, idCol, vecCol, m, dims), cb)
+    assignSub(subvectors(graft.io.FanOut(df.select(col(idCol), col(vecCol))),
+        idCol, vecCol, m, dims), cbRows(cb))
       .select(col(idCol), col("subspace"), col("label").as("code"))
   }
 
-  /** (m, D) from a codebook frame — derived from the memoized collected
-    * rows (previously a separate aggregate job per consumer). */
+  /** (m, D) from a codebook frame — derived from the memoized entries. */
   private def cbDims(cb: DataFrame): (Int, Int) = {
     val rows = cbRows(cb)
     require(rows.nonEmpty, "cbDims: empty codebook")
@@ -261,7 +314,7 @@ object Pq {
     require(k > 0, "k must be positive")
     val (m, dims) = cbDims(cb)
     val lut0 = subvectors(queries, idCol, vecCol, m, dims)
-      .withColumn("sc", explode(scoredAgainst(codebookLiteral(cb))))
+      .withColumn("sc", explode(scoredAgainst(codebookLiteral(cbRows(cb)))))
       .select(col(idCol).as("query_id"), col("subspace"),
         col("sc.label").as("code"),
         floor(col("sc.d") * 1e9).cast("long").as("d_nano"))
@@ -304,7 +357,7 @@ object Pq {
       vecCol: String): DataFrame = {
     val (m, dims) = cbDims(cb)
     subvectors(df, idCol, vecCol, m, dims)
-      .withColumn("md", array_min(scoredAgainst(codebookLiteral(cb))))
+      .withColumn("md", array_min(scoredAgainst(codebookLiteral(cbRows(cb)))))
       .groupBy(col("subspace"))
       .agg(count(lit(1)).as("n"),
         sum(floor(col("md.d") * 1e9).cast("long")).as("err_nano_sum"))

@@ -56,9 +56,9 @@ object DocHash {
     * `exclude` drops non-content columns (a version stamp, a feed's op
     * tag). */
   def forSync(df: DataFrame, childTables: Boolean,
-      exclude: Set[String]): DataFrame =
-    if (childTables) fullDocHash(df, exclude = exclude)
-    else withDocHash(df, exclude = exclude)
+      exclude: Set[String], hashCol: String = "doc_hash"): DataFrame =
+    if (childTables) fullDocHash(df, hashCol, exclude)
+    else withDocHash(df, hashCol, exclude)
 
   /** Q5-FIXED variant: hash the FULL document — nested objects and arrays
     * included via their compact-JSON serialization — so edits inside

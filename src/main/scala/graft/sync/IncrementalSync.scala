@@ -154,14 +154,16 @@ object IncrementalSync {
       .select(col("_id"), col(hashCol).as("hash"))
 
   /** A source already carrying `hashCol` is trusted verbatim — the caller
-    * chose the canon (e.g. [[DocHash.fullDocHash]] over the full document,
-    * so array/nested edits are visible to a decompose-aware sync with
-    * [[ChildSync]] children); otherwise the reference's flat-field canon
-    * applies. Switching canons against existing state self-heals: every
-    * doc classifies `updated` exactly once, then converges. */
-  private def currentWithHash(source: DataFrame, hashCol: String): DataFrame =
+    * chose the canon. Otherwise [[DocHash.forSync]] picks it: the full
+    * document when `childTables` sync (so array/nested edits are visible
+    * to a decompose-aware sync with [[ChildSync]] children), else the
+    * reference's flat-field canon. Switching canons against existing
+    * state self-heals: every doc classifies `updated` exactly once, then
+    * converges. */
+  private def currentWithHash(source: DataFrame, hashCol: String,
+      childTables: Boolean): DataFrame =
     if (source.columns.contains(hashCol)) source
-    else DocHash.withDocHash(source, hashCol)
+    else DocHash.forSync(source, childTables, Set.empty, hashCol)
 
   /** Apply one sync's change set to the child tables (whole-table-swap
     * form, the [[run]] mode): every changed parent's child rows (updated,
@@ -340,7 +342,7 @@ object IncrementalSync {
       stateTable: String, buckets: Int,
       hashCol: String = "doc_hash"): SyncResult = {
     import graft.io.Bucketing
-    val current = currentWithHash(source, hashCol)
+    val current = currentWithHash(source, hashCol, childTables = false)
     val state =
       if (spark.catalog.tableExists(stateTable)) spark.table(stateTable)
       else StateStore.emptyState(spark)
@@ -451,7 +453,7 @@ object IncrementalSync {
     // misses their old rows while stale directories keep serving them
     verifyBucketCount(fs, targetPath, buckets)
     verifyBucketCount(fs, statePath, buckets)
-    val current = currentWithHash(source, hashCol)
+    val current = currentWithHash(source, hashCol, children.nonEmpty)
     val state = {
       val st = StateStore.load(spark, statePath)
       if (st.columns.contains("__bucket")) st.drop("__bucket") else st
@@ -613,7 +615,7 @@ object IncrementalSync {
       s"runFromChangeFeed: target ($targetPath) or sync state ($statePath) " +
         "does not exist — a change feed cannot bootstrap a corpus; run a " +
         "snapshot sync (or full migration) first")
-    val current = currentWithHash(upserts, hashCol)
+    val current = currentWithHash(upserts, hashCol, children.nonEmpty)
     // ambiguity guard AND bucket footprint in ONE aggregation job (this
     // runs per micro-batch on the hot streaming path, so guard overhead
     // matters; they previously ran as two jobs over the same id union):
@@ -993,7 +995,7 @@ object IncrementalSync {
   def run(spark: SparkSession, source: DataFrame, targetPath: String,
       statePath: String, hashCol: String = "doc_hash",
       children: Seq[ChildSync] = Seq.empty): SyncResult = {
-    val current = currentWithHash(source, hashCol)
+    val current = currentWithHash(source, hashCol, children.nonEmpty)
     val state = StateStore.load(spark, statePath)
     val classified = classify(current, state, hashCol).cache()
     try {

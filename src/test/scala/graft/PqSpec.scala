@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.scale.Pq
 
@@ -406,5 +408,244 @@ class PqSpec extends SparkSpec {
       Pq.encode(ragged, rcb, "vec_id", "embedding").count()
     }
     assert(ex2.getMessage.contains("expected 8 dims"))
+  }
+
+  /** The lazy-frame trainer and residualizer: every Lloyd round plans its
+    * M-step over the previous round's frame (ragged check as a window,
+    * codebook rows re-collected through a second groupBy), and the cell
+    * centroid table stays a lazy aggregate under a broadcast join. Kept as
+    * the reference the driver-held `Pq.codebook` / `Pq.residualize` must
+    * reproduce bit for bit. */
+  private object LazyPq {
+    private def subCentroids(assigned: DataFrame, scale: Int): DataFrame = {
+      val perDim = assigned
+        .select(col("subspace"), col("label"),
+          posexplode(col("subvec")).as(Seq("pos", "v")))
+        .groupBy(col("subspace"), col("label"), (col("pos") + 1).as("pos"))
+        .agg(
+          round(
+            sum(col("v").cast("double").cast("decimal(27,9)")).cast("double") /
+              count(lit(1)), scale).as("centroid"),
+          count(lit(1)).as("_n"))
+      val w = Window.partitionBy("subspace", "label")
+      perDim
+        .withColumn("_nmax", max(col("_n")).over(w))
+        .select(col("subspace"), col("label"), col("pos"),
+          when(col("_n") =!= col("_nmax"), raise_error(concat(
+            lit("ragged subvectors in subspace "), col("subspace").cast("string"),
+            lit(" label "), col("label").cast("string"))))
+            .otherwise(col("centroid")).as("centroid"))
+    }
+
+    private def codebookLiteral(cb: DataFrame): Column = {
+      val rows = cb
+        .groupBy("subspace", "label").agg(map_from_arrays(
+          collect_list(col("pos")), collect_list(col("centroid"))).as("c"))
+        .collect()
+        .map { r =>
+          val m = r.getMap[Int, Double](2)
+          (r.getAs[Number]("subspace").intValue(),
+            r.getAs[Number]("label").longValue(), (1 to m.size).map(m(_)))
+        }
+      map(rows.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (s, cl) =>
+        Seq(lit(s), array(cl.sortBy(_._2).map { case (_, lbl, c) =>
+          struct(lit(lbl).as("label"), array(c.map(lit): _*).as("c"))
+        }: _*))
+      }: _*)
+    }
+
+    private def assignSub(subv: DataFrame, cb: DataFrame): DataFrame =
+      subv.withColumn("label", array_min(
+        transform(element_at(codebookLiteral(cb), col("subspace")),
+          cs => struct(
+            graft.functions.VectorSqL2(col("subvec"), cs.getField("c")).as("d"),
+            cs.getField("label").as("label")))).getField("label"))
+
+    def codebook(df: DataFrame, idCol: String, vecCol: String, m: Int,
+        k: Int, iters: Int, scale: Int = 4): DataFrame = {
+      val dims = df.select(max(size(col(vecCol)))).head.getInt(0)
+      val subv = Pq.subvectors(df, idCol, vecCol, m, dims)
+      val w = Window.partitionBy("subspace").orderBy(col(idCol).asc)
+      var cents = Pq.subvectors(df.orderBy(col(idCol).asc).limit(k),
+          idCol, vecCol, m, dims)
+        .withColumn("label", row_number().over(w).cast("long"))
+        .select(col("subspace"), col("label"),
+          posexplode(col("subvec")).as(Seq("pos", "v")))
+        .select(col("subspace"), col("label"), (col("pos") + 1).as("pos"),
+          round(col("v").cast("double"), scale).as("centroid"))
+      for (_ <- 1 to iters)
+        cents = subCentroids(
+          assignSub(subv, cents).select("subspace", "label", "subvec"), scale)
+      cents
+    }
+
+    def residualize(df: DataFrame, cents: DataFrame, cellCol: String,
+        vecCol: String): DataFrame = {
+      val carr = cents
+        .groupBy(col("label").as(cellCol))
+        .agg(array_sort(collect_list(struct(col("pos"), col("centroid"))))
+          .as("__cs"))
+        .select(col(cellCol),
+          transform(col("__cs"), _.getField("centroid")).as("__carr"))
+      df.join(broadcast(carr), Seq(cellCol), "left")
+        .withColumn(vecCol, zip_with(col(vecCol), col("__carr"),
+          (a, b) => a.cast("double") - b))
+        .drop("__carr")
+    }
+  }
+
+  private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+
+  private def cbBits(cb: DataFrame): Set[(Int, Long, Int, Long)] =
+    cb.select("subspace", "label", "pos", "centroid")
+      .as[(Int, Long, Int, Double)].collect()
+      .map(r => (r._1, r._2, r._3, bits(r._4))).toSet
+
+  /** A seeded float corpus with `cells` well-separated clusters, written as
+    * ONE parquet file so the fanned-out scan path is the one exercised. */
+  private def seededCorpus(seed: Long, n: Int, dims: Int, cells: Int,
+      dupFirst: Boolean = false): DataFrame = {
+    val r = new scala.util.Random(seed)
+    val rows = (0L until n).map { i =>
+      (i, i % cells, Seq.fill(dims)(
+        (r.nextGaussian() * 3).toFloat + (i % cells) * 20f))
+    }
+    // the first two ids share one vector: their seeds tie, the argmin
+    // breaks every tie to label 1, and label 2 empties after round 1
+    val rows2 = if (dupFirst) rows.updated(1, rows(1).copy(_3 = rows(0)._3))
+      else rows
+    val dir = java.nio.file.Files.createTempDirectory("graft_pqcorpus")
+      .toString
+    rows2.toDF("vec_id", "cell", "embedding").coalesce(1)
+      .write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  test("driver-held codebook and eager residualize are bit-identical to " +
+      "the lazy-frame trainer over seeded corpora (m, k, iters varied; a " +
+      "cluster that empties drops its label)") {
+    val cases = Seq(
+      // (seed, n, dims, cells, m, k, iters, dupFirst)
+      (1L, 200, 16, 4, 4, 4, 2, false),
+      (2L, 150, 12, 3, 3, 5, 3, false),
+      (3L, 120, 8, 2, 2, 8, 1, false),
+      (4L, 300, 16, 5, 8, 3, 4, false),
+      (5L, 100, 6, 3, 6, 2, 2, false),
+      (6L, 80, 8, 4, 4, 6, 3, true))
+    for ((seed, n, dims, cells, m, k, iters, dup) <- cases) {
+      val what = s"seed $seed m=$m k=$k iters=$iters"
+      val c = seededCorpus(seed, n, dims, cells, dup)
+      val cents = graft.scale.Similarity.centroids(
+        c.select(col("cell").as("label"), col("embedding")),
+        "label", "embedding")
+      val re = Pq.residualize(c, cents, "cell", "embedding")
+      val reRef = LazyPq.residualize(c, cents, "cell", "embedding")
+      def resBits(df: DataFrame) = df.select("vec_id", "embedding")
+        .as[(Long, Seq[Double])].collect()
+        .map(r => r._1 -> r._2.map(bits)).toMap
+      assert(resBits(re) == resBits(reRef), s"$what: residuals differ")
+      for (input <- Seq(c, re)) {
+        val cb = Pq.codebook(input, "vec_id", "embedding", m, k, iters)
+        val ref = LazyPq.codebook(input, "vec_id", "embedding", m, k, iters)
+        val got = cbBits(cb)
+        assert(got == cbBits(ref), s"$what: codebook rows differ")
+        assert(cb.schema == ref.schema, s"$what: ${cb.schema} != ${ref.schema}")
+        // consumers read the memoized entries for `cb` and collect `ref`
+        assert(Pq.encode(input, cb, "vec_id", "embedding").collect().toSet ==
+          Pq.encode(input, ref, "vec_id", "embedding").collect().toSet,
+          s"$what: codes differ")
+        assert(Pq.quantizationError(input, cb, "vec_id", "embedding")
+          .collect().toSet == Pq.quantizationError(input, ref, "vec_id",
+            "embedding").collect().toSet, s"$what: quantization error differs")
+        if (dup && (input eq c)) {
+          val labels = got.groupBy(_._1).values.map(_.map(_._2).size)
+          assert(labels.forall(_ < k), s"$what: no label dropped out: $got")
+        }
+      }
+    }
+  }
+
+  test("codebook runs one collected aggregate per Lloyd round") {
+    val sc = spark.sparkContext
+    val tag = "graft.pq.jobs"
+    def jobsOf(body: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty(tag) != null))
+            jobs.incrementAndGet(): Unit
+      }
+      sc.addSparkListener(listener)
+      sc.setLocalProperty(tag, "1")
+      try body
+      finally sc.setLocalProperty(tag, null)
+      org.apache.spark.GraftTestBus.drain(sc)
+      sc.removeSparkListener(listener)
+      jobs.get()
+    }
+    // one job collects the seeds; a round on the fanned-out fixture is 3
+    // jobs (the fan-out exchange, the aggregate's map stage, its result)
+    def bound(iters: Int) = 3 * iters + 1
+    val e = emb // loaded outside the counted window
+    for (iters <- 1 to 3) {
+      val n = jobsOf(Pq.codebook(e, "vec_id", "embedding", 4, 4, iters))
+      assert(n <= bound(iters), s"codebook(iters = $iters) ran $n jobs")
+    }
+    // the lazy-frame trainer, materialized as codebook now returns it,
+    // re-plans each round's window and regroup and breaks the bound
+    val lazyJobs = jobsOf(LazyPq.codebook(e, "vec_id", "embedding", 4, 4,
+      3).collect(): Unit)
+    assert(lazyJobs > bound(3), s"lazy trainer ran only $lazyJobs jobs")
+  }
+
+  test("codebook guards checked on the driver name the subspace and label") {
+    val ragged = intercept[IllegalArgumentException](Pq.entries(Seq(
+      (0, 1L, 1, 0.5, 3L), (0, 1L, 2, 0.25, 2L), (1, 1L, 1, 0.5, 3L))))
+    assert(ragged.getMessage.contains("ragged subvectors in subspace 0 " +
+      "label 1"), ragged.getMessage)
+    val gap = intercept[IllegalArgumentException](Pq.entries(Seq(
+      (1, 2L, 1, 0.5, 1L), (1, 2L, 3, 0.25, 1L))))
+    assert(gap.getMessage.contains("codebook dims for subspace 1 label 2 " +
+      "are not contiguous"), gap.getMessage)
+    // a stored codebook with a hole in one entry's pos run fails the same
+    // way when a consumer collects it
+    val holed = Seq((0, 1L, 1, 0.5), (0, 1L, 3, 0.5), (1, 1L, 1, 0.5),
+        (1, 1L, 2, 0.5))
+      .toDF("subspace", "label", "pos", "centroid")
+    val ex = intercept[IllegalArgumentException](
+      Pq.encode(emb, holed, "vec_id", "embedding"))
+    assert(ex.getMessage.contains("subspace 0 label 1"), ex.getMessage)
+  }
+
+  test("codebook frame keeps the schema subspace INT, label BIGINT, pos " +
+      "INT, centroid DOUBLE") {
+    assert(cb.schema.map(f => f.name -> f.dataType.sql) == Seq(
+      "subspace" -> "INT", "label" -> "BIGINT", "pos" -> "INT",
+      "centroid" -> "DOUBLE"))
+  }
+
+  test("codebook: a ragged vector fails loudly, among the seeds or not") {
+    val ragged = Seq(
+      (1L, Seq.fill(8)(1.0f)), (2L, Seq.fill(6)(1.0f)))
+      .toDF("vec_id", "embedding")
+    for (k <- Seq(1, 2)) {
+      val ex = intercept[Exception](
+        Pq.codebook(ragged, "vec_id", "embedding", m = 2, k = k, iters = 1))
+      assert(ex.getMessage.contains("expected 8 dims, got 6 for 2"),
+        s"k=$k: ${ex.getMessage}")
+    }
+  }
+
+  test("residualize: a vector/centroid dims mismatch fails loudly") {
+    val docs = Seq((1L, 0L, Seq(1.0f, 2.0f, 3.0f)), (2L, 1L, Seq(1.0f, 2.0f,
+      3.0f))).toDF("vec_id", "cell", "embedding")
+    // cell 1's centroid is one dim short
+    val cents = Seq((0L, 1, 0.5), (0L, 2, 0.5), (0L, 3, 0.5), (1L, 1, 0.5),
+      (1L, 2, 0.5)).toDF("label", "pos", "centroid")
+    val ex = intercept[Exception](
+      Pq.residualize(docs, cents, "cell", "embedding").collect())
+    assert(ex.getMessage.contains("vector/centroid dims differ for cell 1"),
+      ex.getMessage)
   }
 }

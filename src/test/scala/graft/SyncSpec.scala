@@ -80,6 +80,30 @@ class SyncSpec extends SparkSpec {
     assert(again == after)
   }
 
+  test("run with child tables hashes an unhashed source over the full " +
+      "document: a nested-only edit classifies updated and lands in the " +
+      "child table") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_nsync").toString
+    val (target, state) = (s"$dir/tdocs.parquet", s"$dir/state.parquet")
+    def docs(firstQty: Long) = Seq(
+        ("1", "a", Seq(firstQty, 2L)), ("2", "b", Seq(3L)), ("3", "c", Seq(4L)))
+      .toDF("_id", "name", "qtys")
+      .select($"_id", $"name",
+        transform($"qtys", q => struct(q.as("qty"))).as("items"))
+    val v1 = docs(1L)
+    v1.limit(0).write.parquet(target)
+    def sync(v: org.apache.spark.sql.DataFrame) = IncrementalSync.run(spark,
+      v, target, state,
+      children = graft.sync.ChildSync.forSchema(v, "tdocs", dir))
+    assert(sync(v1).newDocs == 3)
+    // only doc 1's first array element changes; no flat field moves
+    val r = sync(docs(9L))
+    assert(r.updated == 1 && r.unchanged == 2, r)
+    val items = spark.read.parquet(s"$dir/tdocs_items.parquet")
+    assert(items.filter($"tdocs__id" === "1").select("qty").as[Long]
+      .collect().sorted.toSeq == Seq(2L, 9L))
+  }
+
   test("runPartitioned rewrites ONLY the buckets holding churned ids " +
       "(file names + mtimes untouched elsewhere); an emptied bucket's " +
       "directory is removed") {
