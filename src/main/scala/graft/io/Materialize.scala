@@ -17,11 +17,17 @@ import org.apache.spark.sql.DataFrame
   *    executor loss kills the job anyway; its storage is reclaimed by the
   *    context cleaner once the frame is garbage-collected.
   *
-  * Eagerness is gated by `spark.graft.eagerMaterialize` (default false):
-  * building a query must never run Spark jobs as a construction-time side
-  * effect (plan inspection stays free). Loops that need the frame
-  * materialized immediately follow the call with an action of their own, so
-  * lazy checkpointing costs them nothing.
+  * Eagerness is gated by `spark.graft.eagerMaterialize` (default false),
+  * but "lazy" only defers the FINAL stage. Building the checkpoint plans
+  * the frame, and under adaptive execution planning runs every upstream
+  * exchange and broadcast at the call: a frame with a shuffle beneath it
+  * runs its map-stage jobs right here (a checkpoint over a fingerprint
+  * aggregate ran 2 jobs at construction). Only a frame with no exchange
+  * (a per-row projection of another materialized frame) costs nothing to
+  * build. The final stage runs with the first action over the result;
+  * loops that need it immediately follow the call with an action of their
+  * own, and [[now]] is that action for frames read by several concurrent
+  * branches.
   */
 object Materialize {
   def apply(df: DataFrame): DataFrame = {
@@ -30,6 +36,16 @@ object Materialize {
       .exists(_.toBoolean)
     if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager)
     else df.localCheckpoint(eager)
+  }
+
+  /** Run ONE job over a frame [[apply]] returned, so its blocks, and those
+    * of every lazily materialized frame beneath it, exist before several
+    * plan branches read it at once: the broadcast branches of one join
+    * tree run concurrently, and each would compute the missing blocks
+    * itself. Counts internal rows; nothing is decoded or collected. */
+  def now(df: DataFrame): DataFrame = {
+    df.queryExecution.toRdd.count()
+    df
   }
 
   /** Drop a materialized frame's executor-local blocks once every consumer

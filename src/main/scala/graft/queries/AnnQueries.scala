@@ -363,10 +363,8 @@ object AnnQueries {
     // D·32 — the representation an exhaustive ADC scan reads at 100 TB)
     "emb_pq_encode" -> ((s, d) => {
       val e = emb(s, d)
-      // k·D rows; cached because encode reads it twice (dims + literal)
       Pq.encode(e,
-          Pq.codebook(e, "vec_id", "embedding", m = 4, k = 4, iters = 2)
-            .cache(),
+          Pq.codebook(e, "vec_id", "embedding", m = 4, k = 4, iters = 2),
           "vec_id", "embedding")
         .select(col("vec_id"), col("subspace").cast("long").as("subspace"),
           col("code"))
@@ -378,9 +376,7 @@ object AnnQueries {
     // raw vectors never rejoin the candidate scan
     "ann_pq_topk" -> ((s, d) => {
       val e = emb(s, d)
-      // the tiny codebook is read 4× (encode + ADC, dims + literals each)
       val cb = Pq.codebook(e, "vec_id", "embedding", m = 4, k = 4, iters = 2)
-        .cache()
       Pq.adcTopK(e.filter(col("vec_id") < 5),
           Pq.encode(e, cb, "vec_id", "embedding"), cb,
           "vec_id", "embedding", k = 10)
@@ -400,7 +396,7 @@ object AnnQueries {
       val pe = e.select(col("vec_id"),
         graft.scale.Opq.permute(col("embedding"), perm).as("embedding"))
       val cb = Pq.codebook(pe, "vec_id", "embedding", m = 4, k = 4,
-        iters = 2).cache()
+        iters = 2)
       Pq.adcTopK(pe.filter(col("vec_id") < 5),
           Pq.encode(pe, cb, "vec_id", "embedding"), cb,
           "vec_id", "embedding", k = 10)
@@ -419,7 +415,7 @@ object AnnQueries {
       // codebook trained on history only, batch encoded against it
       Pq.encode(e.filter(col("vec_id") >= 250),
           Pq.codebook(e.filter(col("vec_id") < 250), "vec_id", "embedding",
-            m = 4, k = 4, iters = 2).cache(),
+            m = 4, k = 4, iters = 2),
           "vec_id", "embedding")
         .select(col("vec_id"), col("subspace").cast("long").as("subspace"),
           col("code"))
@@ -433,7 +429,6 @@ object AnnQueries {
     "ann_ivfpq_topk" -> ((s, d) => {
       val e = emb(s, d)
       val cb = Pq.codebook(e, "vec_id", "embedding", m = 4, k = 4, iters = 2)
-        .cache()
       val codes = Pq.encode(e, cb, "vec_id", "embedding")
         .join(e.select(col("vec_id"), col("label").as("cell")), Seq("vec_id"))
       Pq.adcTopK(e.filter(col("vec_id") < 5).withColumn("cell", col("label")),
@@ -459,7 +454,6 @@ object AnnQueries {
         e.select(col("vec_id"), col("label").as("cell"), col("embedding")),
         cents, "cell", "embedding")
       val cb = Pq.codebook(re, "vec_id", "embedding", m = 4, k = 4, iters = 2)
-        .cache()
       val codes = Pq.encode(re, cb, "vec_id", "embedding")
         .join(e.select(col("vec_id"), col("label").as("cell")), Seq("vec_id"))
       Pq.adcTopK(re.filter(col("vec_id") < 5),
@@ -508,7 +502,6 @@ object AnnQueries {
     "ann_ivfpq_rerank" -> ((s, d) => {
       val e = emb(s, d)
       val cb = Pq.codebook(e, "vec_id", "embedding", m = 4, k = 4, iters = 2)
-        .cache()
       val codes = Pq.encode(e, cb, "vec_id", "embedding")
         .join(e.select(col("vec_id"), col("label").as("cell")), Seq("vec_id"))
       Pq.adcRerankTopK(
@@ -525,8 +518,7 @@ object AnnQueries {
     "emb_pq_error" -> ((s, d) => {
       val e = emb(s, d)
       Pq.quantizationError(e,
-          Pq.codebook(e, "vec_id", "embedding", m = 4, k = 4, iters = 2)
-            .cache(),
+          Pq.codebook(e, "vec_id", "embedding", m = 4, k = 4, iters = 2),
           "vec_id", "embedding")
         .select(col("subspace").cast("long").as("subspace"), col("n"),
           col("err_nano_sum"))
@@ -540,7 +532,6 @@ object AnnQueries {
       val e = emb(s, d)
       val q = e.filter(col("vec_id") < 5)
       val cb = Pq.codebook(e, "vec_id", "embedding", m = 4, k = 4, iters = 2)
-        .cache()
       val bf = Pq.bruteForceL2TopK(q, e, "vec_id", "embedding", 10)
         .select(col("query_id"), col("neighbor_id"))
       val pq = Pq.adcTopK(q, Pq.encode(e, cb, "vec_id", "embedding"), cb,

@@ -13,9 +13,15 @@ import org.apache.spark.sql.functions._
   *     components → keep each cluster's representative),
   *  5. corpus stats.
   *
-  * Everything up to the LSH band join is a single narrow scan; the whole
-  * pipeline shuffles on (fingerprint), (band, band_hash), and (component)
-  * only. The iterative component step is the one driver-controlled loop. */
+  * Everything up to the LSH band join is a single narrow scan, fanned out
+  * to every core when the corpus is a few files ([[graft.io.FanOut]], a
+  * no-op at scale); the whole pipeline shuffles on (fingerprint),
+  * (band, band_hash), and, for a large verified pair set, (component).
+  * The component step picks its plan from the pair set's measured size
+  * ([[Dedup.connectedComponents]]): a union-find on the driver up to
+  * [[Dedup.DriverPairCap]] pairs, the distributed star-contraction loop
+  * above it. Its stages run under the job labels `curate:exact`,
+  * `curate:candidates` and `curate:components`. */
 object CurationPipeline {
 
   case class Config(
@@ -36,31 +42,52 @@ object CurationPipeline {
     * alongside its output (why did my document disappear?). Three marker
     * left-joins over the stage frames the pipeline already computes. */
   def curateTrace(docs: DataFrame, idCol: String, textCol: String,
-      cfg: Config = Config()): (DataFrame, DataFrame) = {
+      cfg: Config = Config()): (DataFrame, DataFrame) =
+    curateTraceCapped(docs, idCol, textCol, cfg, Dedup.DriverPairCap)
+
+  /** [[curateTrace]] with the component step's driver-plan cap as a
+    * parameter (see [[Dedup.componentsWithStats]]). */
+  private[graft] def curateTraceCapped(docs: DataFrame, idCol: String,
+      textCol: String, cfg: Config, cap: Int): (DataFrame, DataFrame) = {
+    val sc = docs.sparkSession.sparkContext
     // 1. quality gate — per-row expressions, no shuffle
-    val quality = TextAnalysis.qualityFeatures(docs, textCol)
+    val quality = TextAnalysis.qualityFeatures(graft.io.FanOut(docs), textCol)
       .filter(col("n_tokens") >= cfg.minTokens &&
         col("alpha_ratio") >= cfg.minAlphaRatio)
       .select(col(idCol), col(textCol))
     // 2. language id — per-row
     val tagged = quality.withColumn("predicted_lang",
       TextAnalysis.langId(col(textCol)))
-    // 3. exact dedup — one fingerprint shuffle. Materialized once
-    // (Materialize: lineage severed, reliable checkpoint when configured):
-    // the survivor set feeds both the LSH pair mining (consumed by the
-    // component loop) and the final anti-join — without this the corpus
-    // scan + fingerprint window would run twice.
-    val exact = graft.io.Materialize(
-      Dedup.exactSurvivors(tagged, idCol, textCol))
+    // 3. exact dedup — one fingerprint shuffle — and the MinHash state
+    // over its survivors, both materialized by ONE job before anything
+    // reads them: the survivor set feeds the LSH pair mining and the final
+    // anti-join, and the state feeds the candidate join's three branches.
+    // Run lazily, concurrent broadcast branches would each recompute the
+    // whole text chain.
+    val (exact, state) = graft.io.Label(sc, "curate:exact") {
+      val exact = graft.io.Materialize(
+        Dedup.exactSurvivors(tagged, idCol, textCol))
+      (exact, graft.io.Materialize.now(
+        Dedup.minhashState(exact, idCol, textCol, k = 16, cfg.shingleN)))
+    }
     // 4. fuzzy dedup — banded LSH + verification + clustering; each cluster
     // keeps its minimal id (the component label)
-    val pairs = Dedup.minhashCandidates(exact, idCol, textCol,
-      k = 16, bands = 4, jaccardThreshold = cfg.jaccardThreshold,
-      shingleN = cfg.shingleN)
-    val dupIds = Dedup.connectedComponents(pairs)
-      .filter(col("id") =!= col("component")) // non-representatives drop
-      .select(col("id").as(idCol))
-    val kept = exact.join(dupIds, Seq(idCol), "left_anti")
+    val pairs = graft.io.Label(sc, "curate:candidates") {
+      graft.io.Materialize(Dedup.minhashCandidatesFromState(state, k = 16,
+        bands = 4, jaccardThreshold = cfg.jaccardThreshold))
+    }
+    val labels = graft.io.Label(sc, "curate:components") {
+      Dedup.componentsWithStats(pairs, "id_a", "id_b", 50, cap)._1
+    }
+    val dupIds = labels.filter(col("id") =!= col("component"))
+      .select(col("id").as(idCol)) // non-representatives drop
+    graft.io.Materialize.release(pairs)
+    // driver-plan labels are a local relation: filter by their ids as a
+    // literal set, since an anti-join would broadcast the relation with one
+    // more job on every action over `kept`
+    val kept = if (labels.isLocal) exact.filter(col(idCol).isNull ||
+        !col(idCol).isInCollection(dupIds.collect().map(_.get(0))))
+      else exact.join(dupIds, Seq(idCol), "left_anti")
     // marker columns avoid the caller's names (the module-wide Cols.fresh
     // convention — a user idCol named "__q" must not become a join key)
     val Seq(qC, eC, nC) = Seq("q", "e", "n")

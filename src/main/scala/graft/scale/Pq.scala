@@ -238,11 +238,15 @@ object Pq {
     *
     * `cents` is a (label, pos, centroid) frame keyed by the cell label
     * (the [[Similarity.centroids]] shape — bounded at cells·dims rows by
-    * contract). It is collected ONCE, here at call time, into a local
-    * relation of per-cell centroid arrays, so every action on the result
-    * reads a constant instead of re-running the centroid aggregate.
-    * 100 TB shape: one broadcast hash join on the cell label + a
-    * zero-shuffle `zip_with` projection — the corpus never shuffles. A row
+    * contract). It is collected ONCE, here at call time, into per-cell
+    * centroid arrays, so no action on the result re-runs the centroid
+    * aggregate. Integral labels that fill at least half of their range
+    * (k-means labels 0..k−1, holes where a label went empty) become one
+    * array literal indexed by `cell − min label`: an O(1) lookup per row
+    * and no broadcast, which would cost a job on every action over the
+    * result. Any other labels keep a broadcast hash join on the cell.
+    * 100 TB shape: either way a zero-shuffle projection plus a `zip_with`
+    * per row — the corpus never shuffles. A row
     * whose cell has no centroid (index / centroid-table desync) or whose
     * vector length differs from its centroid fails LOUDLY: a silent
     * inner-join drop would excise the row from the index, and zip_with's
@@ -254,14 +258,38 @@ object Pq {
     val carrC = Cols.fresh("__carr", df.columns)
     val c = cents.select("label", "pos", "centroid")
     val arrays = c.collect().toSeq.groupBy(r => Option(r.get(0))).toSeq.map {
-      case (cell, rs) => Row(cell.orNull, rs.sortBy(_.getAs[Number](1).intValue)
-        .map(_.get(2)))
+      case (cell, rs) => cell -> rs.sortBy(_.getAs[Number](1).intValue)
+        .map(_.get(2))
     }
-    val carr = df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(arrays: _*), StructType(Seq(
-        StructField(cellCol, c.schema("label").dataType),
-        StructField(carrC, ArrayType(c.schema("centroid").dataType)))))
-    df.join(broadcast(carr), Seq(cellCol), "left")
+    val arrT = ArrayType(c.schema("centroid").dataType)
+    // a null label matches no cell, so it never takes a slot
+    val keys = arrays.collect { case (Some(k: Number), _) => k.longValue }
+    val lo = if (keys.isEmpty) 0L else keys.min
+    val span = if (keys.isEmpty) 0L else keys.max - lo + 1
+    val dense = Seq(df.schema(cellCol).dataType, c.schema("label").dataType)
+      .forall(Set[DataType](ByteType, ShortType, IntegerType, LongType)) &&
+      span <= 2L * keys.size
+    val withCarr = if (dense) {
+      val table = new Array[Any](span.toInt)
+      for ((Some(k: Number), cs) <- arrays)
+        table((k.longValue - lo).toInt) = cs
+      val carr = org.apache.spark.sql.graftbridge.Bridge.column(
+        org.apache.spark.sql.catalyst.expressions.Literal.create(
+          table.toSeq, ArrayType(arrT)))
+      val cell = col(cellCol).cast("long")
+      // the cell stays the first column, where the join on it puts it
+      df.select(col(cellCol) +: df.columns.filter(_ != cellCol).map(col): _*)
+        .withColumn(carrC, when(cell.between(lo, lo + span - 1),
+          get(carr, (cell - lo).cast("int"))))
+    } else {
+      val carr = df.sparkSession.createDataFrame(
+        java.util.Arrays.asList(arrays.map { case (cell, cs) =>
+          Row(cell.orNull, cs) }: _*), StructType(Seq(
+          StructField(cellCol, c.schema("label").dataType),
+          StructField(carrC, arrT))))
+      df.join(broadcast(carr), Seq(cellCol), "left")
+    }
+    withCarr
       .withColumn(vecCol,
         when(col(carrC).isNull, raise_error(concat(
           lit("residualize: no centroid for cell "),

@@ -648,4 +648,38 @@ class PqSpec extends SparkSpec {
     assert(ex.getMessage.contains("vector/centroid dims differ for cell 1"),
       ex.getMessage)
   }
+
+  test("residualize: dense integral cells read one array literal, any " +
+      "other cells a broadcast join, with the same residuals") {
+    val docs = Seq((1L, 0L, Seq(1.0f, 2.0f)), (2L, 1L, Seq(3.0f, 4.0f)),
+      (3L, 1L, Seq(5.0f, 6.0f))).toDF("vec_id", "cell", "embedding")
+    def residuals(cells: DataFrame) = {
+      val cents = graft.scale.Similarity.centroids(
+        cells.select(col("cell").as("label"), col("embedding")),
+        "label", "embedding")
+      val re = Pq.residualize(cells, cents, "cell", "embedding")
+      // the cell stays the first column, as the join on it puts it
+      assert(re.columns.toSeq == Seq("cell", "vec_id", "embedding"))
+      (re.queryExecution.executedPlan.toString.contains("Broadcast"),
+        re.orderBy("vec_id").select("embedding").as[Seq[Double]].collect()
+          .toSeq)
+    }
+    val want = Seq(Seq(0.0, 0.0), Seq(-1.0, -1.0), Seq(1.0, 1.0))
+    assert(residuals(docs) == ((false, want)))
+    // a label that went empty leaves a hole: still dense, and a row in the
+    // hole has no centroid
+    val holed = docs.withColumn("cell", col("cell") * 2 + 5)
+    assert(residuals(holed) == ((false, want)))
+    val cents = graft.scale.Similarity.centroids(
+      holed.select(col("cell").as("label"), col("embedding")),
+      "label", "embedding")
+    val ex = intercept[Exception](Pq.residualize(
+      holed.withColumn("cell", lit(6L)), cents, "cell", "embedding").collect())
+    assert(ex.getMessage.contains("no centroid for cell 6"), ex.getMessage)
+    // sparse and string labels take the broadcast join
+    assert(residuals(docs.withColumn("cell", col("cell") * 1000)) ==
+      ((true, want)))
+    assert(residuals(docs.withColumn("cell", col("cell").cast("string"))) ==
+      ((true, want)))
+  }
 }

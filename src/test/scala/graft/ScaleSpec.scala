@@ -151,7 +151,9 @@ class ScaleSpec extends SparkSpec {
     // diameter 255 — one-hop label propagation would need 255 rounds and
     // blow the round budget; star contraction must finish well inside it
     val chain = (1L until 256L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val (ccDf, rounds) = Dedup.connectedComponentsWithStats(chain, maxIter = 20)
+    // cap = 0: the distributed loop, whose rounds this pins
+    val (ccDf, rounds) = Dedup.componentsWithStats(chain, "id_a", "id_b",
+      maxIter = 20, cap = 0)
     val cc = ccDf.as[(Long, Long)].collect().toMap
     assert(cc.size == 256 && cc.values.forall(_ == 1L))
     assert(rounds <= 10, s"diameter-255 chain took $rounds rounds")
@@ -162,13 +164,16 @@ class ScaleSpec extends SparkSpec {
     // edge set (e.g. re-contracting a stored labeling with no new pairs)
     // must cost no contraction rounds at all — the incremental fast path
     val forest = Seq((1L, 2L), (1L, 3L), (7L, 9L)).toDF("id_a", "id_b")
-    val (ccDf, rounds) = Dedup.connectedComponentsWithStats(forest)
+    // cap = 0: the distributed loop, whose rounds this pins
+    val (ccDf, rounds) = Dedup.componentsWithStats(forest, "id_a", "id_b",
+      maxIter = 50, cap = 0)
     assert(rounds == 0)
     assert(ccDf.as[(Long, Long)].collect().toMap ==
       Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 7L))
     // near-forest (one extra pair merging two stars) converges in ≤ 2
     val merged = forest.unionByName(Seq((3L, 9L)).toDF("id_a", "id_b"))
-    val (mDf, mRounds) = Dedup.connectedComponentsWithStats(merged)
+    val (mDf, mRounds) = Dedup.componentsWithStats(merged, "id_a", "id_b",
+      maxIter = 50, cap = 0)
     assert(mRounds <= 2, s"near-forest took $mRounds rounds")
     assert(mDf.as[(Long, Long)].collect().toMap ==
       Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 1L, 9L -> 1L))
