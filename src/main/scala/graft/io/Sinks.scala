@@ -1,7 +1,7 @@
 package graft.io
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -63,6 +63,16 @@ object Sinks {
     * Sync.ps1:441-449) — plan-time metadata, driver-side by design. */
   def missingColumns(source: StructType, target: StructType): Seq[String] =
     source.fieldNames.toSeq.filterNot(target.fieldNames.toSet)
+
+  /** An observed count metric (`df.observe(obs, count(lit(1)).as(name))`),
+    * available once the action that carries it has finished; a count over
+    * an empty frame is 0, never null. */
+  private[graft] def observed(obs: Observation, name: String): Long =
+    obs.get(name) match {
+      case l: java.lang.Long => l.longValue
+      case x => throw new IllegalStateException(
+        s"unexpected observed count '$name': $x")
+    }
 
   /** Atomic keyed overwrite for file-backed tables: write to a sibling temp
     * directory, then swap via rename — the file-based equivalent of the

@@ -517,7 +517,7 @@ object CoverageQueries {
         (tbl("c"), "c", "t"), (st("a"), "a", "s"), (st("b"), "b", "s"),
         (st("c"), "c", "s")), Seq("a", "b", "c"))
       val (t3, s3) = (diffs("t"), diffs("s"))
-      def obsL(k: String) = graft.streaming.CommittedBatches.observed(ptObs, k)
+      def obsL(k: String) = graft.io.Sinks.observed(ptObs, k)
       Seq(
         ("a_rows", t3("n_a")),
         ("ab_diff", t3("d_b")),

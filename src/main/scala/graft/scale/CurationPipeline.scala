@@ -106,9 +106,11 @@ object CurationPipeline {
     (kept, provenance)
   }
 
-  /** Per-language corpus stats after curation. */
+  /** Per-language corpus stats after curation, in language order. The
+    * aggregate is a few rows, so it sorts inside one partition: a global
+    * `orderBy` would add a range-sampling job and a sort shuffle. */
   def stats(curated: DataFrame): DataFrame =
     curated.groupBy("predicted_lang")
       .agg(count(lit(1)).as("n_docs"))
-      .orderBy("predicted_lang")
+      .coalesce(1).sortWithinPartitions("predicted_lang")
 }

@@ -9,14 +9,14 @@ import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
-import graft.io.StateStore
+import graft.io.{Sinks, StateStore}
 
 /** The committed-micro-batch protocol — the one place it lives. Every
   * streaming operator ([[StreamDedup]], [[StreamSegmentDedup]],
   * [[StreamChunkDedup]], [[StreamRepeats]], [[StreamScd2]],
   * [[StreamIndex]], [[StreamSketch]]) is its batch body and its merge rule
   * on top of this layer. [[StreamSync]]'s MERGE is idempotent by itself:
-  * it shares only [[observed]], and its streams drain through [[drain]].
+  * its streams only drain through [[drain]].
   *
   * A store is named by a marker `prefix` under a `stateRoot` and holds one
   * or more sub-stores (parquet roots). Effectively-exactly-once under
@@ -154,14 +154,6 @@ object CommittedBatches {
     }
   }
 
-  /** An observed count metric; a count over an empty frame is 0, never
-    * null. */
-  def observed(obs: Observation, name: String): Long = obs.get(name) match {
-    case l: java.lang.Long => l.longValue
-    case x => throw new IllegalStateException(
-      s"unexpected observed count '$name': $x")
-  }
-
   /** Overwrite sub-store `subRoot`'s `batch=<id>` directory whole with
     * `df` (a replay rewrites it, never appends); returns the row count,
     * observed on the write job. */
@@ -169,7 +161,7 @@ object CommittedBatches {
     val obs = Observation()
     df.observe(obs, count(lit(1)).as("n"))
       .write.mode("overwrite").parquet(batchDir(subRoot, batchId))
-    observed(obs, "n")
+    Sinks.observed(obs, "n")
   }
 
   /** Cache a batch frame the body runs more than once (foreachBatch

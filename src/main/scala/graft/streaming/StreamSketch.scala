@@ -62,7 +62,7 @@ object StreamSketch {
       gridRoot: String, stateRoot: String): BatchResult = {
     val recObs = org.apache.spark.sql.Observation()
     commitGrid(spark, mkGrid(batch.observe(recObs, count(lit(1)).as("n"))),
-      CommittedBatches.observed(recObs, "n"), batchId, kind, gridRoot,
+      graft.io.Sinks.observed(recObs, "n"), batchId, kind, gridRoot,
       stateRoot)
   }
 

@@ -7,17 +7,21 @@ import graft.sync.{DocHash, IncrementalSync}
 
 /** §2.10: incremental sync as a Structured Streaming sink — a file-source
   * stream of document snapshots applied to the target via `foreachBatch`
-  * MERGE. Each micro-batch runs the same classify → upsert/delete → state
-  * carry-forward as the batch engine ([[IncrementalSync]]), so semantics are
-  * identical and the application stays idempotent; the checkpoint gives
-  * at-least-once delivery which idempotent MERGE upgrades to effectively
-  * exactly-once. The reference's poll loop (Invoke-ScheduledSync,
-  * Sync.ps1:774-809) is the degenerate form of this with
-  * `Trigger.AvailableNow`. */
+  * MERGE. Each micro-batch classifies like the batch engine and applies
+  * through the same main-table MERGE ([[IncrementalSync]], schema drift
+  * included) and child merge, so semantics are identical and the
+  * application stays idempotent; the checkpoint gives at-least-once
+  * delivery which idempotent MERGE upgrades to effectively exactly-once.
+  * The reference's poll loop (Invoke-ScheduledSync, Sync.ps1:774-809) is
+  * the degenerate form of this with `Trigger.AvailableNow`. */
 object StreamSync {
 
   /** Apply one micro-batch of source documents to the target (the
-    * foreachBatch body; also directly callable for tests).
+    * foreachBatch body; also directly callable for tests). A stream only
+    * adds and replaces: absent-from-batch ≠ deleted, so nothing is
+    * deleted and ids the batch does not carry keep their state hash. A
+    * batch carrying a column the target lacks widens the target (null for
+    * the documents it did not carry).
     *
     * `versionCol` orders same-id rows within a backlogged batch (newest
     * wins). Snapshot sources SHOULD carry one (an export timestamp or
@@ -31,15 +35,16 @@ object StreamSync {
     * per id), returns the child tables to merge in lockstep —
     * [[graft.sync.ChildSync.forSchema]] is the standard factory. When set,
     * the content hash covers the FULL document (arrays/nested included)
-    * so subtree-only edits classify as updated; stream semantics carry
-    * over to children: absent-from-batch ≠ deleted, so child rows are
-    * replaced only for parents present in the batch. */
+    * so subtree-only edits classify as updated; child rows are replaced
+    * only for parents present in the batch. */
   def applyBatch(spark: SparkSession, batch: DataFrame, targetPath: String,
       statePath: String, versionCol: Option[String] = None,
       childrenFor: Option[DataFrame => Seq[graft.sync.ChildSync]] = None)
       : graft.sync.SyncResult = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{col, count, row_number, when}
+    import IncrementalSync.{ChangeNew, ChangeUpdated, ChangeUnchanged,
+      ChangeDeleted}
     val order = versionCol match {
       case Some(v) => Seq(col(v).desc, col("doc_hash").desc)
       case None => Seq(col("doc_hash").desc)
@@ -51,27 +56,19 @@ object StreamSync {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
     val state = StateStore.load(spark, statePath)
-    // cached: the dedup window + classify join feed metrics, the upsert
-    // write, AND the state write — without this the pipeline runs 3x/batch
+    // cached: the dedup window + classify join feed the upsert write, the
+    // child writes AND the state write — without it they replay per action
     val classified = IncrementalSync.classify(current, state).cache()
     try {
       // the per-type tallies RIDE the upsert write as observed metrics
-      // (CollectMetrics) instead of running a separate count job per
-      // micro-batch; absent-from-batch ≠ deleted in a stream, so the
-      // deleted tally is pinned 0 exactly as the old
-      // metrics(filter(≠deleted)) computed it
-      import IncrementalSync.{ChangeNew, ChangeUpdated, ChangeUnchanged,
-        ChangeDeleted}
+      // instead of a separate count job per micro-batch; the deleted tally
+      // is 0 by the stream rule
       val mObs = org.apache.spark.sql.Observation()
       // count, not sum: a sum over an empty batch is NULL, a count is 0
       def cnt(t: String) = count(when(col("change_type") === t, 1L))
       val observed = classified.observe(mObs,
         cnt(ChangeNew).as("n_new"), cnt(ChangeUpdated).as("n_upd"),
         cnt(ChangeUnchanged).as("n_unch"))
-      val upserts = observed
-        .filter(col("change_type")
-          .isin(IncrementalSync.ChangeNew, IncrementalSync.ChangeUpdated))
-        .select(batch.columns.map(col): _*)
       val fs = new org.apache.hadoop.fs.Path(targetPath)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val targetExisted =
@@ -80,20 +77,13 @@ object StreamSync {
       // every column of the deduped current), so each child write reuses
       // the cached hash+window work instead of replaying it per action —
       // measured ~2x on the st_sync_children_update gate
-      val present = classified.filter(col("change_type") =!=
-        IncrementalSync.ChangeDeleted)
+      val present = classified.filter(col("change_type") =!= ChangeDeleted)
       val childSyncs = childrenFor.map(mk => mk(present.drop("change_type")))
-      // applyChildren's missing-table bootstrap uses "all surviving
-      // parent ids" — in a stream that is only THIS batch's ids
-      // (state-only docs are excluded by the no-delete rule). Enabling
-      // childrenFor after the target already holds docs from earlier
-      // batches would therefore materialize a child table missing every
-      // parent never re-sent — silent missing_children corruption. Fail
-      // loud instead, and fail BEFORE the main-table write so a guarded
-      // batch aborts cleanly: nothing mutated, nothing half-applied
-      // (previously the guard fired after atomicOverwrite, leaving the
-      // target holding this batch's upserts with the state never advanced
-      // — idempotent under replay, but not a clean abort).
+      // a missing child table bootstraps from "all surviving parent ids",
+      // which in a stream is only THIS batch's ids: once the target holds
+      // documents from earlier batches that would silently miss every
+      // parent never re-sent. Fail loud, BEFORE the main-table write, so
+      // a guarded batch aborts with nothing mutated.
       childSyncs.foreach(_.foreach { ch =>
         val cfs = new org.apache.hadoop.fs.Path(ch.targetPath)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -104,28 +94,21 @@ object StreamSync {
             "micro-batch cannot bootstrap children for parents it never " +
             "saw; run a snapshot sync (or full migration) first")
       })
-      val target =
-        if (targetExisted) spark.read.parquet(targetPath)
-        else batch.limit(0)
-      Sinks.atomicOverwrite(spark, Sinks.upsert(target, upserts, "_id"), targetPath)
-      // the write is done — the observed tallies are available now
-      def obsL(k: String) = CommittedBatches.observed(mObs, k)
+      Sinks.atomicOverwrite(spark, IncrementalSync.mergeTarget(
+        if (targetExisted) Some(spark.read.parquet(targetPath)) else None,
+        batch, observed, deletes = None), targetPath)
+      def obsL(k: String) = Sinks.observed(mObs, k)
       val result = graft.sync.SyncResult(
         obsL("n_new"), obsL("n_upd"), 0L, obsL("n_unch"), 0L)
-      // child tables merge AFTER the main write (FK direction: parent
-      // first); the stream's no-delete rule holds — only parents present
-      // in this batch have their child rows replaced.
+      // child tables merge AFTER the main write (FK direction: parent first)
       val childCounts = childSyncs.map { children =>
         IncrementalSync.applyChildren(spark, present, children,
           hasChanges = result.newDocs + result.updated > 0)
       }.getOrElse(Map.empty[String, graft.sync.ChildCounts])
       // carry previous hashes forward for ids not present in this batch
-      // (anti-join against CURRENT ids — classified also holds state-only rows)
-      val currentIds = classified
-        .filter(col("change_type") =!= IncrementalSync.ChangeDeleted)
-        .select("_id")
+      // (classified also holds state-only rows)
       val next = IncrementalSync.nextState(classified)
-        .unionByName(state.join(currentIds, Seq("_id"), "left_anti"))
+        .unionByName(state.join(present.select("_id"), Seq("_id"), "left_anti"))
       StateStore.save(spark, next, statePath)
       result.copy(children = childCounts)
     } finally classified.unpersist()

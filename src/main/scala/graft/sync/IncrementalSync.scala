@@ -77,20 +77,20 @@ object IncrementalSync {
   val ChangeDeleted = "deleted"
   val ChangeUnchanged = "unchanged"
 
-  /** Run one independent action per child table CONCURRENTLY (child
-    * tables never share files or state, so their reads/writes commute):
-    * Spark's scheduler interleaves the per-table jobs and fills the cores
-    * a sequential loop would leave idle — the same pattern as
-    * fullMigration's parallel table writes. Returns the per-child results
-    * in input order. */
-  private def mapChildrenConcurrently[T](children: Seq[ChildSync])(
-      body: ChildSync => T): Seq[T] =
-    graft.io.Concurrency.mapBounded(children)(body)
-
   /** The report-facing name of a child table: its path's basename minus
     * the parquet extension (the name [[ChildSync.forSchema]] lays out). */
   private[graft] def childNameOf(path: String): String =
     new Path(path).getName.stripSuffix(".parquet")
+
+  private def fsOf(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** A key's bucket in the changed-bucket layout, from the STRING form of
+    * the key: the state table stores `_id` as string, so hashing the cast
+    * keeps the current, state, target and child rows of one key in one
+    * bucket regardless of the source's id type. */
+  private def bucketOf(c: Column, buckets: Int): Column =
+    pmod(hash(c.cast("string")), lit(buckets))
 
   /** Classify `current` (must carry `_id` and `hashCol`) against `state`
     * (`_id`, `hash`): full-outer join + hash compare (Sync.ps1:113-168).
@@ -111,39 +111,33 @@ object IncrementalSync {
       .drop("state_id", "state_hash")
   }
 
+  private def resultOf(counts: Map[String, Long]): SyncResult = SyncResult(
+    counts.getOrElse(ChangeNew, 0L), counts.getOrElse(ChangeUpdated, 0L),
+    counts.getOrElse(ChangeDeleted, 0L), counts.getOrElse(ChangeUnchanged, 0L),
+    0L)
+
   /** A9: change-type tallies from a classified diff. */
-  def metrics(classified: DataFrame): SyncResult = {
-    val counts = graft.io.Label(classified.sparkSession.sparkContext,
+  def metrics(classified: DataFrame): SyncResult =
+    resultOf(graft.io.Label(classified.sparkSession.sparkContext,
         "sync:classify-metrics") {
       classified.groupBy("change_type").count().collect()
-    }.map(r => r.getString(0) -> r.getLong(1)).toMap
-    SyncResult(
-      counts.getOrElse(ChangeNew, 0L), counts.getOrElse(ChangeUpdated, 0L),
-      counts.getOrElse(ChangeDeleted, 0L), counts.getOrElse(ChangeUnchanged, 0L), 0L)
-  }
+    }.map(r => r.getString(0) -> r.getLong(1)).toMap)
 
-  /** [[metrics]] AND the churned bucket set in ONE aggregation job (the
-    * partitioned/feed modes previously paid one collect for each): per
+  /** [[metrics]] AND the churned bucket set in ONE aggregation job: per
     * change type, the row count plus the collect_set of the type's
     * buckets (≤ `buckets` elements per group — driver-bounded); the
-    * changed set is the union over the non-unchanged groups. Values are
-    * identical to the two-job form by construction. */
-  private def metricsAndChangedBuckets(classified: DataFrame,
-      bucketOf: Column => Column,
+    * changed set is the union over the non-unchanged groups. */
+  private def metricsAndChangedBuckets(classified: DataFrame, buckets: Int,
       label: String = "sync:classify-metrics"): (SyncResult, Seq[Int]) = {
     val rows = graft.io.Label(classified.sparkSession.sparkContext, label) {
       classified.groupBy("change_type")
         .agg(count(lit(1)).as("n"),
-          collect_set(bucketOf(col("_id"))).as("bks"))
+          collect_set(bucketOf(col("_id"), buckets)).as("bks"))
         .collect()
     }
-    val counts = rows.map(r => r.getString(0) -> r.getLong(1)).toMap
     val changed = rows.filter(_.getString(0) != ChangeUnchanged)
       .flatMap(_.getSeq[Int](2)).distinct.sorted.toSeq
-    (SyncResult(
-      counts.getOrElse(ChangeNew, 0L), counts.getOrElse(ChangeUpdated, 0L),
-      counts.getOrElse(ChangeDeleted, 0L),
-      counts.getOrElse(ChangeUnchanged, 0L), 0L), changed)
+    (resultOf(rows.map(r => r.getString(0) -> r.getLong(1)).toMap), changed)
   }
 
   /** J3: next sync state — fresh hashes for present docs (new/updated get the
@@ -152,6 +146,9 @@ object IncrementalSync {
   def nextState(classified: DataFrame, hashCol: String = "doc_hash"): DataFrame =
     classified.filter(col("change_type") =!= ChangeDeleted)
       .select(col("_id"), col(hashCol).as("hash"))
+
+  private def deletedIds(classified: DataFrame): DataFrame =
+    classified.filter(col("change_type") === ChangeDeleted).select("_id")
 
   /** A source already carrying `hashCol` is trusted verbatim — the caller
     * chose the canon. Otherwise [[DocHash.forSync]] picks it: the full
@@ -165,149 +162,94 @@ object IncrementalSync {
     if (source.columns.contains(hashCol)) source
     else DocHash.forSync(source, childTables, Set.empty, hashCol)
 
-  /** Apply one sync's change set to the child tables (whole-table-swap
-    * form, the [[run]] mode): every changed parent's child rows (updated,
-    * AND deleted — orphan cleanup) are dropped, the re-decomposed rows of
-    * new/updated parents inserted; untouched parents' rows pass through
-    * the same single anti-join. A child table missing on disk bootstraps
-    * from ALL surviving parent ids. Runs AFTER the main-table write, so a
-    * reader always sees main-table changes no later than child changes
-    * (the FK direction that never fabricates orphans: a child row's
-    * parent is already live). */
-  private[graft] def applyChildren(spark: SparkSession,
-      classified: DataFrame, children: Seq[ChildSync],
-      hasChanges: Boolean = true): Map[String, ChildCounts] = {
-    if (children.isEmpty) return Map.empty
-    val changedIds = classified
-      .filter(col("change_type") =!= ChangeUnchanged).select("_id")
-    val upsertIds = classified
-      .filter(col("change_type").isin(ChangeNew, ChangeUpdated)).select("_id")
-    val allIds = classified
-      .filter(col("change_type") =!= ChangeDeleted).select("_id")
-    mapChildrenConcurrently(children) { ch =>
-      val fs = new Path(ch.targetPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val exists = fs.exists(new Path(ch.targetPath))
-      // a no-change sync leaves existing child tables byte-untouched
-      // (same contract as the main table's changed-bucket scoping); a
-      // MISSING child still bootstraps so a pre-child-sync layout heals
-      if (!exists || hasChanges) {
-        // tallies ride the write job as observed metrics (CollectMetrics)
-        // — zero extra Spark jobs vs the untallied merge: inserted counts
-        // the re-decomposed rows as they stream into the union; removed =
-        // prior − kept, both observed on the prior-table scan the merge
-        // already performs
-        val insObs = Observation()
-        val newRowsRaw = ch.rows(if (exists) upsertIds else allIds)
-        val newRows = newRowsRaw.observe(insObs, count(lit(1)).as("n"))
-        val (merged, removed) =
-          if (!exists) (newRows, () => 0L)
-          else {
-            val priorObs = Observation()
-            val keptObs = Observation()
-            val kept = spark.read.parquet(ch.targetPath)
-              .observe(priorObs, count(lit(1)).as("n"))
-              .join(changedIds.withColumnRenamed("_id", ch.fkColumn),
-                Seq(ch.fkColumn), "left_anti")
-              .observe(keptObs, count(lit(1)).as("n"))
-            // S16 drift in either direction re-aligns both sides onto the
-            // superset schema before the union
-            val m =
-              if (Sinks.missingColumns(newRows.schema, kept.schema).nonEmpty ||
-                  Sinks.missingColumns(kept.schema, newRows.schema).nonEmpty)
-                Sinks.mergeSchemas(kept, newRows)
-              else kept.unionByName(newRows)
-            (m, () => obsN(priorObs) - obsN(keptObs))
-          }
-        Sinks.atomicOverwrite(spark, merged, ch.targetPath)
-        childNameOf(ch.targetPath) -> ChildCounts(obsN(insObs), removed())
-      } else childNameOf(ch.targetPath) -> ChildCounts(0L, 0L)
-    }.toMap
-  }
-
-  /** The observed row count of a completed write (the metrics are
-    * available as soon as the single write action finishes). */
-  private def obsN(o: Observation): Long =
-    o.get("n") match { case l: java.lang.Long => l.longValue; case x =>
-      throw new IllegalStateException(s"unexpected observed count: $x") }
-
-  /** [[applyChildren]] in the changed-bucket-only layout (the
-    * [[runPartitioned]] mode): the child shares the PARENT-id hash
-    * bucketing (`__bucket = pmod(hash(fk), buckets)`, and fk IS the parent
-    * id), so the buckets churned by the main sync are exactly the buckets
-    * holding every affected child row — the pruned read, the staged
-    * rename-aside swap, and the crash protocol all carry over verbatim.
-    * A plain child table (fullMigration bootstrap) adopts the bucketed
-    * layout on its first sync, like the main table. */
-  private def applyChildPartitioned(spark: SparkSession, ch: ChildSync,
-      classified: DataFrame, changedBuckets: Seq[Int], buckets: Int,
-      bucketOf: Column => Column): (String, ChildCounts) =
-    graft.io.Label(spark.sparkContext,
-        s"sync:child ${childNameOf(ch.targetPath)}") {
-      applyChildPartitioned0(spark, ch, classified, changedBuckets, buckets,
-        bucketOf)
+  /** The main-table MERGE every sync writer applies (the reference's
+    * per-document insert/update/delete statements, Sync.ps1:543-718):
+    * S16/U2/F7 drift first — source columns the prior target lacks join it
+    * as nullable columns (Update-SQLSchema, Sync.ps1:90-99, 395-477), since
+    * the upsert aligns to the target schema and would otherwise drop them
+    * — then the new and updated rows of `classified` replace their keys
+    * and `deletes` drop theirs. `prior` is None when the target holds no
+    * data yet: the empty base then takes the source's own schema. The
+    * sync's hash column never lands in the target. MERGE-shaped
+    * application is idempotent, so a replayed sync is safe. */
+  private[graft] def mergeTarget(prior: Option[DataFrame], source: DataFrame,
+      classified: DataFrame, deletes: Option[DataFrame],
+      hashCol: String = "doc_hash"): DataFrame = {
+    val data = source.select(
+      source.columns.filterNot(_ == hashCol).map(col).toSeq: _*)
+    val base = prior match {
+      case None => data.limit(0)
+      case Some(t) if Sinks.missingColumns(data.schema, t.schema).nonEmpty =>
+        Sinks.mergeSchemas(t, data.limit(0))
+      case Some(t) => t
     }
-
-  private def applyChildPartitioned0(spark: SparkSession, ch: ChildSync,
-      classified: DataFrame, changedBuckets: Seq[Int], buckets: Int,
-      bucketOf: Column => Column): (String, ChildCounts) = {
-    val fs = new Path(ch.targetPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val changedIds = classified
-      .filter(col("change_type") =!= ChangeUnchanged).select("_id")
-    val upsertIds = classified
-      .filter(col("change_type").isin(ChangeNew, ChangeUpdated)).select("_id")
-    val allIds = classified
-      .filter(col("change_type") =!= ChangeDeleted).select("_id")
-    val (bucketed, legacy) = layoutOf(fs, ch.targetPath)
-    val hasData = bucketed || legacy.nonEmpty
-    val convert = !bucketed && legacy.nonEmpty
-    // tallies ride the single staged write as observed metrics
-    // (CollectMetrics) — zero extra Spark jobs, and the prior-rows side
-    // is the bucket-pruned scan the merge already performs
-    val insObs = Observation()
-    val priorObs = Observation()
-    val keptObs = Observation()
-    val newRowsRaw = ch.rows(if (hasData) upsertIds else allIds)
-    val newRows = newRowsRaw.observe(insObs, count(lit(1)).as("n"))
-    // S16 drift stays CHURN-SCOPED: the evolved superset schema is stamped
-    // table-level (see [[stampSchema]]) and every read goes through the
-    // schema-pinned [[readTarget]], so a mixed-schema layout reads
-    // correctly and a drifting sync still rewrites only its changed
-    // buckets — at 100 TB a one-column drift must not rewrite the corpus
-    val rewrite =
-      if (convert || !hasData) (0 until buckets).toSeq
-      else changedBuckets
-    val target0 =
-      if (!hasData) newRowsRaw.limit(0)
-      else if (convert) readTarget(spark, ch.targetPath)
-      else readTarget(spark, ch.targetPath)
-        .filter(col("__bucket").isin(changedBuckets: _*)).drop("__bucket")
-    val kept0 =
-      if (hasData) target0.observe(priorObs, count(lit(1)).as("n"))
-      else target0
-    val kept1 = kept0.join(changedIds.withColumnRenamed("_id", ch.fkColumn),
-      Seq(ch.fkColumn), "left_anti")
-    val kept = if (hasData) kept1.observe(keptObs, count(lit(1)).as("n"))
-      else kept1
-    val merged =
-      if (Sinks.missingColumns(newRows.schema, kept.schema).nonEmpty ||
-          Sinks.missingColumns(kept.schema, newRows.schema).nonEmpty)
-        Sinks.mergeSchemas(kept, newRows)
-      else kept.unionByName(newRows)
-    // stamp the (possibly evolved) superset schema BEFORE the swap — the
-    // lossless crash direction, see [[stampSchema]] — but only onto an
-    // EXISTING layout: the stamp must never conjure the directory ahead
-    // of the data (existence checks key off the directory)
-    if (hasData) stampSchema(fs, ch.targetPath, merged.schema)
-    stageAndSwapBuckets(spark,
-      merged.withColumn("__bucket", bucketOf(col(ch.fkColumn))),
-      ch.targetPath, rewrite, legacy, clusterWrite = convert || !hasData)
-    stampBucketCount(fs, ch.targetPath, buckets)
-    stampSchema(fs, ch.targetPath, merged.schema)
-    val removed = if (hasData) obsN(priorObs) - obsN(keptObs) else 0L
-    childNameOf(ch.targetPath) -> ChildCounts(obsN(insObs), removed)
+    val upserted = Sinks.upsert(base, classified
+      .filter(col("change_type").isin(ChangeNew, ChangeUpdated))
+      .select(source.columns.map(col).toSeq: _*), "_id")
+    deletes.fold(upserted)(Sinks.delete(upserted, _, "_id"))
   }
+
+  /** One child table's merge, whatever its layout (only the prior read and
+    * the write differ): every changed parent's prior rows (updated AND
+    * deleted — orphan cleanup) go in one fk anti-join, and the
+    * re-decomposed rows of new and updated parents are added — of every
+    * surviving parent when the child holds no data yet (`prior` None, the
+    * bootstrap that heals a pre-child-sync layout). S16 drift in either
+    * direction re-aligns both sides onto the superset schema. `changes` is
+    * the (`_id`, `change_type`) diff, deletes included. The tallies ride
+    * the write job as observed metrics (zero extra jobs) — inserted counts
+    * the re-decomposed rows, deleted = prior − kept rows, both observed on
+    * the scan the merge performs — so read them after the write. */
+  private def childMerge(ch: ChildSync, changes: DataFrame,
+      prior: Option[DataFrame]): (DataFrame, () => ChildCounts) = {
+    def ids(keep: Column) = changes.filter(keep).select("_id")
+    def n(o: Observation) = Sinks.observed(o, "n")
+    val insObs = Observation()
+    val newRows = ch.rows(
+      if (prior.isEmpty) ids(col("change_type") =!= ChangeDeleted)
+      else ids(col("change_type").isin(ChangeNew, ChangeUpdated)))
+      .observe(insObs, count(lit(1)).as("n"))
+    prior match {
+      case None => (newRows, () => ChildCounts(n(insObs), 0L))
+      case Some(p) =>
+        val priorObs = Observation()
+        val keptObs = Observation()
+        val kept = p.observe(priorObs, count(lit(1)).as("n"))
+          .join(ids(col("change_type") =!= ChangeUnchanged)
+            .withColumnRenamed("_id", ch.fkColumn), Seq(ch.fkColumn),
+            "left_anti")
+          .observe(keptObs, count(lit(1)).as("n"))
+        val merged =
+          if (Sinks.missingColumns(newRows.schema, kept.schema).nonEmpty ||
+              Sinks.missingColumns(kept.schema, newRows.schema).nonEmpty)
+            Sinks.mergeSchemas(kept, newRows)
+          else kept.unionByName(newRows)
+        (merged, () => ChildCounts(n(insObs), n(priorObs) - n(keptObs)))
+    }
+  }
+
+  /** Apply one sync's change set to the child tables in the whole-table
+    * form (the [[run]] mode and the streaming snapshot sync): each child
+    * is rewritten by [[Sinks.atomicOverwrite]]; a missing one bootstraps.
+    * Runs AFTER the main-table write, so a reader always sees main-table
+    * changes no later than child changes (the FK direction that never
+    * fabricates orphans: a child row's parent is already live). A
+    * no-change sync leaves existing child tables byte-untouched. Child
+    * tables never share files or state, so they apply concurrently. */
+  private[graft] def applyChildren(spark: SparkSession,
+      changes: DataFrame, children: Seq[ChildSync],
+      hasChanges: Boolean = true): Map[String, ChildCounts] =
+    graft.io.Concurrency.mapBounded(children) { ch =>
+      val exists = fsOf(spark, ch.targetPath).exists(new Path(ch.targetPath))
+      childNameOf(ch.targetPath) -> (
+        if (exists && !hasChanges) ChildCounts(0L, 0L)
+        else {
+          val (merged, counts) = childMerge(ch, changes,
+            if (exists) Some(spark.read.parquet(ch.targetPath)) else None)
+          Sinks.atomicOverwrite(spark, merged, ch.targetPath)
+          counts()
+        })
+    }.toMap
 
   /** [[run]] against BUCKETED catalog tables — the 100 TB shape promised in
     * SCALE.md: `targetTable` and `stateTable` are parquet tables
@@ -341,7 +283,6 @@ object IncrementalSync {
   def runBucketed(spark: SparkSession, source: DataFrame, targetTable: String,
       stateTable: String, buckets: Int,
       hashCol: String = "doc_hash"): SyncResult = {
-    import graft.io.Bucketing
     val current = currentWithHash(source, hashCol, childTables = false)
     val state =
       if (spark.catalog.tableExists(stateTable)) spark.table(stateTable)
@@ -349,21 +290,9 @@ object IncrementalSync {
     val classified = classify(current, state, hashCol).cache()
     try {
       val result = metrics(classified)
-      // S16 drift, same as [[run]]: new source columns become nullable
-      // target columns BEFORE the merge (upsert aligns to the target
-      // schema, which would otherwise silently drop them)
-      val target0 = spark.table(targetTable)
-      val target =
-        if (Sinks.missingColumns(source.schema, target0.schema).nonEmpty)
-          Sinks.mergeSchemas(target0, source.limit(0))
-        else target0
-      val upserts = classified
-        .filter(col("change_type").isin(ChangeNew, ChangeUpdated))
-        .select(source.columns.map(col): _*)
-      val deletes = classified.filter(col("change_type") === ChangeDeleted)
-        .select("_id")
-      val merged = Sinks.delete(Sinks.upsert(target, upserts, "_id"), deletes, "_id")
-      replaceViaViewFlip(spark, targetTable, merged, buckets)
+      replaceViaViewFlip(spark, targetTable, mergeTarget(
+        Some(spark.table(targetTable)), source, classified,
+        Some(deletedIds(classified)), hashCol), buckets)
       replaceViaViewFlip(spark, stateTable, nextState(classified, hashCol), buckets)
       result
     } finally classified.unpersist()
@@ -430,29 +359,7 @@ object IncrementalSync {
       hashCol: String = "doc_hash",
       children: Seq[ChildSync] = Seq.empty): SyncResult = {
     require(buckets >= 1, s"buckets must be positive: $buckets")
-    // bucket from the STRING form of the key: the state table stores _id
-    // as string, so hashing the cast keeps current/state/target rows of
-    // one key in one bucket regardless of the source's id type
-    def bucketOf(c: Column): Column = pmod(hash(c.cast("string")), lit(buckets))
-    val fs = new Path(targetPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // crash recovery FIRST: a staging dir with a committed manifest holds
-    // the ONLY copy of its buckets' data (local-checkpoint of the swap) —
-    // roll it forward before anything reads either table; discarding it,
-    // as the pre-roll-forward protocol did, was silent permanent loss
-    recoverStaging(fs, targetPath)
-    recoverStaging(fs, statePath)
-    children.foreach { ch =>
-      val cfs = new Path(ch.targetPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      recoverStaging(cfs, ch.targetPath)
-      verifyBucketCount(cfs, ch.targetPath, buckets)
-    }
-    // bucket-count pin: __bucket is a pure function of (id, count), so a
-    // different count would map ids to other buckets — the pruned read
-    // misses their old rows while stale directories keep serving them
-    verifyBucketCount(fs, targetPath, buckets)
-    verifyBucketCount(fs, statePath, buckets)
+    prepareLayouts(spark, targetPath, statePath, buckets, children)
     val current = currentWithHash(source, hashCol, children.nonEmpty)
     val state = {
       val st = StateStore.load(spark, statePath)
@@ -460,171 +367,63 @@ object IncrementalSync {
     }
     val classified = classify(current, state, hashCol).cache()
     try {
-      // tallies + churned buckets in ONE job (previously two collects
-      // over the same cached diff — guide §1.2)
-      val (result, changed) = metricsAndChangedBuckets(classified, bucketOf)
-      if (changed.nonEmpty) {
-        val srcData = source.select(
-          source.columns.filterNot(_ == hashCol).map(col): _*)
-        val (tgtBucketed, tgtLegacy) = layoutOf(fs, targetPath)
-        val hasData = tgtBucketed || tgtLegacy.nonEmpty
-        // one-time in-place ADOPTION of a plain parquet table (e.g. a
-        // fullMigration bootstrap): the whole table rewrites into the
-        // __bucket=K layout this sync, and the legacy data files are
-        // removed through the swap manifest (crash-safe — a reader after
-        // recovery never sees legacy + bucketed rows together)
-        val convert = !tgtBucketed && tgtLegacy.nonEmpty
-        // S16 drift stays CHURN-SCOPED (round-14: previously a drift
-        // forced a full all-bucket rewrite): the evolved superset schema
-        // is stamped table-level before the swap and every read of the
-        // layout goes through the schema-pinned [[readTarget]], so the
-        // mixed-schema layout a partial rewrite leaves behind reads
-        // correctly — pre-drift files surface the new columns as null.
-        // (In snapshot mode a drift changes every doc hash, so `changed`
-        // usually covers every bucket anyway; the scoping matters for the
-        // feed path, where a 1-row drift batch must not rewrite 100 TB.)
-        val rewrite =
-          if (convert) (0 until buckets).toSeq else changed
-        // partition-pruned scan: only the rewritten buckets' files are read
-        val target0 =
-          if (!hasData) srcData.limit(0)
-          else if (convert) readTarget(spark, targetPath)
-          else readTarget(spark, targetPath)
-            .filter(col("__bucket").isin(changed: _*)).drop("__bucket")
-        val target =
-          if (Sinks.missingColumns(srcData.schema, target0.schema).nonEmpty)
-            Sinks.mergeSchemas(target0, srcData.limit(0))
-          else target0
-        val upserts = classified
-          .filter(col("change_type").isin(ChangeNew, ChangeUpdated))
-          .select(source.columns.map(col): _*)
-        val deletes = classified.filter(col("change_type") === ChangeDeleted)
-          .select("_id")
-        val merged = Sinks
-          .delete(Sinks.upsert(target, upserts, "_id"), deletes, "_id")
-          .withColumn("__bucket", bucketOf(col("_id")))
-        if (hasData) stampSchema(fs, targetPath, merged.schema)
-        stageAndSwapBuckets(spark, merged, targetPath, rewrite, tgtLegacy,
-          clusterWrite = convert || !hasData)
-        // scoped state: the changed buckets' full surviving id/hash sets
-        // (unchanged ids sharing a changed bucket ride along — their
-        // carry-forward hash is identical, so the rewrite is value-stable).
-        // State schema never drifts (_id/hash strings), so it stays scoped
-        // to the churned buckets even when the target does a drift rewrite
-        val (stBucketed, stLegacy) = layoutOf(fs, statePath)
-        val stConvert = !stBucketed && stLegacy.nonEmpty
-        val nextSt0 = nextState(classified, hashCol)
-          .select(col("_id").cast("string").as("_id"),
-            col("hash").cast("string").as("hash"))
-          .withColumn("__bucket", bucketOf(col("_id")))
-        val nextSt =
-          if (stConvert) nextSt0
-          else nextSt0.filter(col("__bucket").isin(changed: _*))
-        stageAndSwapBuckets(spark, nextSt, statePath,
-          if (stConvert) (0 until buckets).toSeq else changed, stLegacy,
-          clusterWrite = stConvert || !hasData)
-        // stamp AFTER the write: the metadata file must never create the
-        // layout directory ahead of the data (an empty-but-present dir
-        // breaks first-sync schema inference and the bootstrap checks)
-        stampBucketCount(fs, targetPath, buckets)
-        stampBucketCount(fs, statePath, buckets)
-        stampSchema(fs, targetPath, merged.schema)
-        // child tables ride the SAME changed-bucket set (fk = parent id,
-        // same hash), after the main write (FK direction: parent first);
-        // independent tables, so they apply concurrently
-        val childCounts = mapChildrenConcurrently(children)(ch =>
-          applyChildPartitioned(spark, ch, classified, changed, buckets,
-            bucketOf)).toMap
-        result.copy(children = childCounts)
-      } else {
-        // no churn, but a MISSING child table still bootstraps from all
-        // surviving ids (heals a pre-child-sync layout) — the same
-        // contract the whole-table mode's applyChildren keeps
-        val missing = children.filter { ch =>
-          val cfs = new Path(ch.targetPath)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          !cfs.exists(new Path(ch.targetPath))
-        }
-        val healed = mapChildrenConcurrently(missing)(ch =>
-          applyChildPartitioned(spark, ch, classified, Seq.empty, buckets,
-            bucketOf)).toMap
-        // untouched children still report a (0, 0) entry so the tallies
-        // map covers every synced child in every mode
-        val untouched = children.map(ch => childNameOf(ch.targetPath))
-          .filterNot(healed.contains).map(_ -> ChildCounts(0L, 0L)).toMap
-        result.copy(children = untouched ++ healed)
-      }
+      val (result, changed) = metricsAndChangedBuckets(classified, buckets)
+      result.copy(children = applyBuckets(spark, targetPath, statePath,
+        buckets, changed, classified, nextState(classified, hashCol),
+        children)(prior => mergeTarget(prior, source, classified,
+          Some(deletedIds(classified)), hashCol)))
     } finally classified.unpersist()
   }
 
-  /** Change-feed-driven sync (round-11 verdict item 6): when the caller
-    * ALREADY has a CDC feed — `upserts` (full current rows of new/updated
-    * docs) and `deletes` (ids) — the full-snapshot-vs-full-state diff join
-    * that [[runPartitioned]] pays every sync is pure waste: at 100 TB with
-    * 0.1% churn that J1 join dominates even though the write path is
-    * bucket-pruned. This variant classifies the FEED against the
-    * bucket-pruned state (reads only the feed ids' state buckets — cost ∝
-    * churn on both the read and write side) and reuses the identical
-    * changed-bucket apply: same staging/rename-aside swap, same crash
-    * roll-forward, same bucket-count pin, same child-table lockstep. The
-    * result is bit-equal to running the snapshot diff over a snapshot that
-    * embodies the same churn (gate `o3_sync_changefeed` proves it);
-    * snapshot-diff remains the default and the oracle mode — a feed that
-    * under-reports churn cannot be detected here by construction, which
-    * is exactly the caller's CDC contract.
+  /** Change-feed-driven sync: when the caller ALREADY has a CDC feed —
+    * `upserts` (full current rows of new/updated docs) and `deletes` (ids)
+    * — the full-snapshot-vs-full-state diff join that [[runPartitioned]]
+    * pays every sync is pure waste: at 100 TB with 0.1% churn that J1 join
+    * dominates even though the write path is bucket-pruned. This variant
+    * classifies the FEED against the bucket-pruned state (reads only the
+    * feed ids' state buckets — cost ∝ churn on both the read and write
+    * side), then applies through the same changed-bucket apply as
+    * [[runPartitioned]]. The result is bit-equal to running the snapshot
+    * diff over a snapshot that embodies the same churn (gate
+    * `o3_sync_changefeed` proves it); snapshot-diff remains the default
+    * and the oracle mode — a feed that under-reports churn cannot be
+    * detected here by construction, which is exactly the caller's CDC
+    * contract.
     *
-    * An id on BOTH sides of one feed batch has no defined order — fail
-    * loud. An id deleted but unknown to state is ignored (idempotent
-    * replay of a delete). An upsert row whose hash equals its state hash
-    * counts `unchanged` and rewrites nothing. */
+    * A feed cannot bootstrap: the target, its state and every child table
+    * must already exist. An id on BOTH sides of one feed batch has no
+    * defined order — fail loud. An id deleted but unknown to state is
+    * ignored (idempotent replay of a delete). An upsert row whose hash
+    * equals its state hash counts `unchanged` and rewrites nothing. */
   def runFromChangeFeed(spark: SparkSession, upserts: DataFrame,
       deletes: DataFrame, targetPath: String, statePath: String,
       buckets: Int, hashCol: String = "doc_hash",
       children: Seq[ChildSync] = Seq.empty): SyncResult = {
     require(buckets >= 1, s"buckets must be positive: $buckets")
-    def bucketOf(c: Column): Column = pmod(hash(c.cast("string")), lit(buckets))
-    val fs = new Path(targetPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverStaging(fs, targetPath)
-    recoverStaging(fs, statePath)
+    prepareLayouts(spark, targetPath, statePath, buckets, children)
+    // a feed never sees the full corpus: a missing child, target or state
+    // would silently materialize holding only the churned docs (and
+    // deletes of docs the empty state never saw would be dropped as
+    // "unknown") — fail loud instead
     children.foreach { ch =>
-      val cfs = new Path(ch.targetPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      recoverStaging(cfs, ch.targetPath)
-      verifyBucketCount(cfs, ch.targetPath, buckets)
-    }
-    verifyBucketCount(fs, targetPath, buckets)
-    verifyBucketCount(fs, statePath, buckets)
-    // a feed never sees the full corpus, so it CANNOT bootstrap a child
-    // table (the snapshot modes bootstrap from all surviving ids) — a
-    // missing child here would silently materialize holding only the
-    // churned docs; fail loud instead
-    children.foreach { ch =>
-      val cfs = new Path(ch.targetPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      require(cfs.exists(new Path(ch.targetPath)),
+      require(fsOf(spark, ch.targetPath).exists(new Path(ch.targetPath)),
         s"runFromChangeFeed: child table ${ch.targetPath} does not exist — " +
           "feed-driven sync cannot bootstrap children; run a snapshot " +
           "sync (or full migration) first")
     }
-    // the same silent-bootstrap hazard applies to the MAIN table: a feed
-    // only carries churn, so a first-ever feed sync would materialize a
-    // target/state holding only the feed's docs (and deletes of docs the
-    // empty state never saw would be dropped as "unknown"). Fail loud.
+    val fs = fsOf(spark, targetPath)
     require(fs.exists(new Path(targetPath)) && fs.exists(new Path(statePath)),
       s"runFromChangeFeed: target ($targetPath) or sync state ($statePath) " +
         "does not exist — a change feed cannot bootstrap a corpus; run a " +
         "snapshot sync (or full migration) first")
     val current = currentWithHash(upserts, hashCol, children.nonEmpty)
     // ambiguity guard AND bucket footprint in ONE aggregation job (this
-    // runs per micro-batch on the hot streaming path, so guard overhead
-    // matters; they previously ran as two jobs over the same id union):
-    // an id on both sides of one batch, or twice on the upsert side, has
-    // no defined order — fail loud rather than guess — and the feed's
-    // bucket set (bounded collect ≤ buckets values) prunes the STATE
-    // read, the step that replaces the full-corpus diff join. Only the
-    // FAILURE path re-runs the detailed per-id probe, to keep the exact
-    // diagnostic.
+    // runs per micro-batch on the hot streaming path): an id on both sides
+    // of one batch, or twice on the upsert side, has no defined order —
+    // fail loud rather than guess — and the feed's bucket set (bounded
+    // collect ≤ buckets values) prunes the STATE read, the step that
+    // replaces the full-corpus diff join. Only the FAILURE path re-runs
+    // the detailed per-id probe, to keep the exact diagnostic.
     val idTags = current.select(col("_id"),
         lit(1L).as("__up"), lit(0L).as("__del"))
       .unionByName(deletes.select(col("_id"),
@@ -633,7 +432,7 @@ object IncrementalSync {
         "feed:ambiguity-guard") {
       idTags.groupBy("_id")
         .agg(sum("__up").as("__up"), sum("__del").as("__del"),
-          first(bucketOf(col("_id"))).as("__b"))
+          first(bucketOf(col("_id"), buckets)).as("__b"))
         .agg(
           sum(when(col("__up") > 1 ||
             (col("__up") > 0 && col("__del") > 0), 1L).otherwise(0L))
@@ -674,75 +473,126 @@ object IncrementalSync {
     val delIds = deletes.select("_id")
       .join(state.select("_id"), Seq("_id"), "left_semi").cache()
     try {
-      // per-type tallies AND the churned bucket set in ONE job over the
-      // union of the cached classify/delete frames (previously three
-      // collects: upsert counts, delete count, changed buckets)
-      val (result, changed) = metricsAndChangedBuckets(
-        upC.select(col("_id"), col("change_type"))
-          .unionByName(delIds.withColumn("change_type", lit(ChangeDeleted))),
-        bucketOf, label = "feed:classify-metrics")
-      if (result.totalProcessed > 0) {
-        val srcData = upserts.select(
-          upserts.columns.filterNot(_ == hashCol).map(col): _*)
-        val (tgtBucketed, tgtLegacy) = layoutOf(fs, targetPath)
-        val hasData = tgtBucketed || tgtLegacy.nonEmpty
-        val convert = !tgtBucketed && tgtLegacy.nonEmpty
-        // S16 drift via the FEED stays CHURN-SCOPED (round-14; previously
-        // a 1-row feed batch carrying a new column rewrote EVERY bucket —
-        // at 100 TB, a corpus rewrite for a 100-row drift batch). The
-        // evolved superset schema is stamped table-level before the swap
-        // and reads go through the schema-pinned [[readTarget]], so the
-        // mixed-schema layout reads correctly: write cost stays ∝ churn,
-        // which is this mode's whole contract.
-        val rewrite =
-          if (convert) (0 until buckets).toSeq else changed
-        val target0 =
-          if (!hasData) srcData.limit(0)
-          else if (convert) readTarget(spark, targetPath)
-          else readTarget(spark, targetPath)
-            .filter(col("__bucket").isin(changed: _*)).drop("__bucket")
-        val target =
-          if (Sinks.missingColumns(srcData.schema, target0.schema).nonEmpty)
-            Sinks.mergeSchemas(target0, srcData.limit(0))
-          else target0
-        val ups = upC
-          .filter(col("change_type").isin(ChangeNew, ChangeUpdated))
-          .select(upserts.columns.map(col): _*)
-        val merged = Sinks
-          .delete(Sinks.upsert(target, ups, "_id"), delIds, "_id")
-          .withColumn("__bucket", bucketOf(col("_id")))
-        if (hasData) stampSchema(fs, targetPath, merged.schema)
-        stageAndSwapBuckets(spark, merged, targetPath, rewrite, tgtLegacy,
-          clusterWrite = convert)
-        // state rewrite scoped to the changed buckets: their prior rows
-        // minus every feed id, plus every upsert's fresh (id, hash) —
-        // unchanged feed docs re-enter with their identical carried hash
-        val (stB, stLegacy) = layoutOf(fs, statePath)
-        val stConvert = !stB && stLegacy.nonEmpty
-        val nextSt0 = state
-          .join(current.select("_id").unionByName(deletes.select("_id")),
-            Seq("_id"), "left_anti")
-          .unionByName(upC.select(col("_id"), col(hashCol).as("hash")))
-          .select(col("_id").cast("string").as("_id"),
-            col("hash").cast("string").as("hash"))
-          .withColumn("__bucket", bucketOf(col("_id")))
-        val nextSt =
-          if (stConvert) nextSt0
-          else nextSt0.filter(col("__bucket").isin(changed: _*))
-        stageAndSwapBuckets(spark, nextSt, statePath,
-          if (stConvert) (0 until buckets).toSeq else changed, stLegacy,
-          clusterWrite = stConvert)
-        stampBucketCount(fs, targetPath, buckets)
-        stampBucketCount(fs, statePath, buckets)
-        val classifiedLike = upC.select(col("_id"), col("change_type"))
-          .unionByName(delIds.withColumn("change_type", lit(ChangeDeleted)))
-        val childCounts = mapChildrenConcurrently(children)(ch =>
-          applyChildPartitioned(spark, ch, classifiedLike, changed, buckets,
-            bucketOf)).toMap
-        result.copy(children = childCounts)
-      } else result.copy(children = children.map(ch =>
-        childNameOf(ch.targetPath) -> ChildCounts(0L, 0L)).toMap)
+      val changes = upC.select(col("_id"), col("change_type"))
+        .unionByName(delIds.withColumn("change_type", lit(ChangeDeleted)))
+      val (result, changed) = metricsAndChangedBuckets(changes, buckets,
+        label = "feed:classify-metrics")
+      // the changed buckets' prior state minus every feed id, plus every
+      // upsert's fresh (id, hash) — unchanged feed docs re-enter with
+      // their identical carried hash
+      val next = state
+        .join(current.select("_id").unionByName(deletes.select("_id")),
+          Seq("_id"), "left_anti")
+        .unionByName(upC.select(col("_id"), col(hashCol).as("hash")))
+      result.copy(children = applyBuckets(spark, targetPath, statePath,
+        buckets, changed, changes, next, children)(prior =>
+          mergeTarget(prior, upserts, upC, Some(delIds), hashCol)))
     } finally { upC.unpersist(); delIds.unpersist(): Unit }
+  }
+
+  /** Entry work of both changed-bucket modes, before anything reads a
+    * table. Crash recovery FIRST: a staging dir with a committed manifest
+    * holds the ONLY copy of its buckets' data, so it rolls forward (see
+    * [[recoverStaging]]). Then the bucket-count pin: `__bucket` is a pure
+    * function of (id, count), so a different count would map ids to other
+    * buckets — the pruned read misses their old rows while stale
+    * directories keep serving them. */
+  private def prepareLayouts(spark: SparkSession, targetPath: String,
+      statePath: String, buckets: Int, children: Seq[ChildSync]): Unit = {
+    val layouts = Seq(targetPath, statePath) ++ children.map(_.targetPath)
+    layouts.foreach(p => recoverStaging(fsOf(spark, p), p))
+    layouts.foreach(p => verifyBucketCount(fsOf(spark, p), p, buckets))
+  }
+
+  /** The changed-bucket apply of [[runPartitioned]] and
+    * [[runFromChangeFeed]], once they have classified: the target's
+    * changed buckets get `merge` (the mode's [[mergeTarget]]), the state's
+    * changed buckets are rewritten from `nextState` (`_id`, `hash`;
+    * unchanged ids sharing a changed bucket ride along with their carried
+    * hash, so the rewrite is value-stable), then every child in lockstep
+    * over the same buckets, after the main write (FK direction: parent
+    * first). `changes` is the (`_id`, `change_type`) diff, deletes
+    * included. With no changed bucket only a missing child table is
+    * written: it bootstraps from every surviving id, which heals a
+    * pre-child-sync layout. Returns the per-child tallies, (0, 0) for an
+    * untouched child. */
+  private def applyBuckets(spark: SparkSession, targetPath: String,
+      statePath: String, buckets: Int, changed: Seq[Int],
+      changes: DataFrame, nextState: DataFrame, children: Seq[ChildSync])(
+      merge: Option[DataFrame] => DataFrame): Map[String, ChildCounts] = {
+    if (changed.nonEmpty) {
+      val (targetHadData, _) = rewriteBuckets(spark, targetPath, "_id",
+        changed, buckets)(prior => (merge(prior), ()))
+      // state schema never drifts (`_id`/`hash` strings) and carries no
+      // schema stamp; a plain (legacy) state table converts in place, and
+      // like the target it clusters its write when it is rewritten whole:
+      // on conversion, or when the sync bootstraps (the target held nothing)
+      val fs = fsOf(spark, statePath)
+      val (stBucketed, stLegacy) = layoutOf(fs, statePath)
+      val stConvert = !stBucketed && stLegacy.nonEmpty
+      val next = nextState
+        .select(col("_id").cast("string").as("_id"),
+          col("hash").cast("string").as("hash"))
+        .withColumn("__bucket", bucketOf(col("_id"), buckets))
+      stageAndSwapBuckets(spark,
+        if (stConvert) next else next.filter(col("__bucket").isin(changed: _*)),
+        statePath, if (stConvert) 0 until buckets else changed, stLegacy,
+        clusterWrite = stConvert || !targetHadData)
+      stampBucketCount(fs, statePath, buckets)
+    }
+    graft.io.Concurrency.mapBounded(children) { ch =>
+      val name = childNameOf(ch.targetPath)
+      if (changed.isEmpty &&
+          fsOf(spark, ch.targetPath).exists(new Path(ch.targetPath)))
+        name -> ChildCounts(0L, 0L)
+      else graft.io.Label(spark.sparkContext, s"sync:child $name") {
+        // the child shares the PARENT-id bucketing (fk IS the parent id),
+        // so the parent's changed buckets hold every affected child row
+        val (_, counts) = rewriteBuckets(spark, ch.targetPath, ch.fkColumn,
+          changed, buckets)(childMerge(ch, changes, _))
+        name -> counts()
+      }
+    }.toMap
+  }
+
+  /** Rewrite the `changed` buckets of one bucketed layout keyed on `key`:
+    * `merge` maps the layout's prior rows (None when it holds no data) to
+    * the merged rows. A bucketed layout reads only its changed buckets
+    * (partition-pruned). A plain parquet table (a fullMigration or [[run]]
+    * bootstrap) is ADOPTED in place: the whole table rewrites into the
+    * `__bucket=K` layout, its legacy data files retired through the swap
+    * manifest (crash-safe — a reader after recovery never sees legacy and
+    * bucketed rows together). S16 drift stays CHURN-SCOPED: the evolved
+    * superset schema is stamped table-level (see [[stampSchema]]) and
+    * every read goes through the schema-pinned [[readTarget]], so a
+    * mixed-schema layout reads correctly and a drifting sync still
+    * rewrites only its changed buckets — at 100 TB a one-row drift batch
+    * must not rewrite the corpus. Returns whether the layout held data,
+    * and what `merge` returned beside the rows. */
+  private def rewriteBuckets[T](spark: SparkSession, path: String,
+      key: String, changed: Seq[Int], buckets: Int)(
+      merge: Option[DataFrame] => (DataFrame, T)): (Boolean, T) = {
+    val fs = fsOf(spark, path)
+    val (bucketed, legacy) = layoutOf(fs, path)
+    val hasData = bucketed || legacy.nonEmpty
+    val (merged, out) = merge(
+      if (!hasData) None
+      else if (!bucketed) Some(readTarget(spark, path))
+      else Some(readTarget(spark, path)
+        .filter(col("__bucket").isin(changed: _*)).drop("__bucket")))
+    // stamp the (possibly evolved) superset schema BEFORE the swap — the
+    // lossless crash direction, see [[stampSchema]] — but only onto an
+    // EXISTING layout, and the bucket count only AFTER the write: metadata
+    // must never conjure the layout directory ahead of the data (existence
+    // checks and first-sync schema inference key off the directory)
+    if (hasData) stampSchema(fs, path, merged.schema)
+    stageAndSwapBuckets(spark,
+      merged.withColumn("__bucket", bucketOf(col(key), buckets)), path,
+      if (bucketed) changed else 0 until buckets, legacy,
+      clusterWrite = !bucketed)
+    stampBucketCount(fs, path, buckets)
+    stampSchema(fs, path, merged.schema)
+    (hasData, out)
   }
 
   private val StageSuffix = ".__stage__"
@@ -847,7 +697,7 @@ object IncrementalSync {
         try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
         finally in.close()
       require(stored == buckets,
-        s"runPartitioned: $path was laid out with $stored buckets but this " +
+        s"$path was laid out with $stored buckets but this " +
           s"run asked for $buckets — ids would map to different buckets " +
           "(missed rows + stale duplicates); pass the stored count or " +
           "rewrite the table")
@@ -856,7 +706,7 @@ object IncrementalSync {
         .filter(_.startsWith("__bucket="))
         .map(_.stripPrefix("__bucket=").toInt)
       require(dirs.forall(_ < buckets),
-        s"runPartitioned: $path holds __bucket=${dirs.max} but this run " +
+        s"$path holds __bucket=${dirs.max} but this run " +
           s"asked for only $buckets buckets — the layout was written " +
           "with a larger count")
     }
@@ -893,8 +743,7 @@ object IncrementalSync {
       path: String, changed: Seq[Int],
       legacy: Seq[String] = Seq.empty,
       clusterWrite: Boolean = false): Unit = {
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, path)
     val staging = new Path(path + StageSuffix)
     // a leftover here is manifest-less (recoverStaging ran at entry and
     // consumed or discarded anything else): safe to clear
@@ -987,8 +836,8 @@ object IncrementalSync {
   }
 
   /** Full sync run against a parquet-backed target table: classify, apply
-    * (upsert new+updated, anti-join deletes — S10/S12/S13), persist state
-    * (S18). MERGE-semantics application is idempotent, so retries are safe
+    * ([[mergeTarget]] — S10/S12/S13/S16), persist state (S18).
+    * MERGE-semantics application is idempotent, so retries are safe
     * (strictly stronger than the reference's row-at-a-time autocommit,
     * SURVEY §2.10). The whole-table swap is the unbucketed LEGACY mode —
     * [[runPartitioned]] is the changed-bucket-only default at scale. */
@@ -1000,23 +849,9 @@ object IncrementalSync {
     val classified = classify(current, state, hashCol).cache()
     try {
       val result = metrics(classified)
-      // S16/U2/F7 schema drift: fields present in the source but absent in
-      // the target become nullable columns before changes apply
-      // (Update-SQLSchema, Sync.ps1:90-99, 395-477).
-      val target0 = spark.read.parquet(targetPath)
-      val srcData = source.select(
-        source.columns.filterNot(_ == hashCol).map(col).toSeq: _*)
-      val target =
-        if (Sinks.missingColumns(srcData.schema, target0.schema).nonEmpty)
-          Sinks.mergeSchemas(target0, srcData.limit(0))
-        else target0
-      val upserts = classified
-        .filter(col("change_type").isin(ChangeNew, ChangeUpdated))
-        .select(source.columns.map(col): _*)
-      val deletes = classified.filter(col("change_type") === ChangeDeleted)
-        .select("_id")
-      val merged = Sinks.delete(Sinks.upsert(target, upserts, "_id"), deletes, "_id")
-      Sinks.atomicOverwrite(spark, merged, targetPath)
+      Sinks.atomicOverwrite(spark, mergeTarget(
+        Some(spark.read.parquet(targetPath)), source, classified,
+        Some(deletedIds(classified)), hashCol), targetPath)
       val childCounts = applyChildren(spark, classified, children,
         hasChanges = result.totalProcessed > 0)
       StateStore.save(spark, nextState(classified, hashCol), statePath)

@@ -43,6 +43,28 @@ class StreamSyncSpec extends SparkSpec {
     assert(spark.read.parquet(target).count() == 2)
   }
 
+  test("a drifting snapshot micro-batch lands its new column: the target " +
+      "widens, null for documents the batch did not carry") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sdrift").toString
+    val target = s"$dir/t.parquet"
+    val state = s"$dir/state.parquet"
+    StreamSync.applyBatch(spark,
+      Seq(("1", "a"), ("2", "b")).toDF("_id", "name"), target, state)
+    // batch 2 adds `note` to doc 1 only
+    val b2 = Seq(("1", "a", "n1")).toDF("_id", "name", "note")
+    val r = StreamSync.applyBatch(spark, b2, target, state)
+    assert(r == graft.sync.SyncResult(0L, 1L, 0L, 0L, 0L), r)
+    def rows() = spark.read.parquet(target).select("_id", "name", "note")
+      .orderBy("_id").as[(String, String, Option[String])].collect().toSeq
+    val want = Seq(("1", "a", Some("n1")), ("2", "b", None))
+    assert(rows() == want)
+    // the state now carries the new hash, so a replay is unchanged — the
+    // column must already have landed, there is no second chance
+    val r2 = StreamSync.applyBatch(spark, b2, target, state)
+    assert(r2 == graft.sync.SyncResult(0L, 0L, 0L, 1L, 0L), r2)
+    assert(rows() == want)
+  }
+
   test("streamed snapshots merge into the target; state carries forward") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ss").toString
     val src = s"$dir/src"

@@ -392,58 +392,72 @@ class SyncSpec extends SparkSpec {
   test("runPartitioned crash recovery: a committed staging dir rolls " +
       "FORWARD on the next run; a manifest-less orphan is discarded; " +
       "a changed bucket count fails loudly") {
-    import graft.sync.IncrementalSync.runPartitioned
+    import graft.sync.IncrementalSync.{runFromChangeFeed, runPartitioned}
     import org.apache.hadoop.fs.Path
-    val dir = java.nio.file.Files.createTempDirectory("graft_rsync").toString
-    val target = s"$dir/t"
-    val state = s"$dir/s"
     val nB = 4
-    val fs = new Path(target)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def mkSrc(rows: Seq[(Long, String)]) = rows.toDF("_id", "payload")
     def bucketOf(id: Long): Int = Seq(id).toDF("_id")
       .select(pmod(hash($"_id".cast("string")), lit(nB))).head().getInt(0)
     val base = (1L to 32L).map(i => (i, s"v$i"))
-    runPartitioned(spark, mkSrc(base), target, state, nB)
+    // both changed-bucket entry points share the recovery and the pin; the
+    // feed re-sends the unchanged corpus, the snapshot diffs it
+    val entries: Seq[(String, (String, String, Int) =>
+        graft.sync.SyncResult)] = Seq(
+      "runPartitioned" -> ((t, s, n) =>
+        runPartitioned(spark, mkSrc(base), t, s, n)),
+      "runFromChangeFeed" -> ((t, s, n) =>
+        runFromChangeFeed(spark, mkSrc(base), Seq.empty[Long].toDF("_id"),
+          t, s, n)))
+    entries.foreach { case (entry, sync) =>
+      val dir = java.nio.file.Files.createTempDirectory("graft_rsync").toString
+      val target = s"$dir/t"
+      val state = s"$dir/s"
+      val fs = new Path(target)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // a feed cannot bootstrap: both entries start from a snapshot sync
+      runPartitioned(spark, mkSrc(base), target, state, nB)
 
-    // simulate a crash AFTER the manifest commit but BEFORE the swap: the
-    // staged bucket holds the ONLY copy of its new data (the old protocol
-    // deleted staging on the next run — permanent silent loss)
-    val b = bucketOf(7L)
-    val staged = base.filter { case (i, _) => bucketOf(i) == b }
-      .map { case (i, _) => (i, "RECOVERED") }
-    val staging = s"$target.__stage__"
-    staged.toDF("_id", "payload")
-      .withColumn("__bucket", pmod(hash($"_id".cast("string")), lit(nB)))
-      .write.partitionBy("__bucket").parquet(staging)
-    val out = fs.create(new Path(staging, "__swap_manifest__"), true)
-    out.write(s"changed:$b\nstaged:$b\n".getBytes("UTF-8")); out.close()
-    // next run (no source churn) must roll the staged bucket forward
-    val r = runPartitioned(spark, mkSrc(base), target, state, nB)
-    assert(!fs.exists(new Path(staging)), "staging dir not cleaned up")
-    val rows = spark.read.parquet(target).select("_id", "payload")
-      .as[(Long, String)].collect().toMap
-    staged.foreach { case (i, _) =>
-      assert(rows(i) == "RECOVERED", s"staged row $i not rolled forward") }
-    // NOTE the sync above saw the rolled-forward target but diffs against
-    // STATE, so the recovered rows stay in place (r counts vs state)
-    assert(r.totalProcessed == 0)
+      // simulate a crash AFTER the manifest commit but BEFORE the swap: the
+      // staged bucket holds the ONLY copy of its new data (the old protocol
+      // deleted staging on the next run — permanent silent loss)
+      val b = bucketOf(7L)
+      val staged = base.filter { case (i, _) => bucketOf(i) == b }
+        .map { case (i, _) => (i, "RECOVERED") }
+      val staging = s"$target.__stage__"
+      staged.toDF("_id", "payload")
+        .withColumn("__bucket", pmod(hash($"_id".cast("string")), lit(nB)))
+        .write.partitionBy("__bucket").parquet(staging)
+      val out = fs.create(new Path(staging, "__swap_manifest__"), true)
+      out.write(s"changed:$b\nstaged:$b\n".getBytes("UTF-8")); out.close()
+      // next run (no source churn) must roll the staged bucket forward
+      val r = sync(target, state, nB)
+      assert(!fs.exists(new Path(staging)), s"$entry: staging dir not cleaned up")
+      val rows = spark.read.parquet(target).select("_id", "payload")
+        .as[(Long, String)].collect().toMap
+      staged.foreach { case (i, _) =>
+        assert(rows(i) == "RECOVERED", s"$entry: staged row $i not rolled forward") }
+      // NOTE the sync above saw the rolled-forward target but diffs against
+      // STATE, so the recovered rows stay in place (r counts vs state)
+      assert(r.totalProcessed == 0, s"$entry: $r")
 
-    // manifest-less orphan (crash mid-stage-write): discarded, live intact
-    val liveBefore = spark.read.parquet(target).select("_id", "payload")
-      .as[(Long, String)].collect().toSet
-    Seq((7L, "GARBAGE")).toDF("_id", "payload")
-      .withColumn("__bucket", lit(b))
-      .write.partitionBy("__bucket").parquet(staging)
-    runPartitioned(spark, mkSrc(base), target, state, nB)
-    assert(!fs.exists(new Path(staging)))
-    assert(spark.read.parquet(target).select("_id", "payload")
-      .as[(Long, String)].collect().toSet == liveBefore)
+      // manifest-less orphan (crash mid-stage-write): discarded, live intact
+      val liveBefore = spark.read.parquet(target).select("_id", "payload")
+        .as[(Long, String)].collect().toSet
+      Seq((7L, "GARBAGE")).toDF("_id", "payload")
+        .withColumn("__bucket", lit(b))
+        .write.partitionBy("__bucket").parquet(staging)
+      sync(target, state, nB)
+      assert(!fs.exists(new Path(staging)), entry)
+      assert(spark.read.parquet(target).select("_id", "payload")
+        .as[(Long, String)].collect().toSet == liveBefore, entry)
 
-    // bucket-count pin: a different count would silently split the keys
-    val e = intercept[IllegalArgumentException](
-      runPartitioned(spark, mkSrc(base), target, state, nB + 1))
-    assert(e.getMessage.contains("buckets"))
+      // bucket-count pin: a different count would silently split the keys;
+      // the message names the layout, not the entry point
+      val e = intercept[IllegalArgumentException](sync(target, state, nB + 1))
+      assert(e.getMessage.contains(s"$target was laid out with $nB buckets " +
+        s"but this run asked for ${nB + 1}"), s"$entry: ${e.getMessage}")
+      assert(!e.getMessage.contains("runPartitioned"), e.getMessage)
+    }
   }
 
   test("runPartitioned schema drift: snapshot-borne drift churns every doc " +
