@@ -80,4 +80,18 @@ object VectorKernels {
     }
     acc
   }
+
+  /** [[sqL2]]'s loop over `n` doubles of `a` from `aOff` against `b` — the
+    * driver-held E-step of [[graft.scale.Pq.codebook]], bit-identical to
+    * the expression kernel over the same doubles. */
+  def sqL2(a: Array[Double], aOff: Int, b: Array[Double], n: Int): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      val d = a(aOff + i) - b(i)
+      acc += d * d
+      i += 1
+    }
+    acc
+  }
 }

@@ -81,7 +81,9 @@ object CurationPipeline {
     }
     val dupIds = labels.filter(col("id") =!= col("component"))
       .select(col("id").as(idCol)) // non-representatives drop
+    // the labels no longer read the pair list or the MinHash state under it
     graft.io.Materialize.release(pairs)
+    graft.io.Materialize.release(state)
     // driver-plan labels are a local relation: filter by their ids as a
     // literal set, since an anti-join would broadcast the relation with one
     // more job on every action over `kept`

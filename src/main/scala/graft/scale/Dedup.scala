@@ -1,6 +1,6 @@
 package graft.scale
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -394,11 +394,13 @@ object Dedup {
     * from synthetic pair sets (n pairs drawn over 2n ids, local mode on 4
     * cores): at 100,000 pairs the driver plan took 1.0 s where the star
     * loop took 14.8 s over 8 rounds, and the labels it returned held 38 MB
-    * of driver heap (147 MB allocated on the way). At 1,000,000 pairs it
-    * took 8–9 s against 59 s but held 300–380 MB, about 250 bytes per
-    * node in the local frame: a third of Spark's default 1 GB driver heap,
-    * so the cap stays at the smaller size. No benchmark workload runs
-    * above it. */
+    * of driver heap (147 MB allocated on the way). At 1,000,000 pairs
+    * (1.26M nodes, 3 GB heap) it took 8–9 s against 59 s. Built through
+    * [[graft.io.LocalFrame]], the labels of that pair set hold 85 MB (67
+    * bytes a node) and the call allocates 270 MB on the calling thread,
+    * where `createDataFrame` over external rows held 135 MB and allocated
+    * 583 MB in the same probe. The cap stays at 100,000 until a benchmark
+    * workload runs above it. */
   val DriverPairCap: Int = 100000
 
   /** [[connectedComponents]] plus the number of contraction rounds run —
@@ -501,16 +503,15 @@ object Dedup {
         val rb = find(idx(b(i)))
         if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
       }
-      val box: Long => Any = schema("id").dataType match {
-        case ByteType => _.toByte
-        case ShortType => _.toShort
-        case IntegerType => _.toInt
-        case _ => identity
-      }
-      val rows = new java.util.ArrayList[Row](m + 1)
-      for (i <- 0 until m) rows.add(Row(box(seen(i)), box(seen(find(i)))))
-      if (parts.exists(_._4)) rows.add(Row(null, null))
-      Some(p.sparkSession.createDataFrame(rows, schema))
+      val t = schema("id").dataType
+      // the (null, null) row, when a null end was seen, is the last one
+      val rows = if (parts.exists(_._4)) m + 1 else m
+      Some(graft.io.LocalFrame(p.sparkSession, schema, rows) { (i, row) =>
+        if (i < m) {
+          graft.io.LocalFrame.setIntegral(row, 0, t, seen(i))
+          graft.io.LocalFrame.setIntegral(row, 1, t, seen(find(i)))
+        }
+      })
     }
   }
 

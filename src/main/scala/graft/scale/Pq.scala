@@ -12,7 +12,10 @@ import org.apache.spark.sql.types._
   * lookups per candidate instead of a D-dim float kernel.
   *
   * 100 TB shape: the codebook is tiny (m·k·(D/m) floats) and its Lloyd's
-  * loop is held on the driver — each round is ONE collected aggregate
+  * loop is held on the driver, with the plan chosen from the measured
+  * input. An input of up to [[graft.io.DriverVectors.ElementCap]] vector
+  * elements is collected once and trained on the driver (one job); above
+  * it — every corpus at 100 TB — each round is ONE collected aggregate
   * (one scan of the subvector frame against a broadcast centroid literal,
   * grouped into the next centroids), nothing accumulates and no round
   * re-plans an earlier round's frame. Encoding is one zero-shuffle scan.
@@ -171,27 +174,69 @@ object Pq {
 
   /** Train the PQ codebook: split D dims into `m` contiguous subspaces and
     * run `iters` Lloyd's rounds with k centroids in EACH subspace — all
-    * subspaces advance together in ONE scan per round (subspace is just a
+    * subspaces advance together in ONE pass per round (subspace is just a
     * grouping key), not m separate loops. Deterministic min-id seeding:
     * the k smallest-id vectors seed every subspace, labels 1..k.
     *
-    * The loop is held on the driver. One job collects the seeds (their
-    * size fixes D; the first round's scan then checks every other row
-    * against it through the [[subvectors]] guard), and each round is one
-    * collected aggregate — the E-step against the previous round's
-    * centroid literal feeding the M-step — checked on the driver by
-    * [[entries]]. Nothing is re-planned from an earlier round's frame. The
-    * subvector scan fans out to every core when the input is narrow (see
-    * [[graft.io.FanOut]]; a no-op at scale).
+    * The plan is chosen from the measured input, and the loop is held on
+    * the driver either way:
+    *
+    *  - up to [[graft.io.DriverVectors.ElementCap]] elements with integral
+    *    ids and float or double elements, ONE bounded collect fetches the
+    *    input ([[graft.io.DriverVectors.collect]]) and every round runs on
+    *    the driver over primitive arrays: the E-step is the
+    *    [[graft.functions.VectorKernels.sqL2]] loop against each centroid
+    *    of the subvector's subspace, ties to the smallest label; the
+    *    M-step sums each element's DECIMAL(27,9) form exactly and goes
+    *    through [[entries]]. One job, and the same rows and double bits as
+    *    the Spark plan;
+    *  - any other input (more elements; null or non-integral ids; a null,
+    *    NaN or infinite element; a tie on the k-th smallest id; a ragged
+    *    vector or an `m` that does not divide D, which the Spark plan
+    *    raises) runs the Spark plan, the 100 TB shape: one job collects the
+    *    seeds (their size fixes D; the first round's scan checks every other
+    *    row against it through the [[subvectors]] guard), and each round is
+    *    one collected aggregate — the E-step against the previous round's
+    *    centroid literal feeding the M-step — checked on the driver by
+    *    [[entries]]. Nothing is re-planned from an earlier round's frame.
+    *    The subvector scan fans out to every core when the input is narrow
+    *    (see [[graft.io.FanOut]]; a no-op at scale).
     *
     * Returns a local (subspace, label, pos, centroid) frame, `pos` 1-based
     * within the subspace, already registered with [[encode]],
     * [[adcTopK]] and [[quantizationError]], so they never collect it
     * again. */
   def codebook(df: DataFrame, idCol: String, vecCol: String, m: Int, k: Int,
-      iters: Int, scale: Int = 4): DataFrame = {
+      iters: Int, scale: Int = 4): DataFrame =
+    trainCodebook(df, idCol, vecCol, m, k, iters, scale,
+      graft.io.DriverVectors.ElementCap)
+
+  /** [[codebook]] with the driver-plan cap as a parameter: `cap = 0`
+    * always runs the Spark plan. */
+  private[graft] def trainCodebook(df: DataFrame, idCol: String,
+      vecCol: String, m: Int, k: Int, iters: Int, scale: Int,
+      cap: Long): DataFrame = {
     require(k > 0, "k must be positive")
     require(iters > 0, "iters must be positive")
+    val rows = driverLloyd(df, idCol, vecCol, m, k, iters, scale, cap)
+      .getOrElse(sparkLloyd(df, idCol, vecCol, m, k, iters, scale))
+    val cells = rows.toSeq.flatMap { case (s, l, c) =>
+      c.indices.map(p => (s, l, p + 1, c(p))) }
+    val out = graft.io.LocalFrame(df.sparkSession, CodebookSchema,
+        cells.length) { (i, row) =>
+      val (s, l, p, v) = cells(i)
+      row.setInt(0, s)
+      row.setLong(1, l)
+      row.setInt(2, p)
+      row.setDouble(3, v)
+    }
+    cbMemo.put(out, rows)
+    out
+  }
+
+  /** The Spark plan of [[codebook]]'s Lloyd loop. */
+  private def sparkLloyd(df: DataFrame, idCol: String, vecCol: String,
+      m: Int, k: Int, iters: Int, scale: Int): Entries = {
     // seeds: the k smallest-id vectors (TakeOrderedAndProject on the base
     // frame — never a full-partition window), rounded as centroids
     val seeds = df.orderBy(col(idCol).asc).limit(k)
@@ -218,12 +263,78 @@ object Pq {
     for (_ <- 1 to iters)
       rows = mStep(assignSub(subv, rows).select("subspace", "label", "subvec"),
         scale)
-    val out = df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows.toSeq.flatMap { case (s, l, c) =>
-        c.zipWithIndex.map { case (v, p) => Row(s, l, p + 1, v) }
-      }: _*), CodebookSchema)
-    cbMemo.put(out, rows)
-    out
+    rows
+  }
+
+  /** The driver plan of [[codebook]]'s Lloyd loop over collected vectors,
+    * or None for an input it does not mirror (see [[codebook]]). */
+  private def driverLloyd(df: DataFrame, idCol: String, vecCol: String,
+      m: Int, k: Int, iters: Int, scale: Int, cap: Long): Option[Entries] = {
+    val mirrored = (df.schema(idCol).dataType,
+        df.schema(vecCol).dataType) match {
+      case (ByteType | ShortType | IntegerType | LongType,
+        ArrayType(FloatType | DoubleType, _)) => true
+      case _ => false
+    }
+    if (!mirrored) return None
+    val v = graft.io.DriverVectors.collect(df, idCol, vecCol, cap) match {
+      case Some(v) => v
+      case None => return None
+    }
+    val n = v.rows
+    if (n == 0 || v.nullKey.contains(true)) return None
+    // seeds as `orderBy(id).limit(k)` takes them; equal ids among or next
+    // to them have no defined order
+    val ids = v.keys.clone()
+    java.util.Arrays.sort(ids)
+    val s = math.min(k, n)
+    if ((1 until math.min(k + 1, n)).exists(i => ids(i) == ids(i - 1)))
+      return None
+    val seedRow = new Array[Int](s)
+    for (r <- 0 until n) {
+      val i = java.util.Arrays.binarySearch(ids, 0, s, v.keys(r))
+      if (i >= 0) seedRow(i) = r
+    }
+    val dims = seedRow.map(v.size).max
+    if (dims == 0 || m <= 0 || dims % m != 0 ||
+        (0 until n).exists(v.size(_) != dims)) return None
+    val sub = dims / m
+    var rows: Entries = for {
+      j <- (0 until m).toArray
+      (r, i) <- seedRow.zipWithIndex
+    } yield (j, i + 1L, (0 until sub).map(p => graft.io.DriverVectors.round(
+      v.values(v.start(r) + j * sub + p), scale)): IndexedSeq[Double])
+    for (_ <- 1 to iters) rows = driverRound(v, rows, m, sub, scale)
+    Some(rows)
+  }
+
+  /** One driver-held Lloyd round: each subvector goes to its nearest entry
+    * of its subspace by the [[graft.functions.VectorKernels.sqL2]] loop
+    * (Spark's double order; ties to the smallest label, as `array_min` over
+    * (d, label) structs breaks them), then every entry that kept a
+    * subvector averages them decimal-exactly, as [[mStep]] does. */
+  private def driverRound(v: graft.io.DriverVectors.Vectors, rows: Entries,
+      m: Int, sub: Int, scale: Int): Entries = {
+    val bySub = Array.tabulate(m)(j =>
+      rows.indices.filter(rows(_)._1 == j).toArray)
+    val cents = rows.map(_._3.toArray)
+    val sums = new graft.io.DriverVectors.Sums(rows.length * sub)
+    val cnt = new Array[Long](rows.length)
+    for (r <- 0 until v.rows; j <- 0 until m) {
+      val off = v.start(r) + j * sub
+      var best = -1
+      var bestD = 0.0
+      for (e <- bySub(j)) {
+        val d = graft.functions.VectorKernels.sqL2(v.values, off, cents(e), sub)
+        if (best < 0 || org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+            .compareDoubles(d, bestD) < 0) { best = e; bestD = d }
+      }
+      cnt(best) += 1
+      for (p <- 0 until sub) sums.add(best * sub + p, v.units(off + p))
+    }
+    entries(for (e <- rows.indices if cnt(e) > 0; p <- 0 until sub)
+      yield (rows(e)._1, rows(e)._2, p + 1,
+        sums.mean(e * sub + p, cnt(e), scale), cnt(e)))
   }
 
   /** IVF residual vectors (Jégou '11 §IV, eq. 14): replace each vector by

@@ -980,22 +980,46 @@ object Similarity {
       .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cosine"))
   }
 
-  /** Per-label centroid, one row per (label, dim): posexplode the vectors
-    * and average per dimension — a plain two-phase hash aggregate with
-    * map-side partial sums, #labels × dim reduced rows regardless of corpus
-    * size (the distributed k-means M-step). The sum runs in DECIMAL(27,9)
-    * (exact, order-independent) rather than double (partition-order
-    * sensitive in the last bits), so the mean is bit-stable under
-    * re-partitioning/AQE; it is then rounded to `scale` decimals.
-    * `pos` is 1-based.
+  /** Per-label centroid, one row per (label, dim), `pos` 1-based: the
+    * k-means M-step. The mean is decimal-exact: every element is quantized
+    * to DECIMAL(27,9) and summed exactly (order-independent), so the mean
+    * is bit-stable under any partitioning; it is then rounded to `scale`
+    * decimals.
+    *
+    * The plan is chosen from the measured input. One bounded collect
+    * ([[graft.io.DriverVectors.collect]]) fetches an input of up to
+    * [[graft.io.DriverVectors.ElementCap]] elements with integral or string
+    * labels, and the means are computed on the driver over primitive
+    * arrays and returned as a local frame: one job, and the same schema,
+    * rows and double bits as the Spark plan. Any other input (more
+    * elements, a null vector, a null, NaN or infinite element, another
+    * label type) and any ragged input take the Spark plan: a two-phase
+    * hash aggregate with map-side partial sums, #labels × dim reduced rows
+    * regardless of corpus size — the 100 TB shape.
     *
     * Ragged input (vectors of differing length under one label) would make
     * "mean per dimension" over silently varying denominators; instead of
-    * producing a divergent mean, the plan fails loudly: within each label
-    * every dimension must have been observed in every vector. The guard is
-    * a window over the already-reduced #labels × dim frame — negligible. */
+    * producing a divergent mean, the Spark plan fails loudly: within each
+    * label every dimension must have been observed in every vector. The
+    * guard is a window over the already-reduced #labels × dim frame —
+    * negligible. */
   def centroids(df: DataFrame, labelCol: String, vecCol: String,
-      scale: Int = 4): DataFrame = {
+      scale: Int = 4): DataFrame =
+    centroidsCapped(df, labelCol, vecCol, scale,
+      graft.io.DriverVectors.ElementCap)
+
+  /** [[centroids]] with the driver-plan cap as a parameter: `cap = 0`
+    * always runs the Spark plan. */
+  private[graft] def centroidsCapped(df: DataFrame, labelCol: String,
+      vecCol: String, scale: Int, cap: Long): DataFrame = {
+    val plan = sparkCentroids(df, labelCol, vecCol, scale)
+    graft.io.DriverVectors.collect(df, labelCol, vecCol, cap)
+      .flatMap(driverCentroids(df.sparkSession, _, plan.schema, scale))
+      .getOrElse(plan)
+  }
+
+  private def sparkCentroids(df: DataFrame, labelCol: String, vecCol: String,
+      scale: Int): DataFrame = {
     val perDim = df.select(col(labelCol).as("label"),
         posexplode(col(vecCol)).as(Seq("pos", "v")))
       .groupBy(col("label"), (col("pos") + 1).as("pos"))
@@ -1014,6 +1038,58 @@ object Similarity {
           lit(" observed in "), col("_n").cast("string"),
           lit(" of "), col("_nmax").cast("string"), lit(" rows"))))
           .otherwise(col("centroid")).as("centroid"))
+  }
+
+  /** The Spark plan's rows computed from collected vectors, as a local frame
+    * of `schema`, or None for ragged input (the Spark plan raises its
+    * error). A label's cell (label, pos) averages every vector at least
+    * `pos` long; a null label is one group, as the grouped null key is. */
+  private def driverCentroids(spark: org.apache.spark.sql.SparkSession,
+      v: graft.io.DriverVectors.Vectors,
+      schema: org.apache.spark.sql.types.StructType,
+      scale: Int): Option[DataFrame] = {
+    val n = v.rows
+    val keys = (0 until n).iterator.filterNot(v.nullKey).map(v.keys).toArray
+    java.util.Arrays.sort(keys)
+    var g = 0
+    for (i <- keys.indices) if (g == 0 || keys(i) != keys(g - 1)) {
+      keys(g) = keys(i); g += 1
+    }
+    val groups = if (v.nullKey.contains(true)) g + 1 else g
+    val group = Array.tabulate(n) { r =>
+      if (v.nullKey(r)) g
+      else java.util.Arrays.binarySearch(keys, 0, g, v.keys(r))
+    }
+    val len = new Array[Int](groups)
+    for (r <- 0 until n) len(group(r)) = math.max(len(group(r)), v.size(r))
+    val base = len.scanLeft(0)(_ + _)
+    val cells = base(groups)
+    val sums = new graft.io.DriverVectors.Sums(cells)
+    val cnt = new Array[Long](cells)
+    for (r <- 0 until n; i <- 0 until v.size(r)) {
+      val c = base(group(r)) + i
+      sums.add(c, v.units(v.start(r) + i))
+      cnt(c) += 1
+    }
+    // the window guard of the Spark plan: every pos of a label counts as
+    // many rows as its first
+    val cellGroup = new Array[Int](cells)
+    for (gi <- 0 until groups; c <- base(gi) until base(gi + 1)) {
+      if (cnt(c) != cnt(base(gi))) return None
+      cellGroup(c) = gi
+    }
+    val labelType = schema("label").dataType
+    Some(graft.io.LocalFrame(spark, schema, cells) { (c, row) =>
+      val gi = cellGroup(c)
+      if (gi < g) labelType match {
+        case _: org.apache.spark.sql.types.StringType => row.update(0,
+          org.apache.spark.unsafe.types.UTF8String.fromString(
+            v.dict(keys(gi).toInt)))
+        case t => graft.io.LocalFrame.setIntegral(row, 0, t, keys(gi))
+      }
+      row.setInt(1, c - base(gi) + 1)
+      row.setDouble(2, sums.mean(c, cnt(c), scale))
+    })
   }
 
   /** Assign each vector to its nearest centroid by squared L2 distance (the
@@ -1041,18 +1117,19 @@ object Similarity {
     * — exponential codegen). #labels × dim rows by contract — the
     * driver-side build is bounded. */
   private[scale] def centroidStructArray(cents: DataFrame): Column = {
+    // rows grouped on the driver: a local centroid frame (the driver plan
+    // of [[centroids]]) is read with no job
     val centroidVecs: Seq[(Long, Seq[Double])] = cents
-      .groupBy("label").agg(map_from_arrays(
-        collect_list(col("pos")), collect_list(col("centroid"))).as("m"))
-      .collect()
-      .map { r =>
-        val m = r.getMap[Int, Double](1)
-        val label = r.getAs[Number]("label").longValue()
+      .select("label", "pos", "centroid").collect().toSeq
+      .groupBy(_.getAs[Number](0).longValue()).toSeq.sortBy(_._1)
+      .map { case (label, rs) =>
+        val m = rs.map(r =>
+          r.getAs[Number](1).intValue -> r.getDouble(2)).toMap
         require((1 to m.size).forall(m.contains),
           s"centroid dims for label $label are not contiguous 1..${m.size}: " +
             s"got ${m.keys.toSeq.sorted.mkString(",")} (ragged input vectors?)")
         (label, (1 to m.size).map(m(_)))
-      }.toSeq.sortBy(_._1)
+      }
     array(centroidVecs.map { case (lbl, c) =>
       struct(lit(lbl).as("label"), array(c.map(lit): _*).as("c"))
     }: _*)
@@ -1061,15 +1138,27 @@ object Similarity {
   /** Full k-means training loop (Lloyd's algorithm) composed from the E/M
     * steps above. Deterministic seeding: the k rows with the smallest ids
     * seed centroids labeled 1..k (no RNG — reproducible across runs and
-    * engines). Each round the E-step collects the k × dim centroid frame
-    * into broadcast plan literals, so the loop's lineage stays FLAT — every
-    * iteration's plan is (corpus scan + literals), nothing accumulates and
-    * no checkpointing is needed; per round the corpus is scanned twice
-    * (assign + re-average). A label whose cluster empties simply drops out
+    * engines). Each round the E-step reads the k × dim centroid frame into
+    * plan literals, so the loop's lineage stays FLAT — every iteration's
+    * plan is (corpus scan + literals), nothing accumulates and no
+    * checkpointing is needed. The M-step is [[centroids]], so its plan is
+    * chosen from the measured input each round: up to
+    * [[graft.io.DriverVectors.ElementCap]] elements, a round is ONE job
+    * (the E-step scan, collected by the M-step's bounded collect, averaged
+    * on the driver and read back by the next E-step with no job); above
+    * it, the corpus is scanned by the E-step and re-averaged by the
+    * distributed aggregate. A label whose cluster empties simply drops out
     * (standard Lloyd's behavior). Returns the final (label, pos, centroid)
     * frame, `pos` 1-based. */
   def kmeansFit(df: DataFrame, idCol: String, vecCol: String, k: Int,
-      iters: Int, scale: Int = 4): DataFrame = {
+      iters: Int, scale: Int = 4): DataFrame =
+    kmeansFitCapped(df, idCol, vecCol, k, iters, scale,
+      graft.io.DriverVectors.ElementCap)
+
+  /** [[kmeansFit]] with the M-step's driver-plan cap as a parameter:
+    * `cap = 0` always runs the Spark plan. */
+  private[graft] def kmeansFitCapped(df: DataFrame, idCol: String,
+      vecCol: String, k: Int, iters: Int, scale: Int, cap: Long): DataFrame = {
     require(k > 0, "k must be positive")
     require(iters > 0, "iters must be positive")
     val w = Window.orderBy(col(idCol).asc)
@@ -1081,7 +1170,7 @@ object Similarity {
     for (_ <- 1 to iters) {
       val assigned = assignToNearest(df, cents, idCol, vecCol)
         .select(col("assigned").as("label"), col(vecCol).as("vec"))
-      cents = centroids(assigned, "label", "vec", scale)
+      cents = centroidsCapped(assigned, "label", "vec", scale, cap)
     }
     cents
   }

@@ -37,6 +37,20 @@ object Bridge {
       case _ => ()
     }
 
+  /** A frame over rows already in Catalyst's internal form, as one
+    * `LocalRelation` — what `createDataFrame(java.util.List[Row], schema)`
+    * builds after converting every external `Row`, without that
+    * conversion. */
+  def localFrame(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow])
+      : org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+        org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema),
+        rows))
+
   /** Register a function on an EXISTING session's registry (the
     * `SparkSessionExtensions` route only applies at session build time,
     * and the Verify/Bench harness does not own session construction). */

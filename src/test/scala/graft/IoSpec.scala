@@ -3,8 +3,10 @@ package graft
 import graft.io.EngineConfig
 import graft.sync.SyncResult
 import graft.validate.{ReportRenderer, Validator}
+import org.apache.spark.sql.functions.col
 
-/** S19/X3/O9 config source, S17 report sinks, S14/S15 catalog DDL. */
+/** S19/X3/O9 config source, S17 report sinks, S14/S15 catalog DDL, and the
+  * driver-plan helpers (`DriverVectors`, `LocalFrame`). */
 class IoSpec extends SparkSpec {
   import spark.implicits._
 
@@ -104,5 +106,74 @@ class IoSpec extends SparkSpec {
         .map(_.name).sorted.toSeq == Seq("k", "v"))
     } finally spark.sql("DROP TABLE IF EXISTS graft_tmp")
     assert(!spark.catalog.tableExists("graft_tmp"))
+  }
+
+  test("DriverVectors.quantize equals Spark's CAST(x AS DECIMAL(27,9)), " +
+      "near rounding ties and far from them") {
+    import graft.io.DriverVectors.{quantize, NoUnits}
+    val r = new scala.util.Random(5)
+    val spread = (-12 to 16).flatMap(e =>
+      Seq.fill(200)(r.nextGaussian() * math.pow(10, e)))
+    // doubles next to the half-way points (k + ½)·10⁻⁹, where the shortcut
+    // must hand over to Spark's Decimal
+    val ties = (1 to 2000).flatMap { _ =>
+      val t = (math.abs(r.nextLong() % 1000000000000L) + 0.5) / 1e9
+      Seq(t, math.nextUp(t), math.nextDown(t), -t)
+    }
+    val edges = Seq(0.0, -0.0, 5e-10, -5e-10, 1.5e-9, 2.5e-9, -2.5e-9, 1e6,
+      999999.9999999995, 9.2e9, 9.3e9, -9.3e9, 1e17, Double.MinPositiveValue)
+    val xs = spread ++ ties ++ edges
+    val want = xs.toDF("x").select(col("x").cast("decimal(27,9)")).collect()
+      .map(_.getDecimal(0).unscaledValue)
+    for ((x, w) <- xs.zip(want)) {
+      val got = quantize(x)
+      if (w.bitLength < 64) assert(got == w.longValue, s"$x: $got != $w")
+      else assert(got == NoUnits, s"$x: $got for unscaled $w")
+    }
+    assert(Seq(Double.NaN, Double.PositiveInfinity, 1e300).map(quantize)
+      .forall(_ == NoUnits))
+  }
+
+  test("DriverVectors.Sums: exact across long wrap-arounds") {
+    val sums = new graft.io.DriverVectors.Sums(1)
+    val us = Seq.fill(5)(Long.MaxValue / 2) ++ Seq(-7L, Long.MinValue / 3,
+      123456789L) ++ Seq.fill(4)(Long.MaxValue - 1)
+    us.foreach(sums.add(0, _))
+    val exact = new java.math.BigDecimal(us.map(BigInt(_)).sum.bigInteger, 9)
+    val want = graft.io.DriverVectors.round(
+      org.apache.spark.sql.types.Decimal(exact).toDouble / us.size, 4)
+    assert(sums.mean(0, us.size, 4) == want)
+  }
+
+  test("LocalFrame: rows and schema equal createDataFrame over the same " +
+      "rows, nulls included") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("b", ByteType), StructField("s", ShortType),
+      StructField("i", IntegerType, nullable = false),
+      StructField("l", LongType), StructField("d", DoubleType),
+      StructField("t", StringType)))
+    val rows = (0 until 50).map { i =>
+      Row(if (i % 7 == 0) null else i.toByte, i.toShort, i, i * 1000000007L,
+        if (i % 5 == 0) null else i / 3.0,
+        if (i % 3 == 0) null else "x" * i)
+    }
+    val local = graft.io.LocalFrame(spark, schema, rows.size) { (i, row) =>
+      val r = rows(i)
+      if (!r.isNullAt(0)) graft.io.LocalFrame.setIntegral(row, 0, ByteType,
+        r.getByte(0).toLong)
+      graft.io.LocalFrame.setIntegral(row, 1, ShortType, r.getShort(1).toLong)
+      row.setInt(2, r.getInt(2))
+      row.setLong(3, r.getLong(3))
+      if (!r.isNullAt(4)) row.setDouble(4, r.getDouble(4))
+      if (!r.isNullAt(5)) row.update(5,
+        org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(5)))
+    }
+    val ref = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    assert(local.schema == ref.schema)
+    assert(local.collect().toSeq == ref.collect().toSeq)
+    assert(local.filter(col("l") > 5000000000L).count() ==
+      ref.filter(col("l") > 5000000000L).count())
   }
 }

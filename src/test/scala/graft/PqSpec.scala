@@ -501,26 +501,18 @@ class PqSpec extends SparkSpec {
       .as[(Int, Long, Int, Double)].collect()
       .map(r => (r._1, r._2, r._3, bits(r._4))).toSet
 
-  /** A seeded float corpus with `cells` well-separated clusters, written as
-    * ONE parquet file so the fanned-out scan path is the one exercised. */
-  private def seededCorpus(seed: Long, n: Int, dims: Int, cells: Int,
-      dupFirst: Boolean = false): DataFrame = {
-    val r = new scala.util.Random(seed)
-    val rows = (0L until n).map { i =>
-      (i, i % cells, Seq.fill(dims)(
-        (r.nextGaussian() * 3).toFloat + (i % cells) * 20f))
-    }
-    // the first two ids share one vector: their seeds tie, the argmin
-    // breaks every tie to label 1, and label 2 empties after round 1
-    val rows2 = if (dupFirst) rows.updated(1, rows(1).copy(_3 = rows(0)._3))
-      else rows
-    val dir = java.nio.file.Files.createTempDirectory("graft_pqcorpus")
-      .toString
-    rows2.toDF("vec_id", "cell", "embedding").coalesce(1)
-      .write.mode("overwrite").parquet(dir)
-    spark.read.parquet(dir)
+  /** Codebook rows with raw double bits, the frame's schema, and whether
+    * it came from the driver plan (its one bounded collect is the only job;
+    * the Spark plan runs a seeds job and a job per round after it). */
+  private def trained(input: DataFrame, m: Int, k: Int, iters: Int,
+      cap: Long): (Set[(Int, Long, Int, Long)], String, Boolean) = {
+    var cb: DataFrame = null
+    val jobs = jobsOf { cb = Pq.trainCodebook(input, "vec_id", "embedding",
+      m, k, iters, 4, cap) }
+    (cbBits(cb), cb.schema.toString, jobs == 1)
   }
 
+  // both plans: the driver plan at cap ≥ input, the Spark plan at cap = 0
   test("driver-held codebook and eager residualize are bit-identical to " +
       "the lazy-frame trainer over seeded corpora (m, k, iters varied; a " +
       "cluster that empties drops its label)") {
@@ -531,7 +523,9 @@ class PqSpec extends SparkSpec {
       (3L, 120, 8, 2, 2, 8, 1, false),
       (4L, 300, 16, 5, 8, 3, 4, false),
       (5L, 100, 6, 3, 6, 2, 2, false),
-      (6L, 80, 8, 4, 4, 6, 3, true))
+      (6L, 80, 8, 4, 4, 6, 3, true),
+      (7L, 90, 16, 3, 8, 4, 1, true),
+      (8L, 60, 8, 2, 2, 3, 4, true))
     for ((seed, n, dims, cells, m, k, iters, dup) <- cases) {
       val what = s"seed $seed m=$m k=$k iters=$iters"
       val c = seededCorpus(seed, n, dims, cells, dup)
@@ -545,11 +539,20 @@ class PqSpec extends SparkSpec {
         .map(r => r._1 -> r._2.map(bits)).toMap
       assert(resBits(re) == resBits(reRef), s"$what: residuals differ")
       for (input <- Seq(c, re)) {
-        val cb = Pq.codebook(input, "vec_id", "embedding", m, k, iters)
         val ref = LazyPq.codebook(input, "vec_id", "embedding", m, k, iters)
-        val got = cbBits(cb)
-        assert(got == cbBits(ref), s"$what: codebook rows differ")
-        assert(cb.schema == ref.schema, s"$what: ${cb.schema} != ${ref.schema}")
+        val want = cbBits(ref)
+        val elems = n.toLong * dims
+        val (onDriver, driverSchema, driverPlan) =
+          trained(input, m, k, iters, elems)
+        val (onSpark, sparkSchema, sparkPlan) = trained(input, m, k, iters, 0)
+        assert(driverPlan && !sparkPlan, s"$what: plans not as capped")
+        assert(onDriver == want, s"$what: driver codebook rows differ")
+        assert(onSpark == want, s"$what: Spark codebook rows differ")
+        assert(driverSchema == ref.schema.toString &&
+          sparkSchema == driverSchema, s"$what: $driverSchema != ${ref.schema}")
+        // one element over the cap takes the Spark plan
+        assert(!trained(input, m, k, iters, elems - 1)._3, s"$what: cap - 1")
+        val cb = Pq.codebook(input, "vec_id", "embedding", m, k, iters)
         // consumers read the memoized entries for `cb` and collect `ref`
         assert(Pq.encode(input, cb, "vec_id", "embedding").collect().toSet ==
           Pq.encode(input, ref, "vec_id", "embedding").collect().toSet,
@@ -558,38 +561,66 @@ class PqSpec extends SparkSpec {
           .collect().toSet == Pq.quantizationError(input, ref, "vec_id",
             "embedding").collect().toSet, s"$what: quantization error differs")
         if (dup && (input eq c)) {
-          val labels = got.groupBy(_._1).values.map(_.map(_._2).size)
-          assert(labels.forall(_ < k), s"$what: no label dropped out: $got")
+          val labels = want.groupBy(_._1).values.map(_.map(_._2).size)
+          assert(labels.forall(_ < k), s"$what: no label dropped out: $want")
         }
       }
     }
   }
 
-  test("codebook runs one collected aggregate per Lloyd round") {
-    val sc = spark.sparkContext
-    val tag = "graft.pq.jobs"
-    def jobsOf(body: => Unit): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          if (Option(e.properties).exists(_.getProperty(tag) != null))
-            jobs.incrementAndGet(): Unit
+  test("codebook: inputs the driver does not mirror take the Spark plan, " +
+      "and fail or train exactly as it does") {
+    val r = new scala.util.Random(17)
+    def vec(d: Int) = Seq.fill(d)(r.nextGaussian())
+    val base = (1L to 12L).map(i => (i, Option(vec(8).map(Option(_)))))
+    def frame(rows: Seq[(Long, Option[Seq[Option[Double]]])]) =
+      rows.toDF("vec_id", "embedding")
+    val inputs = Seq(
+      "ragged seed" -> frame(base.updated(1, (2L, Some(vec(6).map(Option(_)))))),
+      "ragged non-seed" ->
+        frame(base.updated(9, (10L, Some(vec(6).map(Option(_)))))),
+      "NULL vector" -> frame(base.updated(9, (10L, None))),
+      "null element" -> frame(base.updated(9,
+        (10L, Some(vec(8).map(Option(_)).updated(3, None))))),
+      "NaN element" -> frame(base.updated(9,
+        (10L, Some(vec(8).updated(3, Double.NaN).map(Option(_)))))),
+      "infinite element" -> frame(base.updated(9,
+        (10L, Some(vec(8).updated(3, Double.PositiveInfinity)
+          .map(Option(_)))))),
+      // ids 1, 2, 3, 3, 5, …: two rows tie for the third seed (k = 3)
+      "tied k-th id" -> frame(base.updated(3, (3L, base(3)._2))),
+      "m does not divide D" -> frame(base))
+      .map { case (what, df) => (what, df, if (what.startsWith("m ")) 3 else 2) }
+    val nullId = base.map { case (i, v) => (if (i == 5) None else Some(i), v) }
+      .toDF("vec_id", "embedding")
+    val stringId = frame(base).withColumn("vec_id", col("vec_id").cast("string"))
+    for ((what, df, m) <- inputs ++ Seq(("null id", nullId, 2),
+        ("string id", stringId, 2))) {
+      def outcome(cap: Long) = {
+        var got: Either[String, Set[(Int, Long, Int, Long)]] = null
+        val jobs = jobsOf {
+          got = scala.util.Try(Pq.trainCodebook(df, "vec_id", "embedding", m,
+            k = 3, iters = 2, 4, cap)).toEither.left.map(rootFailure)
+            .map(cbBits)
+        }
+        (got, jobs)
       }
-      sc.addSparkListener(listener)
-      sc.setLocalProperty(tag, "1")
-      try body
-      finally sc.setLocalProperty(tag, null)
-      org.apache.spark.GraftTestBus.drain(sc)
-      sc.removeSparkListener(listener)
-      jobs.get()
+      val (routed, jobs) = outcome(graft.io.DriverVectors.ElementCap)
+      val (spark, _) = outcome(0)
+      assert(routed == spark, s"$what: $routed != $spark")
+      assert(jobs > 1, s"$what: ran on the driver")
     }
+  }
+
+  // the Spark plan (cap = 0): the driver plan is one job at any iters
+  test("codebook runs one collected aggregate per Lloyd round") {
     // one job collects the seeds; a round on the fanned-out fixture is 3
     // jobs (the fan-out exchange, the aggregate's map stage, its result)
     def bound(iters: Int) = 3 * iters + 1
     val e = emb // loaded outside the counted window
     for (iters <- 1 to 3) {
-      val n = jobsOf(Pq.codebook(e, "vec_id", "embedding", 4, 4, iters))
+      val n = jobsOf(Pq.trainCodebook(e, "vec_id", "embedding", 4, 4, iters,
+        4, cap = 0))
       assert(n <= bound(iters), s"codebook(iters = $iters) ran $n jobs")
     }
     // the lazy-frame trainer, materialized as codebook now returns it,
@@ -597,6 +628,19 @@ class PqSpec extends SparkSpec {
     val lazyJobs = jobsOf(LazyPq.codebook(e, "vec_id", "embedding", 4, 4,
       3).collect(): Unit)
     assert(lazyJobs > bound(3), s"lazy trainer ran only $lazyJobs jobs")
+  }
+
+  test("below the cap, centroids → residualize → codebook on the fixture " +
+      "runs exactly 2 jobs") {
+    val e = emb // loaded outside the counted window
+    val n = jobsOf {
+      val cents = graft.scale.Similarity.centroids(
+        e.select(col("label"), col("embedding")), "label", "embedding")
+      val re = Pq.residualize(e.select(col("vec_id"), col("label").as("cell"),
+        col("embedding")), cents, "cell", "embedding")
+      Pq.codebook(re, "vec_id", "embedding", m = 8, k = 16, iters = 2): Unit
+    }
+    assert(n == 2, s"train ran $n jobs")
   }
 
   test("codebook guards checked on the driver name the subspace and label") {

@@ -556,6 +556,109 @@ class SamplingAndRepetitionSpec extends SparkSpec {
     assert(math.abs(cm((2L, 2)) - 10.0667) < 1e-12)
   }
 
+  /** A centroid frame's rows with raw double bits, its schema, and the jobs
+    * `make` and one collect of its result ran; or the root failure. */
+  private def centroidRun(make: => org.apache.spark.sql.DataFrame)
+      : (Either[String, Set[(Option[String], Int, Long)]], String, Int) = {
+    var got: Either[String, Set[(Option[String], Int, Long)]] = null
+    var schema = ""
+    val jobs = jobsOf {
+      got = scala.util.Try {
+        val out = make
+        schema = out.schema.toString
+        out.collect().map(r => (Option(r.get(0)).map(_.toString), r.getInt(1),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(2)))).toSet
+      }.toEither.left.map(rootFailure)
+    }
+    (got, schema, jobs)
+  }
+
+  test("centroids and kmeansFit: the driver plan (cap ≥ input) and the " +
+      "Spark plan (cap = 0) return the same schema, rows and double bits " +
+      "over seeded corpora (integral, string and null labels; float and " +
+      "double vectors; duplicated seeds empty a label; iters 1–4)") {
+    val cases = Seq(
+      // (seed, n, dims, cells, dupFirst)
+      (11L, 120, 8, 3, false), (12L, 200, 16, 4, false),
+      (13L, 90, 6, 2, true), (14L, 150, 12, 5, true))
+    for ((seed, n, dims, cells, dup) <- cases) {
+      val c = seededCorpus(seed, n, dims, cells, dup)
+      val elems = n.toLong * dims
+      val labels = Seq(
+        "long" -> col("cell"), "int" -> col("cell").cast("int"),
+        "string" -> concat(lit("c"), col("cell")),
+        "null" -> when(col("cell") =!= 0, col("cell")))
+      val vectors = Seq("float" -> col("embedding"),
+        "double" -> transform(col("embedding"), _.cast("double") / 7))
+      for ((lk, label) <- labels; (vk, vec) <- vectors) {
+        val what = s"seed $seed $lk labels, $vk vectors"
+        val df = c.select(label.as("label"), vec.as("embedding"))
+        def run(cap: Long) = centroidRun(
+          Similarity.centroidsCapped(df, "label", "embedding", 4, cap))
+        val (onDriver, driverSchema, driverJobs) = run(elems)
+        val (onSpark, sparkSchema, _) = run(0)
+        assert(onDriver.isRight && onDriver == onSpark,
+          s"$what: $onDriver != $onSpark")
+        assert(driverSchema == sparkSchema, s"$what: $driverSchema")
+        assert(driverJobs == 1, s"$what: driver plan ran $driverJobs jobs")
+        assert(run(elems - 1)._3 > 1, s"$what: cap - 1 ran on the driver")
+      }
+      for ((k, iters) <- Seq((3, 1), (4, 2), (cells + 1, 3), (2, 4))) {
+        val what = s"seed $seed k=$k iters=$iters"
+        def fit(cap: Long) = centroidRun(
+          Similarity.kmeansFitCapped(c, "vec_id", "embedding", k, iters, 4, cap))
+        val (onDriver, driverSchema, driverJobs) = fit(elems)
+        val (onSpark, sparkSchema, sparkJobs) = fit(0)
+        assert(onDriver.isRight && onDriver == onSpark,
+          s"$what: $onDriver != $onSpark")
+        assert(driverSchema == sparkSchema, s"$what: $driverSchema")
+        assert(driverJobs < sparkJobs, s"$what: $driverJobs vs $sparkJobs jobs")
+        if (dup) assert(onDriver.toOption.get.map(_._1).size < k,
+          s"$what: no label emptied")
+      }
+    }
+  }
+
+  test("centroids: inputs the driver does not mirror take the Spark plan " +
+      "and fail or average exactly as it does; an empty vector is mirrored") {
+    val r = new scala.util.Random(23)
+    def vec(d: Int): Option[Seq[Option[Double]]] =
+      Some(Seq.fill(d)(Option(r.nextGaussian())))
+    val base = (1L to 12L).map(i => (Option(i % 3), vec(4)))
+    def frame(rows: Seq[(Option[Long], Option[Seq[Option[Double]]])]) =
+      rows.toDF("label", "embedding")
+    val routed = Seq(
+      "ragged vector" -> frame(base.updated(4, (Some(1L), vec(3)))),
+      "ragged vector under the null label" -> frame(base
+        .updated(4, (None, vec(4))).updated(5, (None, vec(3)))),
+      "NULL vector" -> frame(base.updated(4, (Some(1L), None))),
+      "null element" -> frame(base.updated(4,
+        (Some(1L), vec(4).map(_.updated(2, None))))),
+      "NaN element" -> frame(base.updated(4,
+        (Some(1L), vec(4).map(_.updated(2, Some(Double.NaN)))))),
+      "infinite element" -> frame(base.updated(4,
+        (Some(1L), vec(4).map(_.updated(2, Some(Double.NegativeInfinity)))))),
+      "double label" -> frame(base).withColumn("label",
+        col("label").cast("double")))
+    for ((what, df) <- routed) {
+      def run(cap: Long) = centroidRun(
+        Similarity.centroidsCapped(df, "label", "embedding", 4, cap))
+      val (got, _, jobs) = run(graft.io.DriverVectors.ElementCap)
+      val (want, _, _) = run(0)
+      assert(got == want, s"$what: $got != $want")
+      assert(jobs > 1, s"$what: ran on the driver")
+    }
+    // a label's empty vector adds no element to any of its dims, in both
+    // plans, and a label holding only empty vectors has no centroid
+    val empty = frame(base.updated(4, (Some(1L), Some(Seq.empty)))
+      .updated(6, (Some(7L), Some(Seq.empty))))
+    def run(cap: Long) = centroidRun(
+      Similarity.centroidsCapped(empty, "label", "embedding", 4, cap))
+    val (got, _, jobs) = run(graft.io.DriverVectors.ElementCap)
+    assert(got.isRight && got == run(0)._1 && jobs == 1, s"$got, $jobs jobs")
+    assert(!got.toOption.get.exists(_._1.contains("7")))
+  }
+
   test("weighted sample: probability scales with weight, integer-exact, capped") {
     val df = (1L to 3000L).map(i => (i, (i % 3) * 250L)).toDF("id", "w")
     // weights 0 / 250 / 500 at 20 bp => inclusion prob 0 / 0.5 / 1.0
