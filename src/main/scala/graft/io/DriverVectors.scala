@@ -24,28 +24,37 @@ object DriverVectors {
     * over 16 labels, residualize, PQ codebook m = 8, k = 16, 2 rounds) over
     * clustered doubles in one parquet file, local mode on 4 cores, 2 GB
     * heap, the better of 2 runs per plan after a warm-up. At 4,194,304
-    * elements (65,536 × 64 or 5,461 × 768) the driver plans took 2.2 s
-    * (D = 64) and 1.9 s (D = 768) where the Spark plans took 10.7 s and
-    * 9.7 s; the collected vectors held 67 and 64 MB of driver heap (16
-    * bytes an element: the double and its decimal units), and one
-    * driver-plan train allocated 1.7 and 2.0 GB over all threads, 0.6 and
-    * 0.8 GB of it in the collect. The driver plan stays faster above the
-    * cap (8,388,608 elements: 3.2 s against 18.5 s at D = 64; 16,777,216:
-    * 8.7 s against 44 s) but holds 133 and 263 MB there, so the cap stays
-    * where the held vectors are a sixteenth of Spark's default 1 GB driver
-    * heap. The curate workload trains on 128,000 elements. */
+    * elements (65,536 × 64 or 5,461 × 768) the driver plans took 5.4 s at
+    * both widths where the Spark plans took 11.8 s (D = 64) and 11.1 s
+    * (D = 768). The collected vectors held 67 and 64 MB of driver heap (16
+    * bytes an element: the double and its decimal units); one collect
+    * allocated 1.8 and 1.9 GB over all threads, and one driver-plan train
+    * 4.0 and 4.3 GB. Twice the cap holds twice that (133 MB at 8,388,608
+    * elements, D = 64), so the cap stays where the held vectors are a
+    * sixteenth of Spark's default 1 GB driver heap. The curate workload
+    * trains on 128,000 elements.
+    *
+    * An input above the cap pays one aborted collect before its Spark plan:
+    * the one task reads the first `cap` elements and stops. At twice the
+    * cap that read took 0.23 s (D = 64) and 0.27 s (D = 768) over a plain
+    * scan, and 0.97 and 0.83 s over a `kmeansFit` E-step, whose distance
+    * kernels then run in that one task; `kmeansFit` pays it in its first
+    * round only. The Spark plans it precedes took 7.5 and 9.5 s
+    * (centroids), 28–38 s (codebook) and 27–33 s (`kmeansFit`, 3 rounds)
+    * there, and the spread between their runs exceeded the collect. */
   val ElementCap: Long = 1L << 22
 
   /** Collected rows: row `r`'s key is `keys(r)` (an integral key, or an
     * index into `dict` for a string key) unless `nullKey(r)`, and its
-    * elements are `values(start(r) until start(r + 1))` as doubles, with
-    * `units` the same elements quantized to DECIMAL(27,9) as unscaled longs
-    * (x·10⁹). */
+    * elements are `values(start(r) until start(r + 1))` as doubles. Only
+    * these arrays cross the wire; `units`, the same elements quantized to
+    * DECIMAL(27,9) as unscaled longs (x·10⁹), is built on the driver. */
   final class Vectors(val keys: Array[Long], val nullKey: Array[Boolean],
       val dict: Array[String], val start: Array[Int],
-      val values: Array[Double], val units: Array[Long]) extends Serializable {
+      val values: Array[Double]) extends Serializable {
     def rows: Int = keys.length
     def size(r: Int): Int = start(r + 1) - start(r)
+    @transient lazy val units: Array[Long] = values.map(quantize)
   }
 
   /** `(keyCol, vecCol)` of `df` on the driver, or None when the input holds
@@ -57,9 +66,10 @@ object DriverVectors {
     *
     * The input is read through `limit(cap + 1)` by ONE task, which counts
     * elements as the rows stream in and stops at the first row past the
-    * cap or the first row the driver does not mirror: no row above the cap
-    * reaches the driver, and an input far above it is read no further
-    * than its first `cap` elements. */
+    * cap or the first null vector or null, NaN or infinite element: no row
+    * above the cap reaches the driver, and an input far above it is read
+    * no further than its first `cap` elements. The range check runs on
+    * the driver, as it quantizes. */
   def collect(df: DataFrame, keyCol: String, vecCol: String,
       cap: Long): Option[Vectors] = {
     val stringKey = df.schema(keyCol).dataType match {
@@ -80,6 +90,7 @@ object DriverVectors {
       .mapPartitions(it => Iterator(pack(it, str, cap)))
       .collect()
     rows.headOption.getOrElse(pack(Iterator.empty, str, cap))
+      .filterNot(_.units.contains(NoUnits))
   }
 
   private def pack(it: Iterator[InternalRow], str: Boolean,
@@ -88,7 +99,6 @@ object DriverVectors {
     val nullKey = new scala.collection.mutable.ArrayBuilder.ofBoolean
     val start = new scala.collection.mutable.ArrayBuilder.ofInt
     val values = new scala.collection.mutable.ArrayBuilder.ofDouble
-    val units = new scala.collection.mutable.ArrayBuilder.ofLong
     val dict = new java.util.HashMap[String, Integer]()
     var rows = 0L
     var elems = 0
@@ -104,9 +114,7 @@ object DriverVectors {
       while (i < d) {
         if (v.isNullAt(i)) return None
         val x = v.getDouble(i)
-        val u = quantize(x)
-        if (u == NoUnits) return None
-        units += u
+        if (x.isNaN || x.isInfinite) return None
         values += x
         i += 1
       }
@@ -122,7 +130,7 @@ object DriverVectors {
     val names = new Array[String](dict.size)
     dict.forEach((s, i) => names(i) = s)
     Some(new Vectors(keys.result(), nullKey.result(), names, start.result(),
-      values.result(), units.result()))
+      values.result()))
   }
 
   /** [[quantize]]'s answer for an element the driver does not mirror. */
@@ -132,25 +140,9 @@ object DriverVectors {
     * decimal form of `Double.toString(x)`, rounded half-up to 9 places —
     * as its unscaled long, or [[NoUnits]] for NaN, an infinity, or a value
     * whose unscaled form is no long (one value that is, −2⁶³·10⁻⁹, also
-    * reads NoUnits and merely takes the Spark plan).
-    *
-    * Most elements skip the `Decimal`: `Double.toString(x)` lies within
-    * ulp(x)/2 of x, so its value·10⁹ lies within 1.5 ulp(y) of y = x·10⁹
-    * (1e9·ulp(x) < 2 ulp(y), and the product rounds by ulp(y)/2). When |y|
-    * < 10¹⁵ (ulp ≤ 1/8) and the fraction of |y| is more than 4 ulp(|y|)
-    * from ½, no rounding tie lies between the two, so both round half-up
-    * to the same integer; every other element takes Spark's `Decimal`. */
+    * reads NoUnits and merely takes the Spark plan). */
   private[graft] def quantize(x: Double): Long = {
     if (x.isNaN || x.isInfinite) return NoUnits
-    val a = math.abs(x * 1e9)
-    if (a < 1e15) {
-      val f = math.floor(a)
-      val frac = a - f
-      if (math.abs(frac - 0.5) > 4 * math.ulp(a)) {
-        val u = (if (frac > 0.5) f + 1 else f).toLong
-        return if (x < 0) -u else u
-      }
-    }
     val q = Decimal(x)
     if (!q.changePrecision(27, 9)) NoUnits
     else try q.toUnscaledLong catch { case _: ArithmeticException => NoUnits }

@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Lineage-cutting materialization for frames that are consumed by multiple
   * plan branches or produced by iterative loops (connected components,
@@ -26,8 +26,7 @@ import org.apache.spark.sql.DataFrame
   * (a per-row projection of another materialized frame) costs nothing to
   * build. The final stage runs with the first action over the result;
   * loops that need it immediately follow the call with an action of their
-  * own, and [[now]] is that action for frames read by several concurrent
-  * branches.
+  * own.
   */
 object Materialize {
   def apply(df: DataFrame): DataFrame = {
@@ -38,14 +37,18 @@ object Materialize {
     else df.localCheckpoint(eager)
   }
 
-  /** Run ONE job over a frame [[apply]] returned, so its blocks, and those
-    * of every lazily materialized frame beneath it, exist before several
-    * plan branches read it at once: the broadcast branches of one join
-    * tree run concurrently, and each would compute the missing blocks
-    * itself. Counts internal rows; nothing is decoded or collected. */
-  def now(df: DataFrame): DataFrame = {
-    df.queryExecution.toRdd.count()
-    df
+  /** A frame computed ONCE, by the map side of a hash shuffle on `keys`
+    * that runs at the call, whose every later action runs only the reduce
+    * side over that shuffle's output: the reuse of [[apply]] with no row
+    * in executor storage. For frames the caller reads after the operator
+    * that built them has returned, where no point exists at which to
+    * [[release]] a checkpoint: the shuffle files, like every shuffle's,
+    * live until the ContextCleaner finds the frame unreachable, and a lost
+    * one is recomputed from the lineage. */
+  def shuffled(df: DataFrame, keys: Column*): DataFrame = {
+    val out = df.repartition(keys: _*)
+    org.apache.spark.sql.graftbridge.Bridge.overRdd(out,
+      out.queryExecution.toRdd)
   }
 
   /** Drop a materialized frame's executor-local blocks once every consumer

@@ -15,8 +15,10 @@ import org.apache.spark.sql.functions._
   *
   * Everything up to the LSH band join is a single narrow scan, fanned out
   * to every core when the corpus is a few files ([[graft.io.FanOut]], a
-  * no-op at scale); the whole pipeline shuffles on (fingerprint),
-  * (band, band_hash), and, for a large verified pair set, (component).
+  * no-op at scale); the whole pipeline shuffles on (fingerprint), (id)
+  * for the exact survivors and their MinHash state that every later step
+  * reads back, (band, band_hash), and, for a large verified pair set,
+  * (component).
   * The component step picks its plan from the pair set's measured size
   * ([[Dedup.connectedComponents]]): a union-find on the driver up to
   * [[Dedup.DriverPairCap]] pairs, the distributed star-contraction loop
@@ -59,16 +61,21 @@ object CurationPipeline {
     val tagged = quality.withColumn("predicted_lang",
       TextAnalysis.langId(col(textCol)))
     // 3. exact dedup — one fingerprint shuffle — and the MinHash state
-    // over its survivors, both materialized by ONE job before anything
-    // reads them: the survivor set feeds the LSH pair mining and the final
-    // anti-join, and the state feeds the candidate join's three branches.
-    // Run lazily, concurrent broadcast branches would each recompute the
-    // whole text chain.
+    // over its survivors, computed ONCE by the map side of one id shuffle
+    // before anything reads them: the survivors feed the returned frames,
+    // and the state the candidate join's three branches. Run lazily,
+    // concurrent broadcast branches would each recompute the whole text
+    // chain. Every later read goes back to that shuffle's output, not a
+    // checkpoint: the caller reads `kept` and `provenance` after this
+    // returns, and no point remains at which to release one.
     val (exact, state) = graft.io.Label(sc, "curate:exact") {
-      val exact = graft.io.Materialize(
-        Dedup.exactSurvivors(tagged, idCol, textCol))
-      (exact, graft.io.Materialize.now(
-        Dedup.minhashState(exact, idCol, textCol, k = 16, cfg.shingleN)))
+      val Seq(shC, sigC) = Seq("shingle_set", "sig")
+        .map(s => Cols.fresh(s"__$s", tagged.columns))
+      val both = graft.io.Materialize.shuffled(Dedup.withMinhash(
+        Dedup.exactSurvivors(tagged, idCol, textCol), textCol, k = 16,
+        cfg.shingleN, shC, sigC), col(idCol))
+      (both.drop(shC, sigC), both.select(col(idCol).as("id"),
+        col(shC).as("shingle_set"), col(sigC).as("sig")))
     }
     // 4. fuzzy dedup — banded LSH + verification + clustering; each cluster
     // keeps its minimal id (the component label)
@@ -81,9 +88,8 @@ object CurationPipeline {
     }
     val dupIds = labels.filter(col("id") =!= col("component"))
       .select(col("id").as(idCol)) // non-representatives drop
-    // the labels no longer read the pair list or the MinHash state under it
+    // the labels no longer read the pair list
     graft.io.Materialize.release(pairs)
-    graft.io.Materialize.release(state)
     // driver-plan labels are a local relation: filter by their ids as a
     // literal set, since an anti-join would broadcast the relation with one
     // more job on every action over `kept`

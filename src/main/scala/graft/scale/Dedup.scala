@@ -148,15 +148,24 @@ object Dedup {
     * frame out per batch and never recomputes it for old documents. */
   def minhashState(df: DataFrame, idCol: String, textCol: String,
       k: Int = 16, shingleN: Int = 3): DataFrame =
-    graft.io.Materialize(
-      df.select(col(idCol).as("id"), col(textCol).as("text"))
-        .withColumn("tk", TextAnalysis.tokens(lower(col("text"))))
-        .withColumn("shingle_set",
-          if (shingleN <= 1) array_distinct(col("tk"))
-          else TextAnalysis.shinglesOf(col("tk"), shingleN))
-        .withColumn("hashed", hashedElems(col("shingle_set")))
-        .withColumn("sig", minhashFromHashes(col("hashed"), k))
-        .select("id", "shingle_set", "sig"))
+    graft.io.Materialize(withMinhash(
+      df.select(col(idCol).as("id"), col(textCol).as("text")), "text", k,
+      shingleN, "shingle_set", "sig").select("id", "shingle_set", "sig"))
+
+  /** `df` with the [[minhashState]] columns of its `textCol` added as
+    * `shingleCol` and `sigCol`, unmaterialized. */
+  private[scale] def withMinhash(df: DataFrame, textCol: String, k: Int,
+      shingleN: Int, shingleCol: String, sigCol: String): DataFrame = {
+    val Seq(tk, hashed) = Seq("tk", "hashed")
+      .map(Cols.fresh(_, df.columns ++ Seq(shingleCol, sigCol)))
+    df.withColumn(tk, TextAnalysis.tokens(lower(col(textCol))))
+      .withColumn(shingleCol,
+        if (shingleN <= 1) array_distinct(col(tk))
+        else TextAnalysis.shinglesOf(col(tk), shingleN))
+      .withColumn(hashed, hashedElems(col(shingleCol)))
+      .withColumn(sigCol, minhashFromHashes(col(hashed), k))
+      .drop(tk, hashed)
+  }
 
   /** Incremental fuzzy dedup: near-dup pairs introduced by a NEW batch
     * against an existing corpus, given the corpus' persisted

@@ -1147,9 +1147,10 @@ object Similarity {
     * (the E-step scan, collected by the M-step's bounded collect, averaged
     * on the driver and read back by the next E-step with no job); above
     * it, the corpus is scanned by the E-step and re-averaged by the
-    * distributed aggregate. A label whose cluster empties simply drops out
-    * (standard Lloyd's behavior). Returns the final (label, pos, centroid)
-    * frame, `pos` 1-based. */
+    * distributed aggregate, and only the first round pays the bounded
+    * collect (every round's M-step input has the same rows). A label whose
+    * cluster empties simply drops out (standard Lloyd's behavior). Returns
+    * the final (label, pos, centroid) frame, `pos` 1-based. */
   def kmeansFit(df: DataFrame, idCol: String, vecCol: String, k: Int,
       iters: Int, scale: Int = 4): DataFrame =
     kmeansFitCapped(df, idCol, vecCol, k, iters, scale,
@@ -1167,10 +1168,14 @@ object Similarity {
       .select(col("label"), posexplode(col(vecCol)).as(Seq("pos", "v")))
       .select(col("label"), (col("pos") + 1).as("pos"),
         round(col("v").cast("double"), scale).as("centroid"))
+    // every round's M-step reads the same vectors under integral labels, so
+    // once one round takes the Spark plan the later ones skip the collect
+    var roundCap = cap
     for (_ <- 1 to iters) {
       val assigned = assignToNearest(df, cents, idCol, vecCol)
         .select(col("assigned").as("label"), col(vecCol).as("vec"))
-      cents = centroidsCapped(assigned, "label", "vec", scale, cap)
+      cents = centroidsCapped(assigned, "label", "vec", scale, roundCap)
+      if (!cents.isLocal) roundCap = 0
     }
     cents
   }

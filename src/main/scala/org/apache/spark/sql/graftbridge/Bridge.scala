@@ -37,6 +37,18 @@ object Bridge {
       case _ => ()
     }
 
+  /** A frame that scans `rdd`, the internal rows of `origin`'s plan: the
+    * frame `checkpoint` builds over its checkpointed RDD, without the
+    * checkpoint. */
+  def overRdd(origin: org.apache.spark.sql.DataFrame,
+      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow])
+      : org.apache.spark.sql.DataFrame = {
+    val ds = origin.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,
+      org.apache.spark.sql.execution.LogicalRDD.fromDataset(rdd, ds,
+        origin.isStreaming))
+  }
+
   /** A frame over rows already in Catalyst's internal form, as one
     * `LocalRelation` — what `createDataFrame(java.util.List[Row], schema)`
     * builds after converting every external `Row`, without that

@@ -198,4 +198,21 @@ class CurationSpec extends SparkSpec {
     assert(byLabel.get("null").contains(3), byLabel)
     assert(byLabel.values.sum <= 25, byLabel)
   }
+
+  test("curation leaves no cached partition behind, while its results are " +
+      "still reachable") {
+    val sc = spark.sparkContext
+    def cached = sc.getRDDStorageInfo.filter(_.numCachedPartitions > 0)
+      .map(_.id).toSet
+    val before = cached
+    val d = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
+    val docs = d.unionByName(d.withColumn("doc_id", col("doc_id") + 10000))
+    val (kept, prov) = CurationPipeline.curateTrace(docs, "doc_id", "text")
+    val ids = kept.select("doc_id").collect()
+    CurationPipeline.stats(kept).collect()
+    prov.collect()
+    // no GC has to run first: nothing the pipeline cached outlives the call
+    assert((cached -- before).isEmpty, cached -- before)
+    assert(kept.count() == ids.length && ids.nonEmpty)
+  }
 }

@@ -114,8 +114,8 @@ class IoSpec extends SparkSpec {
     val r = new scala.util.Random(5)
     val spread = (-12 to 16).flatMap(e =>
       Seq.fill(200)(r.nextGaussian() * math.pow(10, e)))
-    // doubles next to the half-way points (k + ½)·10⁻⁹, where the shortcut
-    // must hand over to Spark's Decimal
+    // doubles next to the half-way points (k + ½)·10⁻⁹, where half-up
+    // rounding of the decimal form decides
     val ties = (1 to 2000).flatMap { _ =>
       val t = (math.abs(r.nextLong() % 1000000000000L) + 0.5) / 1e9
       Seq(t, math.nextUp(t), math.nextDown(t), -t)
