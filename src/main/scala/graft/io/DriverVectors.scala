@@ -2,13 +2,17 @@ package graft.io
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import scala.util.control.NonFatal
 
 /** Keyed vectors collected to the driver when they fit: the input side of
   * the size-chosen k-means and PQ M-steps ([[graft.scale.Similarity
-  * .centroids]], [[graft.scale.Pq.codebook]]). One bounded collect decides
-  * and fetches at once, so an input that fits costs one job and an input
+  * .centroids]], [[graft.scale.Pq.codebook]]) and of the size-chosen PQ
+  * probe ([[graft.scale.Pq.encode]], [[graft.scale.Pq.adcTopK]], whose
+  * code tables come as extra integral columns beside the key). One bounded
+  * collect decides and fetches at once, so an input that fits costs one job and an input
   * that does not costs a read of at most `cap` elements before its caller
   * takes the Spark plan.
   *
@@ -19,7 +23,8 @@ import org.apache.spark.sql.types._
   * finishes as `round(CAST(sum AS DOUBLE) / n, scale)` does. */
 object DriverVectors {
 
-  /** Vector elements (rows × D) up to which the M-steps run on the driver.
+  /** Vector elements (rows × D) up to which the M-steps, the encode and the
+    * ADC run on the driver.
     * Set from a synthetic probe of the curate train (per-label centroids
     * over 16 labels, residualize, PQ codebook m = 8, k = 16, 2 rounds) over
     * clustered doubles in one parquet file, local mode on 4 cores, 2 GB
@@ -45,81 +50,117 @@ object DriverVectors {
   val ElementCap: Long = 1L << 22
 
   /** Collected rows: row `r`'s key is `keys(r)` (an integral key, or an
-    * index into `dict` for a string key) unless `nullKey(r)`, and its
-    * elements are `values(start(r) until start(r + 1))` as doubles. Only
-    * these arrays cross the wire; `units`, the same elements quantized to
-    * DECIMAL(27,9) as unscaled longs (x·10⁹), is built on the driver. */
+    * index into `dict` for a string key) unless `nullKey(r)`, its elements
+    * are `values(start(r) until start(r + 1))` as doubles, and its value of
+    * the `j`-th extra integral column is `extra(j)(r)`. Only these arrays
+    * cross the wire; `units`, the same elements quantized to DECIMAL(27,9)
+    * as unscaled longs (x·10⁹), is built on the driver when a caller first
+    * reads it: the M-steps do, to sum exactly, and take the Spark plan when
+    * an element has [[NoUnits]]; the E-step and ADC callers never do. */
   final class Vectors(val keys: Array[Long], val nullKey: Array[Boolean],
       val dict: Array[String], val start: Array[Int],
-      val values: Array[Double]) extends Serializable {
+      val values: Array[Double], val extra: Array[Array[Long]])
+      extends Serializable {
     def rows: Int = keys.length
     def size(r: Int): Int = start(r + 1) - start(r)
     @transient lazy val units: Array[Long] = values.map(quantize)
+
+    /** Set field `j` of `row`, of the key column's type `t`, to key `key`
+      * (a value of `keys`). */
+    def setKey(row: InternalRow, j: Int, t: DataType, key: Long): Unit =
+      t match {
+        case StringType =>
+          row.update(j, UTF8String.fromString(dict(key.toInt)))
+        case _ => LocalFrame.setIntegral(row, j, t, key)
+      }
   }
 
-  /** `(keyCol, vecCol)` of `df` on the driver, or None when the input holds
-    * more than `cap` elements (or more than `cap` rows) or is not one the
-    * driver mirrors: a key neither integral nor a default-collation string,
-    * elements not numeric, a null vector, or an element that is null, NaN,
-    * infinite or outside a long's DECIMAL(27,9) unscaled range. `cap = 0`
-    * starts no job.
+  /** `(keyCol, vecCol, extra…)` of `df` on the driver, or None when the
+    * input holds more than `cap` elements (or more than `cap` rows) or is
+    * not one the driver mirrors: a key neither integral nor a
+    * default-collation string, elements not numeric, a null vector, an
+    * element that is null, NaN or infinite, an extra column that is not
+    * integral or holds a null, or a read that fails (the caller's Spark
+    * plan then raises the failure when an action runs it). A row costs
+    * its vector's length plus one element per extra column; without a
+    * `vecCol` every row's vector is empty. `cap = 0` starts no job.
     *
     * The input is read through `limit(cap + 1)` by ONE task, which counts
     * elements as the rows stream in and stops at the first row past the
-    * cap or the first null vector or null, NaN or infinite element: no row
-    * above the cap reaches the driver, and an input far above it is read
-    * no further than its first `cap` elements. The range check runs on
-    * the driver, as it quantizes. */
-  def collect(df: DataFrame, keyCol: String, vecCol: String,
-      cap: Long): Option[Vectors] = {
-    val stringKey = df.schema(keyCol).dataType match {
-      case StringType => Some(true)
-      case ByteType | ShortType | IntegerType | LongType => Some(false)
-      case _ => None
-    }
-    val numeric = df.schema(vecCol).dataType match {
-      case ArrayType(_: NumericType, _) => true
+    * cap or the first value the driver does not mirror: no row above the
+    * cap reaches the driver, and an input far above it is read no further
+    * than its first `cap` elements. */
+  def collect(df: DataFrame, keyCol: String, vecCol: Option[String],
+      cap: Long, extra: Seq[String] = Nil): Option[Vectors] = {
+    val integral: DataType => Boolean = {
+      case ByteType | ShortType | IntegerType | LongType => true
       case _ => false
     }
-    if (cap <= 0 || stringKey.isEmpty || !numeric) return None
+    val stringKey = df.schema(keyCol).dataType match {
+      case StringType => Some(true)
+      case t if integral(t) => Some(false)
+      case _ => None
+    }
+    val numeric = vecCol.forall(c => df.schema(c).dataType match {
+      case ArrayType(_: NumericType, _) => true
+      case _ => false
+    })
+    if (cap <= 0 || stringKey.isEmpty || !numeric ||
+        !extra.forall(c => integral(df.schema(c).dataType))) return None
     val str = stringKey.get
     val key = if (str) col(keyCol) else col(keyCol).cast(LongType)
-    val rows = df.select(key, col(vecCol).cast(ArrayType(DoubleType)))
-      .coalesce(1).limit(math.min(cap, Int.MaxValue - 1L).toInt + 1)
-      .queryExecution.toRdd
-      .mapPartitions(it => Iterator(pack(it, str, cap)))
-      .collect()
-    rows.headOption.getOrElse(pack(Iterator.empty, str, cap))
-      .filterNot(_.units.contains(NoUnits))
+    val vec = vecCol.fold(lit(null).cast(ArrayType(DoubleType)))(c =>
+      col(c).cast(ArrayType(DoubleType)))
+    val hasVec = vecCol.isDefined
+    val n = extra.size
+    val rows =
+      try df.select(key +: vec +: extra.map(col(_).cast(LongType)): _*)
+        .coalesce(1).limit(math.min(cap, Int.MaxValue - 1L).toInt + 1)
+        .queryExecution.toRdd
+        .mapPartitions(it => Iterator(pack(it, str, hasVec, n, cap)))
+        .collect()
+      catch { case NonFatal(_) => return None }
+    rows.headOption.getOrElse(pack(Iterator.empty, str, hasVec, n, cap))
   }
 
-  private def pack(it: Iterator[InternalRow], str: Boolean,
-      cap: Long): Option[Vectors] = {
+  private def pack(it: Iterator[InternalRow], str: Boolean, hasVec: Boolean,
+      n: Int, cap: Long): Option[Vectors] = {
     val keys = new scala.collection.mutable.ArrayBuilder.ofLong
     val nullKey = new scala.collection.mutable.ArrayBuilder.ofBoolean
     val start = new scala.collection.mutable.ArrayBuilder.ofInt
     val values = new scala.collection.mutable.ArrayBuilder.ofDouble
+    val extra = Array.fill(n)(new scala.collection.mutable.ArrayBuilder.ofLong)
     val dict = new java.util.HashMap[String, Integer]()
     var rows = 0L
-    var elems = 0
+    var elems = 0L
+    var vals = 0
     start += 0
     while (it.hasNext) {
       val r = it.next()
       rows += 1
-      if (rows > cap || r.isNullAt(1)) return None
-      val v = r.getArray(1)
-      val d = v.numElements()
-      if (elems + d.toLong > cap) return None
-      var i = 0
-      while (i < d) {
-        if (v.isNullAt(i)) return None
-        val x = v.getDouble(i)
-        if (x.isNaN || x.isInfinite) return None
-        values += x
-        i += 1
+      if (rows > cap || (hasVec && r.isNullAt(1))) return None
+      val d = if (hasVec) r.getArray(1).numElements() else 0
+      if (elems + d + n > cap) return None
+      if (hasVec) {
+        val v = r.getArray(1)
+        var i = 0
+        while (i < d) {
+          if (v.isNullAt(i)) return None
+          val x = v.getDouble(i)
+          if (x.isNaN || x.isInfinite) return None
+          values += x
+          i += 1
+        }
       }
-      elems += d
-      start += elems
+      var j = 0
+      while (j < n) {
+        if (r.isNullAt(2 + j)) return None
+        extra(j) += r.getLong(2 + j)
+        j += 1
+      }
+      vals += d
+      elems += d + n
+      start += vals
       nullKey += r.isNullAt(0)
       keys += (if (r.isNullAt(0)) 0L
         else if (str) {
@@ -130,7 +171,7 @@ object DriverVectors {
     val names = new Array[String](dict.size)
     dict.forEach((s, i) => names(i) = s)
     Some(new Vectors(keys.result(), nullKey.result(), names, start.result(),
-      values.result()))
+      values.result(), extra.map(_.result())))
   }
 
   /** [[quantize]]'s answer for an element the driver does not mirror. */

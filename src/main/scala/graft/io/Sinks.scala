@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -77,12 +77,17 @@ object Sinks {
   /** Atomic keyed overwrite for file-backed tables: write to a sibling temp
     * directory, then swap via rename — the file-based equivalent of the
     * reference's transactional REPLACE (SURVEY §7.4.4). Reading `path` while
-    * writing its replacement is safe because the write lands in `path.tmp`. */
+    * writing its replacement is safe because the write lands in `path.tmp`.
+    * A crash between the two renames leaves the old table whole at
+    * `path.__old__`; [[recover]] puts it back, here at entry and in every
+    * reader of the tables this writes, so no reader sees the table absent
+    * and no later call deletes its only copy. */
   def atomicOverwrite(spark: SparkSession, df: DataFrame, path: String): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(path + ".__tmp__")
     val dst = new Path(path)
-    val bak = new Path(path + ".__old__")
+    val bak = new Path(path + BackupSuffix)
+    recover(fs, dst)
     Label(spark.sparkContext, s"write:${dst.getName}") {
       df.write.mode("overwrite").parquet(tmp.toString)
     }
@@ -91,4 +96,18 @@ object Sinks {
     fs.rename(tmp, dst)
     if (fs.exists(bak)) fs.delete(bak, true)
   }
+
+  private val BackupSuffix = ".__old__"
+
+  /** Finish an [[atomicOverwrite]] that crashed between its renames: when
+    * `path` is absent and `path.__old__` exists, rename the latter back,
+    * so the table reads as it was before the interrupted write. Returns
+    * whether `path` exists afterwards. One `exists` call when it does.
+    * Under the single-writer contract `path` is absent only between one
+    * writer's own renames, so only a crash leaves it so. */
+  private[graft] def recover(fs: FileSystem, path: Path): Boolean =
+    fs.exists(path) || {
+      val bak = new Path(path.toString + BackupSuffix)
+      fs.exists(bak) && fs.rename(bak, path)
+    }
 }

@@ -26,7 +26,7 @@ object StateStore {
 
   def load(spark: SparkSession, path: String): DataFrame = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(path))) {
+    if (Sinks.recover(fs, new Path(path))) {
       // the state schema is CANONICAL ((_id, hash) strings — save() casts,
       // the partitioned sync writes the same), so pin it instead of paying
       // driver-side footer sampling + partition-schema inference on every

@@ -11,17 +11,24 @@ import org.apache.spark.sql.types._
   * (here m·8 bits instead of D·32), and query scoring becomes `m` table
   * lookups per candidate instead of a D-dim float kernel.
   *
-  * 100 TB shape: the codebook is tiny (m·k·(D/m) floats) and its Lloyd's
-  * loop is held on the driver, with the plan chosen from the measured
-  * input. An input of up to [[graft.io.DriverVectors.ElementCap]] vector
-  * elements is collected once and trained on the driver (one job); above
-  * it — every corpus at 100 TB — each round is ONE collected aggregate
-  * (one scan of the subvector frame against a broadcast centroid literal,
-  * grouped into the next centroids), nothing accumulates and no round
-  * re-plans an earlier round's frame. Encoding is one zero-shuffle scan.
-  * ADC search joins the (id, subspace, code) table against a BROADCAST
-  * per-query lookup table (q·m·k rows) and reduces with one hash
-  * aggregation — the corpus-sized side never shuffles on a float.
+  * The codebook's Lloyd loop, the encode and the ADC top-k pick their plan
+  * from the measured input: one bounded collect
+  * ([[graft.io.DriverVectors.collect]], up to
+  * [[graft.io.DriverVectors.ElementCap]] vector elements) decides and
+  * fetches at once, and an input that fits finishes on the driver over
+  * primitive arrays, returning a local frame with the Spark plan's schema,
+  * rows and values. A 2,000-vector index thus trains and answers 50
+  * queries in a handful of small jobs and no shuffle. An input the driver
+  * does not mirror, or one above the cap (every corpus at 100 TB), runs
+  * the Spark plans, which have the 100 TB shape: the codebook is tiny
+  * (m·k·(D/m) floats) and each Lloyd round is ONE collected aggregate (one
+  * scan of the subvector frame against a centroid literal, grouped into
+  * the next centroids), so nothing accumulates and no round re-plans an
+  * earlier round's frame. Encoding is one zero-shuffle scan. ADC search
+  * joins the (id, subspace, code) table against a BROADCAST per-query
+  * lookup table (q·m·k rows) and reduces with one hash aggregation — the
+  * corpus-sized side never shuffles on a float.
+  *
   * Determinism mirrors the k-means family: min-id seeding (no RNG),
   * per-round `round(·, scale)` centroid quantization, argmin ties broken
   * to the smallest label, and the compared distance surface is pure int64
@@ -270,16 +277,14 @@ object Pq {
     * or None for an input it does not mirror (see [[codebook]]). */
   private def driverLloyd(df: DataFrame, idCol: String, vecCol: String,
       m: Int, k: Int, iters: Int, scale: Int, cap: Long): Option[Entries] = {
-    val mirrored = (df.schema(idCol).dataType,
-        df.schema(vecCol).dataType) match {
-      case (ByteType | ShortType | IntegerType | LongType,
-        ArrayType(FloatType | DoubleType, _)) => true
+    val integralIds = df.schema(idCol).dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
       case _ => false
     }
-    if (!mirrored) return None
-    val v = graft.io.DriverVectors.collect(df, idCol, vecCol, cap) match {
-      case Some(v) => v
-      case None => return None
+    if (!integralIds || !floatVectors(df, vecCol)) return None
+    val v = graft.io.DriverVectors.collect(df, idCol, Some(vecCol), cap) match {
+      case Some(v) if !v.units.contains(graft.io.DriverVectors.NoUnits) => v
+      case _ => return None
     }
     val n = v.rows
     if (n == 0 || v.nullKey.contains(true)) return None
@@ -308,27 +313,69 @@ object Pq {
     Some(rows)
   }
 
+  /** Whether `vecCol` holds float or double vectors: the element types the
+    * native squared-L2 kernel reads, and so the ones the driver plans
+    * mirror. */
+  private def floatVectors(df: DataFrame, vecCol: String): Boolean =
+    df.schema(vecCol).dataType match {
+      case ArrayType(FloatType | DoubleType, _) => true
+      case _ => false
+    }
+
+  /** A codebook as the driver plans score it: each entry's centroid, and
+    * each subspace's entries in label order. */
+  private final class Book(rows: Entries, m: Int) {
+    private val cents = rows.map(_._3.toArray)
+    val bySub: Array[Array[Int]] =
+      Array.tabulate(m)(j => rows.indices.filter(rows(_)._1 == j).toArray)
+    private val labels = bySub.map(_.map(rows(_)._2))
+
+    /** Whether scoring on the driver mirrors the Spark plans: every
+      * subspace has an entry and every centroid holds `sub` finite
+      * elements (a shorter one scores null there, and a NaN or infinite
+      * one scores NaN or ∞). */
+    def mirrored(sub: Int): Boolean = bySub.forall(_.nonEmpty) &&
+      cents.forall(c => c.length == sub && c.forall(x => !x.isNaN &&
+        !x.isInfinite))
+
+    /** The entry of subspace `j` labelled `label`, or -1. */
+    def entry(j: Int, label: Long): Int = {
+      val i = java.util.Arrays.binarySearch(labels(j), label)
+      if (i < 0) -1 else bySub(j)(i)
+    }
+
+    /** Squared L2 from the subvector at `values(off)` to entry `e`, by the
+      * [[graft.functions.VectorKernels.sqL2]] loop in Spark's double
+      * order. */
+    def dist(values: Array[Double], off: Int, e: Int): Double =
+      graft.functions.VectorKernels.sqL2(values, off, cents(e), cents(e).length)
+
+    /** The E-step: the entry of subspace `j` nearest to the subvector at
+      * `values(off)`, ties to the smallest label, as `array_min` over
+      * (d, label) structs breaks them. */
+    def nearest(values: Array[Double], off: Int, j: Int): Int = {
+      var best = -1
+      var bestD = 0.0
+      for (e <- bySub(j)) {
+        val d = dist(values, off, e)
+        if (best < 0 || org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+            .compareDoubles(d, bestD) < 0) { best = e; bestD = d }
+      }
+      best
+    }
+  }
+
   /** One driver-held Lloyd round: each subvector goes to its nearest entry
-    * of its subspace by the [[graft.functions.VectorKernels.sqL2]] loop
-    * (Spark's double order; ties to the smallest label, as `array_min` over
-    * (d, label) structs breaks them), then every entry that kept a
+    * of its subspace ([[Book.nearest]]), then every entry that kept a
     * subvector averages them decimal-exactly, as [[mStep]] does. */
   private def driverRound(v: graft.io.DriverVectors.Vectors, rows: Entries,
       m: Int, sub: Int, scale: Int): Entries = {
-    val bySub = Array.tabulate(m)(j =>
-      rows.indices.filter(rows(_)._1 == j).toArray)
-    val cents = rows.map(_._3.toArray)
+    val book = new Book(rows, m)
     val sums = new graft.io.DriverVectors.Sums(rows.length * sub)
     val cnt = new Array[Long](rows.length)
     for (r <- 0 until v.rows; j <- 0 until m) {
       val off = v.start(r) + j * sub
-      var best = -1
-      var bestD = 0.0
-      for (e <- bySub(j)) {
-        val d = graft.functions.VectorKernels.sqL2(v.values, off, cents(e), sub)
-        if (best < 0 || org.apache.spark.sql.catalyst.util.SQLOrderingUtil
-            .compareDoubles(d, bestD) < 0) { best = e; bestD = d }
-      }
+      val best = book.nearest(v.values, off, j)
       cnt(best) += 1
       for (p <- 0 until sub) sums.add(best * sub + p, v.units(off + p))
     }
@@ -414,15 +461,64 @@ object Pq {
   }
 
   /** Encode every vector as m integer codes: (id, subspace, code) — the
-    * compressed index representation (m·8 bits/vector at k ≤ 256). One
-    * zero-shuffle scan against the broadcast codebook literal, fanned out
-    * to every core when the input is narrow (see [[graft.io.FanOut]]). */
+    * compressed index representation (m·8 bits/vector at k ≤ 256), each
+    * code the label of the subvector's nearest entry in its subspace, ties
+    * to the smallest label.
+    *
+    * The plan is chosen from the measured input:
+    *
+    *  - up to [[graft.io.DriverVectors.ElementCap]] elements of float or
+    *    double vectors with non-null integral or string ids, ONE bounded
+    *    collect ([[graft.io.DriverVectors.collect]]) fetches the input and
+    *    the driver encodes it with the E-step of the driver-held Lloyd
+    *    round ([[Book.nearest]]), returning a local frame with the Spark
+    *    plan's schema and rows: one job;
+    *  - any other input (more elements; a null id; a null, ragged, NaN or
+    *    infinite vector, which the Spark plan raises or scores; a codebook
+    *    with a short or non-finite centroid or an empty subspace) runs the
+    *    Spark plan, the 100 TB shape: one zero-shuffle scan against the
+    *    codebook literal, fanned out to every core when the input is
+    *    narrow (see [[graft.io.FanOut]]). Its errors keep their messages
+    *    and are raised when an action runs it. */
   def encode(df: DataFrame, cb: DataFrame, idCol: String,
-      vecCol: String): DataFrame = {
+      vecCol: String): DataFrame =
+    encodeCapped(df, cb, idCol, vecCol, graft.io.DriverVectors.ElementCap)
+
+  /** [[encode]] with the driver-plan cap as a parameter: `cap = 0` always
+    * runs the Spark plan. */
+  private[graft] def encodeCapped(df: DataFrame, cb: DataFrame, idCol: String,
+      vecCol: String, cap: Long): DataFrame = {
     val (m, dims) = cbDims(cb)
-    assignSub(subvectors(graft.io.FanOut(df.select(col(idCol), col(vecCol))),
-        idCol, vecCol, m, dims), cbRows(cb))
+    val rows = cbRows(cb)
+    val plan = assignSub(subvectors(
+        graft.io.FanOut(df.select(col(idCol), col(vecCol))),
+        idCol, vecCol, m, dims), rows)
       .select(col(idCol), col("subspace"), col("label").as("code"))
+    driverEncode(df, rows, idCol, vecCol, m, dims, plan.schema, cap)
+      .getOrElse(plan)
+  }
+
+  /** The driver plan of [[encode]] as a local frame of `schema`, or None
+    * for an input it does not mirror (see [[encode]]). */
+  private def driverEncode(df: DataFrame, rows: Entries, idCol: String,
+      vecCol: String, m: Int, dims: Int, schema: StructType,
+      cap: Long): Option[DataFrame] = {
+    val sub = dims / m
+    val book = new Book(rows, m)
+    if (!floatVectors(df, vecCol) || !book.mirrored(sub)) return None
+    val v = graft.io.DriverVectors.collect(df, idCol, Some(vecCol), cap) match {
+      case Some(v) if !v.nullKey.contains(true) &&
+        (0 until v.rows).forall(v.size(_) == dims) => v
+      case _ => return None
+    }
+    val idType = schema(0).dataType
+    Some(graft.io.LocalFrame(df.sparkSession, schema, v.rows * m) {
+      (i, row) =>
+        val (r, j) = (i / m, i % m)
+        v.setKey(row, 0, idType, v.keys(r))
+        row.setInt(1, j)
+        row.setLong(2, rows(book.nearest(v.values, v.start(r) + j * sub, j))._2)
+    })
   }
 
   /** (m, D) from a codebook frame — derived from the memoized entries. */
@@ -435,25 +531,59 @@ object Pq {
 
   /** ADC (asymmetric distance computation) top-k: for each query, build
     * the per-subspace lookup table of int64 NANO squared-L2 distances to
-    * every centroid (`floor(d·10⁹)` — q·m·k rows, broadcast), then score
-    * candidates by summing m integer lookups joined on (subspace, code)
-    * and keep the k nearest under the deterministic (dist, id) order.
-    * The corpus side touches only the compressed code table — the whole
-    * point of PQ at 100 TB (raw vectors never rejoin the scan).
+    * every centroid (`floor(d·10⁹)`), then score candidates by summing
+    * their m lookups and keep the k nearest under the deterministic
+    * (dist, id) order. The corpus side touches only the compressed code
+    * table — the whole point of PQ at 100 TB (raw vectors never rejoin
+    * the scan).
     *
     * `cellCol` (IVFADC, Jégou '11 §V): when set, `queries` and `codes`
     * must both carry that column (a coarse IVF cell label) and a
-    * candidate is scored ONLY for queries in its cell — the join key
-    * grows to (cell, subspace, code), pruning ~(1 − 1/cells) of the code
-    * table per query before any arithmetic happens.
+    * candidate is scored ONLY for queries in its cell, pruning
+    * ~(1 − 1/cells) of the code table per query before any arithmetic
+    * happens.
+    *
+    * The plan is chosen from the measured input:
+    *
+    *  - when the queries and the code table each fit in
+    *    [[graft.io.DriverVectors.ElementCap]] elements, one bounded
+    *    collect of each ([[graft.io.DriverVectors.collect]]; the query
+    *    cell and the codes' subspace, code and cell ride as extra integral
+    *    columns) feeds a driver scan over primitive arrays: the lookup
+    *    tables as `floor(d·10⁹)` longs, candidates restricted to the
+    *    query's cell, m lookups summed exactly, the k smallest kept by
+    *    (dist_nano, neighbor_id). It returns a local frame with the Spark
+    *    plan's schema, rows and values: two jobs;
+    *  - any input the driver does not mirror runs the Spark plan, the
+    *    100 TB shape, whose errors keep their messages and are raised when
+    *    an action runs it: more elements; a null query or neighbor id or
+    *    cell; duplicate query ids; a neighbor without exactly one code per
+    *    subspace, with a code that is not a label of its subspace, or
+    *    spread over two cells; a null, ragged, NaN or infinite query
+    *    vector; a short or non-finite centroid; a lookup or sum outside
+    *    the long range. That plan tags each query's LUT rows with its cell,
+    *    joins the code table against the BROADCAST LUT (q·m·k rows) on
+    *    (subspace, code[, cell]) and reduces with one hash aggregation and
+    *    a per-query window — the corpus-sized side never shuffles on a
+    *    float.
+    *
     * Returns (query_id, rnk, neighbor_id, dist_nano). */
   def adcTopK(queries: DataFrame, codes: DataFrame, cb: DataFrame,
       idCol: String, vecCol: String, k: Int,
-      cellCol: Option[String] = None): DataFrame = {
+      cellCol: Option[String] = None): DataFrame =
+    adcTopKCapped(queries, codes, cb, idCol, vecCol, k, cellCol,
+      graft.io.DriverVectors.ElementCap)
+
+  /** [[adcTopK]] with the driver-plan cap as a parameter: `cap = 0` always
+    * runs the Spark plan. */
+  private[graft] def adcTopKCapped(queries: DataFrame, codes: DataFrame,
+      cb: DataFrame, idCol: String, vecCol: String, k: Int,
+      cellCol: Option[String], cap: Long): DataFrame = {
     require(k > 0, "k must be positive")
     val (m, dims) = cbDims(cb)
+    val rows = cbRows(cb)
     val lut0 = subvectors(queries, idCol, vecCol, m, dims)
-      .withColumn("sc", explode(scoredAgainst(codebookLiteral(cbRows(cb)))))
+      .withColumn("sc", explode(scoredAgainst(codebookLiteral(rows))))
       .select(col(idCol).as("query_id"), col("subspace"),
         col("sc.label").as("code"),
         floor(col("sc.d") * 1e9).cast("long").as("d_nano"))
@@ -463,7 +593,7 @@ object Pq {
       lut0.join(queries.select(col(idCol).as("query_id"), col(cc)),
         Seq("query_id"))
     }
-    codes
+    val plan = codes
       .join(broadcast(lut), Seq("subspace", "code") ++ cellCol)
       .groupBy(col("query_id"), col(idCol).as("neighbor_id"))
       .agg(sum(col("d_nano")).as("dist_nano"),
@@ -481,6 +611,107 @@ object Pq {
           .orderBy(col("dist_nano").asc, col("neighbor_id").asc)))
       .filter(col("rnk") <= k)
       .select("query_id", "rnk", "neighbor_id", "dist_nano")
+    driverAdc(queries, codes, rows, idCol, vecCol, k, cellCol, m, dims,
+      plan.schema, cap).getOrElse(plan)
+  }
+
+  /** The driver plan of [[adcTopK]] as a local frame of `schema`, or None
+    * for an input it does not mirror (see [[adcTopK]]). */
+  private def driverAdc(queries: DataFrame, codes: DataFrame, rows: Entries,
+      idCol: String, vecCol: String, k: Int, cellCol: Option[String], m: Int,
+      dims: Int, schema: StructType, cap: Long): Option[DataFrame] = {
+    import graft.io.DriverVectors
+    val sub = dims / m
+    val book = new Book(rows, m)
+    if (!floatVectors(queries, vecCol) || !book.mirrored(sub)) return None
+    val q = DriverVectors.collect(queries, idCol, Some(vecCol), cap,
+        cellCol.toSeq) match {
+      case Some(q) if !q.nullKey.contains(true) &&
+        (0 until q.rows).forall(q.size(_) == dims) &&
+        q.keys.distinct.length == q.rows => q
+      case _ => return None
+    }
+    val c = DriverVectors.collect(codes, idCol, None, cap,
+        Seq("subspace", "code") ++ cellCol) match {
+      case Some(c) if !c.nullKey.contains(true) => c
+      case _ => return None
+    }
+    // neighbors in id order: integral keys sort as the ids, string keys
+    // (dictionary indices) by their UTF-8 bytes, as Spark orders strings
+    val nbKeys = c.keys.distinct
+    java.util.Arrays.sort(nbKeys)
+    val g = nbKeys.length
+    val byId = if (codes.schema(idCol).dataType != StringType)
+        Array.range(0, g)
+      else {
+        val utf8 = nbKeys.map(i =>
+          org.apache.spark.unsafe.types.UTF8String.fromString(c.dict(i.toInt)))
+        Array.range(0, g).sortWith((a, b) => utf8(a).compareTo(utf8(b)) < 0)
+      }
+    // each neighbor's entry per subspace, and its cell
+    val code = Array.fill(g * m)(-1)
+    val cell = new Array[Long](g)
+    val hasCell = new Array[Boolean](g)
+    for (r <- 0 until c.rows) {
+      val nb = java.util.Arrays.binarySearch(nbKeys, c.keys(r))
+      val j = c.extra(0)(r)
+      if (j < 0 || j >= m || code(nb * m + j.toInt) >= 0) return None
+      val e = book.entry(j.toInt, c.extra(1)(r))
+      if (e < 0) return None
+      code(nb * m + j.toInt) = e
+      if (cellCol.isDefined) {
+        if (hasCell(nb) && cell(nb) != c.extra(2)(r)) return None
+        cell(nb) = c.extra(2)(r)
+        hasCell(nb) = true
+      }
+    }
+    if (code.contains(-1)) return None
+    val byCell = byId.groupBy(nb => cell(nb))
+    val outQ = new scala.collection.mutable.ArrayBuilder.ofInt
+    val outR = new scala.collection.mutable.ArrayBuilder.ofInt
+    val outNb = new scala.collection.mutable.ArrayBuilder.ofInt
+    val outD = new scala.collection.mutable.ArrayBuilder.ofLong
+    val lut = new Array[Long](rows.length)
+    for (qi <- 0 until q.rows) {
+      for (j <- 0 until m; e <- book.bySub(j)) {
+        val x = book.dist(q.values, q.start(qi) + j * sub, e) * 1e9
+        if (!(x < 9.223372036854775807e18)) return None
+        lut(e) = math.floor(x).toLong
+      }
+      // the k smallest (dist, id): candidates arrive in id order, so a
+      // later one enters only with a strictly smaller distance
+      val cands = if (cellCol.isEmpty) byId
+        else byCell.getOrElse(q.extra(0)(qi), Array.emptyIntArray)
+      val topD = new Array[Long](math.min(k, cands.length))
+      val topN = new Array[Int](topD.length)
+      var n = 0
+      for (nb <- cands) {
+        var d = 0L
+        try for (j <- 0 until m) d = Math.addExact(d, lut(code(nb * m + j)))
+        catch { case _: ArithmeticException => return None }
+        if (n < topD.length || d < topD(n - 1)) {
+          var i = math.min(n, topD.length - 1)
+          while (i > 0 && topD(i - 1) > d) {
+            topD(i) = topD(i - 1); topN(i) = topN(i - 1); i -= 1
+          }
+          topD(i) = d; topN(i) = nb
+          if (n < topD.length) n += 1
+        }
+      }
+      for (i <- 0 until n) {
+        outQ += qi; outR += i + 1; outNb += topN(i); outD += topD(i)
+      }
+    }
+    val (oq, or, onb, od) =
+      (outQ.result(), outR.result(), outNb.result(), outD.result())
+    val (qType, nType) = (schema(0).dataType, schema(2).dataType)
+    Some(graft.io.LocalFrame(queries.sparkSession, schema, oq.length) {
+      (i, row) =>
+        q.setKey(row, 0, qType, q.keys(oq(i)))
+        row.setInt(1, or(i))
+        c.setKey(row, 2, nType, nbKeys(onb(i)))
+        row.setLong(3, od(i))
+    })
   }
 
   /** Per-subspace quantization-error sufficient statistics: the int64
@@ -519,10 +750,20 @@ object Pq {
     * `d2_nano = floor(d2·10⁹)` — the pure-int64 gate surface. */
   def adcRerankTopK(queries: DataFrame, corpus: DataFrame, codes: DataFrame,
       cb: DataFrame, idCol: String, vecCol: String, k: Int, kPrime: Int,
-      cellCol: Option[String] = None): DataFrame = {
+      cellCol: Option[String] = None): DataFrame =
+    adcRerankTopKCapped(queries, corpus, codes, cb, idCol, vecCol, k, kPrime,
+      cellCol, graft.io.DriverVectors.ElementCap)
+
+  /** [[adcRerankTopK]] with its [[adcTopK]] stage's driver-plan cap as a
+    * parameter: `cap = 0` always runs the Spark plan. */
+  private[graft] def adcRerankTopKCapped(queries: DataFrame,
+      corpus: DataFrame, codes: DataFrame, cb: DataFrame, idCol: String,
+      vecCol: String, k: Int, kPrime: Int, cellCol: Option[String],
+      cap: Long): DataFrame = {
     require(k > 0, "k must be positive")
     require(kPrime >= k, s"kPrime=$kPrime must be >= k=$k")
-    val cand = adcTopK(queries, codes, cb, idCol, vecCol, kPrime, cellCol)
+    val cand = adcTopKCapped(queries, codes, cb, idCol, vecCol, kPrime,
+        cellCol, cap)
       .select(col("query_id"), col("neighbor_id"))
     val cvec = corpus.select(col(idCol).as("neighbor_id"),
       col(vecCol).as("__cvec"))

@@ -992,8 +992,9 @@ object Similarity {
     * labels, and the means are computed on the driver over primitive
     * arrays and returned as a local frame: one job, and the same schema,
     * rows and double bits as the Spark plan. Any other input (more
-    * elements, a null vector, a null, NaN or infinite element, another
-    * label type) and any ragged input take the Spark plan: a two-phase
+    * elements, a null vector, a null, NaN or infinite element or one
+    * outside a long's DECIMAL(27,9) unscaled range, another label type)
+    * and any ragged input take the Spark plan: a two-phase
     * hash aggregate with map-side partial sums, #labels × dim reduced rows
     * regardless of corpus size — the 100 TB shape.
     *
@@ -1013,7 +1014,8 @@ object Similarity {
   private[graft] def centroidsCapped(df: DataFrame, labelCol: String,
       vecCol: String, scale: Int, cap: Long): DataFrame = {
     val plan = sparkCentroids(df, labelCol, vecCol, scale)
-    graft.io.DriverVectors.collect(df, labelCol, vecCol, cap)
+    graft.io.DriverVectors.collect(df, labelCol, Some(vecCol), cap)
+      .filterNot(_.units.contains(graft.io.DriverVectors.NoUnits))
       .flatMap(driverCentroids(df.sparkSession, _, plan.schema, scale))
       .getOrElse(plan)
   }
@@ -1081,12 +1083,7 @@ object Similarity {
     val labelType = schema("label").dataType
     Some(graft.io.LocalFrame(spark, schema, cells) { (c, row) =>
       val gi = cellGroup(c)
-      if (gi < g) labelType match {
-        case _: org.apache.spark.sql.types.StringType => row.update(0,
-          org.apache.spark.unsafe.types.UTF8String.fromString(
-            v.dict(keys(gi).toInt)))
-        case t => graft.io.LocalFrame.setIntegral(row, 0, t, keys(gi))
-      }
+      if (gi < g) v.setKey(row, 0, labelType, keys(gi))
       row.setInt(1, c - base(gi) + 1)
       row.setDouble(2, sums.mean(c, cnt(c), scale))
     })

@@ -72,7 +72,7 @@ object StreamSync {
       val fs = new org.apache.hadoop.fs.Path(targetPath)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val targetExisted =
-        fs.exists(new org.apache.hadoop.fs.Path(targetPath))
+        Sinks.recover(fs, new org.apache.hadoop.fs.Path(targetPath))
       // children decompose from the CACHED classified frame (it carries
       // every column of the deduped current), so each child write reuses
       // the cached hash+window work instead of replaying it per action —
@@ -88,7 +88,7 @@ object StreamSync {
         val cfs = new org.apache.hadoop.fs.Path(ch.targetPath)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
         require(!targetExisted ||
-            cfs.exists(new org.apache.hadoop.fs.Path(ch.targetPath)),
+            Sinks.recover(cfs, new org.apache.hadoop.fs.Path(ch.targetPath)),
           s"StreamSync: child table ${ch.targetPath} does not exist but " +
             s"the main target $targetPath already holds documents — a " +
             "micro-batch cannot bootstrap children for parents it never " +

@@ -240,7 +240,8 @@ object IncrementalSync {
       changes: DataFrame, children: Seq[ChildSync],
       hasChanges: Boolean = true): Map[String, ChildCounts] =
     graft.io.Concurrency.mapBounded(children) { ch =>
-      val exists = fsOf(spark, ch.targetPath).exists(new Path(ch.targetPath))
+      val exists = Sinks.recover(fsOf(spark, ch.targetPath),
+        new Path(ch.targetPath))
       childNameOf(ch.targetPath) -> (
         if (exists && !hasChanges) ChildCounts(0L, 0L)
         else {
@@ -649,6 +650,7 @@ object IncrementalSync {
   def readTarget(spark: SparkSession, path: String): DataFrame = {
     val fs = new Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Sinks.recover(fs, new Path(path))
     storedSchema(fs, path) match {
       case Some(sch) =>
         val (bucketed, _) = layoutOf(fs, path)
@@ -849,6 +851,7 @@ object IncrementalSync {
     val classified = classify(current, state, hashCol).cache()
     try {
       val result = metrics(classified)
+      Sinks.recover(fsOf(spark, targetPath), new Path(targetPath))
       Sinks.atomicOverwrite(spark, mergeTarget(
         Some(spark.read.parquet(targetPath)), source, classified,
         Some(deletedIds(classified)), hashCol), targetPath)

@@ -3,7 +3,7 @@ package graft
 import graft.io.EngineConfig
 import graft.sync.SyncResult
 import graft.validate.{ReportRenderer, Validator}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit, raise_error, when}
 
 /** S19/X3/O9 config source, S17 report sinks, S14/S15 catalog DDL, and the
   * driver-plan helpers (`DriverVectors`, `LocalFrame`). */
@@ -132,6 +132,35 @@ class IoSpec extends SparkSpec {
     }
     assert(Seq(Double.NaN, Double.PositiveInfinity, 1e300).map(quantize)
       .forall(_ == NoUnits))
+  }
+
+  test("DriverVectors.collect: keys, vectors and extra integral columns in " +
+      "one bounded read; units only when read") {
+    import graft.io.DriverVectors.{collect, NoUnits}
+    val df = Seq((3L, Seq(1.5, 2.5), 7, 70L), (1L, Seq(1e10, 0.0), 8, 80L))
+      .toDF("id", "vec", "a", "b")
+    val v = collect(df, "id", Some("vec"), 100, Seq("a", "b")).get
+    assert(v.keys.toSeq == Seq(3L, 1L) && v.start.toSeq == Seq(0, 2, 4))
+    assert(v.values.toSeq == Seq(1.5, 2.5, 1e10, 0.0))
+    assert(v.extra.map(_.toSeq).toSeq == Seq(Seq(7L, 8L), Seq(70L, 80L)))
+    // 1e10 has no long DECIMAL(27,9) form: only a reader of units sees it
+    assert(v.units.toSeq == Seq(1500000000L, 2500000000L, NoUnits, 0L))
+    // without a vector every row is empty; an extra costs one element
+    val codes = collect(df, "id", None, 4, Seq("a")).get
+    assert(codes.start.toSeq == Seq(0, 0, 0) && codes.extra(0).toSeq ==
+      Seq(7L, 8L))
+    assert(collect(df, "id", None, 4, Seq("a", "b")).isDefined)
+    assert(collect(df, "id", None, 3, Seq("a", "b")).isEmpty)
+    assert(collect(df, "id", Some("vec"), 6, Seq("a")).isDefined)
+    assert(collect(df, "id", Some("vec"), 5, Seq("a")).isEmpty)
+    // a null or non-integral extra, and a read that fails, are not mirrored
+    assert(collect(df.withColumn("a", lit(null).cast("int")), "id",
+      Some("vec"), 100, Seq("a")).isEmpty)
+    assert(collect(df.withColumn("a", col("a").cast("double")), "id",
+      Some("vec"), 100, Seq("a")).isEmpty)
+    assert(collect(df.withColumn("vec", when(col("id") === 1L,
+      raise_error(lit("boom"))).otherwise(col("vec"))), "id", Some("vec"),
+      100).isEmpty)
   }
 
   test("DriverVectors.Sums: exact across long wrap-arounds") {

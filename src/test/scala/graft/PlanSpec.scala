@@ -253,10 +253,24 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
   }
 
+  /** The plan of `ann_pq_topk`'s encode → ADC stack over `e` as it runs
+    * above the driver cap. The fixture fits under the cap, where the query
+    * answers from a local frame, so the Spark plans are built at
+    * `cap = 0`. */
+  private def sparkAdcPlan(e: org.apache.spark.sql.DataFrame): String = {
+    import graft.scale.Pq
+    import org.apache.spark.sql.functions.col
+    val cb = Pq.codebook(e, "vec_id", "embedding", m = 4, k = 4, iters = 2)
+    Pq.adcTopKCapped(e.filter(col("vec_id") < 5),
+        Pq.encodeCapped(e, cb, "vec_id", "embedding", 0), cb,
+        "vec_id", "embedding", 10, None, 0)
+      .orderBy("query_id", "rnk")
+      .queryExecution.executedPlan.toString
+  }
+
   test("PQ ADC search: broadcast LUT equi-join over the code table, " +
       "rank-limited before the exchange") {
-    val p = graft.queries.ScaleQueries.queries("ann_pq_topk")(spark, sfDir)
-      .queryExecution.executedPlan.toString
+    val p = sparkAdcPlan(Tables.load(spark, sfDir, "embeddings"))
     // the corpus-sized code table must join the tiny per-query LUT as a
     // broadcast hash join — never a shuffle or nested loop on the codes
     assert(p.contains("BroadcastHashJoin"), p)
@@ -517,8 +531,10 @@ class PlanSpec extends SparkSpec {
 
   test("OPQ top-k keeps the ann_pq_topk plan shape: broadcast LUT join, " +
       "top-k pruned before the per-query exchange") {
-    val p = graft.queries.ScaleQueries.queries("ann_opq_topk")(spark, sfDir)
-      .queryExecution.executedPlan.toString
+    val e = Tables.load(spark, sfDir, "embeddings")
+    val perm = graft.scale.Opq.permutation(e, "embedding", 4)
+    val p = sparkAdcPlan(e.select(e("vec_id"),
+      graft.scale.Opq.permute(e("embedding"), perm).as("embedding")))
     assert(p.contains("BroadcastHashJoin"), p)
     assert(!p.contains("CartesianProduct"), p)
     assert(p.contains("WindowGroupLimit"), p)

@@ -28,6 +28,10 @@ class PqSpec extends SparkSpec {
     assert(rows.map(_._2).distinct.sorted.toSeq == (1L to 4L))
   }
 
+  /** The probe's two plans: the driver plan below the cap, the Spark plan
+    * at `cap = 0`. */
+  private val caps = Seq(graft.io.DriverVectors.ElementCap, 0L)
+
   test("encode: one code per (id, subspace), codes in 1..k, and the " +
       "assignment is invariant to the input's physical layout") {
     val n = emb.count()
@@ -35,37 +39,71 @@ class PqSpec extends SparkSpec {
     assert(c.length == n * 4)
     assert(c.map(r => (r._1, r._2)).distinct.length == c.length)
     assert(c.forall(r => r._3 >= 1 && r._3 <= 4))
-    val reparted = Pq.encode(emb.repartition(7), cb, "vec_id", "embedding")
-      .as[(Long, Int, Long)].collect()
-    assert(c.toSet == reparted.toSet)
+    for (cap <- caps) {
+      val reparted = Pq.encodeCapped(emb.repartition(7), cb, "vec_id",
+        "embedding", cap).as[(Long, Int, Long)].collect()
+      assert(c.toSet == reparted.toSet, s"cap $cap")
+    }
   }
 
   test("adcTopK: k rows per query in (dist asc, id asc) order, " +
       "non-negative integer distances") {
-    val top = Pq.adcTopK(emb.filter(col("vec_id") < 3), codes, cb,
-      "vec_id", "embedding", k = 5)
-      .as[(Long, Int, Long, Long)].collect()
-    val byQ = top.groupBy(_._1)
-    assert(byQ.keySet == Set(0L, 1L, 2L))
-    byQ.foreach { case (_, g) =>
-      val sorted = g.sortBy(_._2)
-      assert(sorted.map(_._2).toSeq == (1 to 5))
-      assert(sorted.forall(_._4 >= 0))
-      // ordering: dist strictly governs, id breaks ties
-      sorted.sliding(2).foreach { case Array(a, b) =>
-        assert(a._4 < b._4 || (a._4 == b._4 && a._3 < b._3))
+    for (cap <- caps) {
+      val top = Pq.adcTopKCapped(emb.filter(col("vec_id") < 3), codes, cb,
+        "vec_id", "embedding", 5, None, cap)
+        .as[(Long, Int, Long, Long)].collect()
+      val byQ = top.groupBy(_._1)
+      assert(byQ.keySet == Set(0L, 1L, 2L))
+      byQ.foreach { case (_, g) =>
+        val sorted = g.sortBy(_._2)
+        assert(sorted.map(_._2).toSeq == (1 to 5))
+        assert(sorted.forall(_._4 >= 0))
+        // ordering: dist strictly governs, id breaks ties
+        sorted.sliding(2).foreach { case Array(a, b) =>
+          assert(a._4 < b._4 || (a._4 == b._4 && a._3 < b._3))
+        }
       }
     }
   }
 
   test("adcTopK: a candidate missing a subspace row fails loudly") {
     val corrupt = codes.filter(!(col("vec_id") === 7 && col("subspace") === 2))
-    val ex = intercept[Exception] {
-      Pq.adcTopK(emb.filter(col("vec_id") < 2), corrupt, cb,
-        "vec_id", "embedding", k = 5).collect()
+    for (cap <- caps) {
+      // the driver does not mirror a corrupt code table: the Spark plan
+      // raises when the action runs
+      val top = Pq.adcTopKCapped(emb.filter(col("vec_id") < 2), corrupt, cb,
+        "vec_id", "embedding", 5, None, cap)
+      val ex = intercept[Exception](top.collect())
+      assert(ex.getMessage.contains("adcTopK") ||
+        ex.getCause != null && ex.getCause.getMessage.contains("adcTopK"))
     }
-    assert(ex.getMessage.contains("adcTopK") ||
-      ex.getCause != null && ex.getCause.getMessage.contains("adcTopK"))
+  }
+
+  test("below the cap, encode → adcTopK on the fixture runs at most 4 jobs " +
+      "and returns local frames; at cap = 0 both keep the Spark plan") {
+    val e = emb // loaded outside the counted window
+    for (cell <- Seq(None, Some("cell"))) {
+      def probe(cap: Long) = {
+        var top: DataFrame = null
+        val jobs = jobsOf {
+          val c = Pq.encodeCapped(e, cb, "vec_id", "embedding", cap)
+          val cs = cell.fold(c)(_ =>
+            c.join(e.select(col("vec_id"), col("label").as("cell")),
+              Seq("vec_id")))
+          top = Pq.adcTopKCapped(e.filter(col("vec_id") < 3)
+              .withColumn("cell", col("label")), cs, cb, "vec_id",
+            "embedding", 5, cell, cap)
+          top.collect(): Unit
+        }
+        (top.isLocal, top.collect().toSet, jobs)
+      }
+      val (driverLocal, driverRows, driverJobs) = probe(caps.head)
+      val (sparkLocal, sparkRows, sparkJobs) = probe(0)
+      assert(driverLocal && !sparkLocal, s"cell $cell: plans not as capped")
+      assert(driverRows == sparkRows, s"cell $cell: rows differ")
+      assert(driverJobs <= 4, s"cell $cell: driver probe ran $driverJobs jobs")
+      assert(sparkJobs > driverJobs, s"cell $cell: Spark probe ran $sparkJobs")
+    }
   }
 
   test("ADC recall vs exact L2: every query finds at least one true " +
@@ -90,27 +128,29 @@ class PqSpec extends SparkSpec {
     val codesC = codes.join(
       emb.select(col("vec_id"), col("label").as("cell")), Seq("vec_id"))
     val q = withCell.filter(col("vec_id") < 3)
-    val ivfpq = Pq.adcTopK(q, codesC, cb, "vec_id", "embedding", k = 5,
-      cellCol = Some("cell"))
-    val qCells = q.select("vec_id", "cell").as[(Long, Long)].collect().toMap
-    val nCells = codesC.select(col("vec_id"), col("cell"))
-      .distinct().as[(Long, Long)].collect().toMap
-    val got = ivfpq.select("query_id", "neighbor_id", "rnk", "dist_nano")
-      .as[(Long, Long, Int, Long)].collect()
-    assert(got.nonEmpty)
-    got.foreach { case (qid, nid, _, _) =>
-      assert(nCells(nid) == qCells(qid),
-        s"neighbor $nid outside query $qid's cell")
-    }
-    // equivalence: unrestricted ADC over only the cell's codes
-    qCells.foreach { case (qid, cell) =>
-      val restricted = Pq.adcTopK(
-        withCell.filter(col("vec_id") === qid),
-        codesC.filter(col("cell") === cell).drop("cell"), cb,
-        "vec_id", "embedding", k = 5)
-        .select("neighbor_id", "rnk").as[(Long, Int)].collect().toSet
-      val mine = got.filter(_._1 == qid).map(r => (r._2, r._3)).toSet
-      assert(mine == restricted, s"query $qid: $mine != $restricted")
+    for (cap <- caps) {
+      val ivfpq = Pq.adcTopKCapped(q, codesC, cb, "vec_id", "embedding", 5,
+        Some("cell"), cap)
+      val qCells = q.select("vec_id", "cell").as[(Long, Long)].collect().toMap
+      val nCells = codesC.select(col("vec_id"), col("cell"))
+        .distinct().as[(Long, Long)].collect().toMap
+      val got = ivfpq.select("query_id", "neighbor_id", "rnk", "dist_nano")
+        .as[(Long, Long, Int, Long)].collect()
+      assert(got.nonEmpty)
+      got.foreach { case (qid, nid, _, _) =>
+        assert(nCells(nid) == qCells(qid),
+          s"neighbor $nid outside query $qid's cell")
+      }
+      // equivalence: unrestricted ADC over only the cell's codes
+      qCells.foreach { case (qid, cell) =>
+        val restricted = Pq.adcTopKCapped(
+          withCell.filter(col("vec_id") === qid),
+          codesC.filter(col("cell") === cell).drop("cell"), cb,
+          "vec_id", "embedding", 5, None, cap)
+          .select("neighbor_id", "rnk").as[(Long, Int)].collect().toSet
+        val mine = got.filter(_._1 == qid).map(r => (r._2, r._3)).toSet
+        assert(mine == restricted, s"cap $cap query $qid: $mine != $restricted")
+      }
     }
   }
 
@@ -587,6 +627,9 @@ class PqSpec extends SparkSpec {
       "infinite element" -> frame(base.updated(9,
         (10L, Some(vec(8).updated(3, Double.PositiveInfinity)
           .map(Option(_)))))),
+      // its DECIMAL(27,9) unscaled value is no long
+      "element outside the long range" -> frame(base.updated(9,
+        (10L, Some(vec(8).updated(3, 1e10).map(Option(_)))))),
       // ids 1, 2, 3, 3, 5, …: two rows tie for the third seed (k = 3)
       "tied k-th id" -> frame(base.updated(3, (3L, base(3)._2))),
       "m does not divide D" -> frame(base))

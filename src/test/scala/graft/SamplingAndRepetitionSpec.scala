@@ -638,6 +638,9 @@ class SamplingAndRepetitionSpec extends SparkSpec {
         (Some(1L), vec(4).map(_.updated(2, Some(Double.NaN)))))),
       "infinite element" -> frame(base.updated(4,
         (Some(1L), vec(4).map(_.updated(2, Some(Double.NegativeInfinity)))))),
+      // its DECIMAL(27,9) unscaled value is no long
+      "element outside the long range" -> frame(base.updated(4,
+        (Some(1L), vec(4).map(_.updated(2, Some(-1e10)))))),
       "double label" -> frame(base).withColumn("label",
         col("label").cast("double")))
     for ((what, df) <- routed) {
